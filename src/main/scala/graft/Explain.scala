@@ -29,6 +29,9 @@ object Explain {
       case None => SparkEntry.queries.toSeq.sortBy(_._1)
     }
     targets.foreach { case (n, fn) =>
+      // drain first: a late sub-execution of the previous target must
+      // not be printed under this one
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark)
       subs.clear()
       println(s"\n========== $n ==========")
       val df = fn(spark, sfDir)

@@ -7,17 +7,33 @@ import org.apache.spark.sql.SparkSession
   * `sbt "runMain graft.MicroBench [rounds] [query...]"` — defaults to
   * the entity_match/match_certitude twin pair from the r04 anomaly. */
 object MicroBench {
+  private val usage = "usage: graft.MicroBench [rounds] [ALL | query...]"
+
+  /** (rounds, query names) from the command line, or a usage error
+    * naming the arguments that are not registered queries. The first
+    * argument may be a round count or already a query name; "ALL"
+    * anywhere = one alternating pass over every registered query — the
+    * shape used to gauge the suite-sized codegen cache's metaspace
+    * footprint (printed after each round). */
+  private[graft] def parseArgs(args: Seq[String]): Either[String, (Int, Seq[String])] = {
+    val rounds = args.headOption.flatMap(_.toIntOption)
+    val rest = if (rounds.isDefined) args.drop(1) else args
+    val names = if (rest.contains("ALL")) SparkEntry.queries.keys.toSeq.sorted
+      else if (rest.nonEmpty) rest
+      else Seq("entity_match", "match_certitude")
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    if (unknown.nonEmpty) Left(s"unknown query: ${unknown.mkString(", ")}\n$usage")
+    else Right((rounds.getOrElse(4), names))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // first arg may be a round count or already a query name
-    val rounds = args.headOption.flatMap(_.toIntOption).getOrElse(4)
-    val rest = if (args.headOption.exists(_.toIntOption.isDefined)) args.drop(1) else args
-    // "ALL" = one alternating pass over every registered query — the
-    // shape used to gauge the suite-sized codegen cache's metaspace
-    // footprint (printed after each round)
-    val names = if (rest.toSeq == Seq("ALL")) SparkEntry.queries.keys.toSeq.sorted
-      else if (rest.nonEmpty) rest.toSeq
-      else Seq("entity_match", "match_certitude")
+    val (rounds, names) = parseArgs(args.toSeq) match {
+      case Right(parsed) => parsed
+      case Left(err) =>
+        System.err.println(err)
+        sys.exit(2)
+    }
     // GRAFT_CONF="k=v;k=v" passes extra SparkConf pairs for config A/B
     // experiments (core settings like spark.shuffle.compress must be set
     // before context creation, so a builder hook is the only way in).

@@ -47,26 +47,27 @@ object Probe {
       val fam = spark.range(nEdges)
         .select((col("id") - col("id") % 6).as("doc_a"), col("id").as("doc_b"))
         .filter(col("doc_a") =!= col("doc_b"))
-      val edges = fam.unionByName(fam.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-        .persist()
-      edges.count()
-      val (_, rounds) = t(scale)(graft.operators.Dedup.connectedComponents(edges))
+      val rounds = graft.plans.Scope { s =>
+        val edges = s.persist(
+          fam.unionByName(fam.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))))
+        edges.count()
+        t(scale)(graft.operators.Dedup.connectedComponents(edges))._2
+      }
       println(s"  rounds=$rounds")
-      edges.unpersist()
     }
     // --- connected components: deep-chain adversary (diameter = N —
     // the documented worst case for HashMin; rounds must equal ~N) ---
     val chainLen = 64L
     val chain = spark.range(chainLen - 1)
       .select(col("id").as("doc_a"), (col("id") + 1).as("doc_b"))
-    val chainEdges = chain.unionByName(
-        chain.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .persist()
-    chainEdges.count()
-    val (_, chainRounds) = t(s"cc deep chain (n=$chainLen)")(
-      graft.operators.Dedup.connectedComponents(chainEdges, maxRounds = 200))
+    val chainRounds = graft.plans.Scope { s =>
+      val chainEdges = s.persist(chain.unionByName(
+        chain.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))))
+      chainEdges.count()
+      t(s"cc deep chain (n=$chainLen)")(
+        graft.operators.Dedup.connectedComponents(chainEdges, maxRounds = 200))._2
+    }
     println(s"  rounds=$chainRounds (diameter-bound, as designed)")
-    chainEdges.unpersist()
     // --- pagerank: hash-mixed graph with a hub at 1× and 100× —
     // convergence rounds are set by damping+tol, not by size ---
     for ((scale, v, e) <- Seq(("pagerank 1x (60k edges)", 30000L, 60000L),
@@ -78,11 +79,11 @@ object Probe {
         .filter(col("u") =!= col("v"))
         .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
         .distinct()
-      val directed = graft.operators.Graph.prepareDirected(spark, raw)
-      val (_, rounds) = t(scale)(
-        graft.operators.Graph.graphPagerankConvergedOn(directed, maxRounds = 120))
+      val rounds = graft.plans.Scope { s =>
+        val directed = graft.operators.Graph.prepareDirected(spark, raw, s)
+        t(scale)(graft.operators.Graph.graphPagerankConvergedOn(directed, maxRounds = 120))._2
+      }
       println(s"  rounds=$rounds")
-      directed.unpersist()
     }
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.Similarity
+import graft.plans.Scope
 import graft.sources.Tables
 
 /** Approximate-nearest-neighbor search over the embeddings table.
@@ -237,22 +238,22 @@ object Ann {
     * the unrolled lattice costs the same at any corpus size, and only
     * the pool construction (one broadcast-query scoring pass + bounded
     * TopK) ever sees the full table. */
-  def mmrDiversify(spark: SparkSession, sfDir: String): DataFrame = {
+  def mmrDiversify(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
     val emb = Tables.embeddings(spark, sfDir)
-    val pool = spread(emb).crossJoin(broadcast(queriesOf(emb)))
+    // queries×20 — reused by every greedy stage
+    val pool = s.checkpoint(spread(emb).crossJoin(broadcast(queriesOf(emb)))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("rel", Similarity.cosine(col("q_emb"), col("embedding")))
       .select(col("q_id"), col("vec_id"), col("embedding"), col("rel"))
       .transform(graft.plans.TopK.perGroup(
-        Seq("q_id"), Seq("rel" -> false, "vec_id" -> true), MmrPool))
-      .localCheckpoint() // queries×20 — reused by every greedy stage
-    val ps = pool.select(col("q_id"), col("vec_id").as("a"), col("embedding").as("ea"))
+        Seq("q_id"), Seq("rel" -> false, "vec_id" -> true), MmrPool)))
+    // queries×380 — bounded by the query set
+    val ps = s.checkpoint(pool.select(col("q_id"), col("vec_id").as("a"), col("embedding").as("ea"))
       .join(pool.select(col("q_id"), col("vec_id").as("b"), col("embedding").as("eb")),
         Seq("q_id"))
       .filter(col("a") =!= col("b"))
       .select(col("q_id"), col("a"), col("b"),
-        Similarity.cosine(col("ea"), col("eb")).as("sim"))
-      .localCheckpoint() // queries×380 — bounded by the query set
+        Similarity.cosine(col("ea"), col("eb")).as("sim")))
     val cand = pool.select(col("q_id"), col("vec_id"), col("rel"))
     var sel = cand.filter(lit(false))
       .select(col("q_id"), col("vec_id"), col("rel"),
@@ -274,7 +275,7 @@ object Ann {
       // checkpoint per stage: the next argmax re-reads sel twice (the
       // anti-join and the pair expansion) and the unrolled lineage
       // would otherwise recompute the whole prefix each stage
-      sel = sel.unionByName(picked).localCheckpoint()
+      sel = s.checkpoint(sel.unionByName(picked))
     }
     sel.select(col("q_id"), col("pick"), col("vec_id"),
       round(col("rel"), 6).as("rel"),

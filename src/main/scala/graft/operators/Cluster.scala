@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.plans.Scope
 import graft.sources.Tables
 
 /** Embedding clustering — the topic-bucketing / semantic-dedup-prep
@@ -154,12 +155,13 @@ object Cluster {
     * passes. */
   /** The two refined assignments side by side (vec_id, ca, cb) —
     * package-visible so the stability spec can replay the
-    * contingency/ARI arithmetic against it. */
-  private[graft] def stabilityAssignments(spark: SparkSession, sfDir: String): DataFrame = {
+    * contingency/ARI arithmetic against it. A checkpoint in the
+    * caller's scope. */
+  private[graft] def stabilityAssignments(
+      spark: SparkSession, sfDir: String, s: Scope): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
-    val vecs = emb.select(col("vec_id"), quantize(col("embedding")).as("q"))
-      .withColumn("qnorm", qdot(col("q"), col("q")))
-      .persist()
+    val vecs = s.persist(emb.select(col("vec_id"), quantize(col("embedding")).as("q"))
+      .withColumn("qnorm", qdot(col("q"), col("q"))))
     val centsA0 = vecs.filter(col("vec_id") < SeedK)
       .select(col("vec_id").as("c_id"), col("q").as("cq"), col("qnorm").as("cnorm"))
     val aA = assign(vecs, refineOnce(centsA0, assign(vecs, centsA0)))
@@ -173,22 +175,19 @@ object Cluster {
       .select(col("vec_id").as("c_id"), col("q").as("cq"), col("qnorm").as("cnorm"))
     val aB = assign(vecs, refineOnce(centsB0, assign(vecs, centsB0)))
       .select(col("vec_id"), col("c_id").as("cb"))
-    val out = aA.join(aB, Seq("vec_id")).localCheckpoint()
-    vecs.unpersist()
-    out
+    s.checkpoint(aA.join(aB, Seq("vec_id")))
   }
 
-  def clusterStability(spark: SparkSession, sfDir: String): DataFrame = {
-    val ct = stabilityAssignments(spark, sfDir)
-      .groupBy(col("ca"), col("cb")).agg(count(lit(1)).as("nij"))
-      .persist()
+  def clusterStability(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
+    val ct = s.persist(stabilityAssignments(spark, sfDir, s)
+      .groupBy(col("ca"), col("cb")).agg(count(lit(1)).as("nij")))
     val cells = ct.agg(sum(expr("(nij * (nij - 1)) div 2")).as("s"),
       sum(col("nij")).as("n"))
     val rowm = ct.groupBy(col("ca")).agg(sum(col("nij")).as("ai"))
       .agg(sum(expr("(ai * (ai - 1)) div 2")).as("a"), count(lit(1)).as("k_a"))
     val colm = ct.groupBy(col("cb")).agg(sum(col("nij")).as("bi"))
       .agg(sum(expr("(bi * (bi - 1)) div 2")).as("b"), count(lit(1)).as("k_b"))
-    val out = cells.crossJoin(broadcast(rowm)).crossJoin(broadcast(colm))
+    cells.crossJoin(broadcast(rowm)).crossJoin(broadcast(colm))
       .withColumn("t", expr("(n * (n - 1)) div 2"))
       .withColumn("td", col("t").cast("double"))
       .withColumn("sd", col("s").cast("double"))
@@ -204,8 +203,6 @@ object Cluster {
           .otherwise(round((col("sd") - col("exp_idx"))
             / ((col("ad") + col("bd")) / 2.0 - col("exp_idx")), 6)).as("ari"))
       .localCheckpoint()
-    ct.unpersist()
-    out
   }
 
   /** CLUSTERING QUALITY METRICS for the refined assignment — the eval

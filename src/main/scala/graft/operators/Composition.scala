@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.expressions.CrossHash
 import graft.functions.Similarity
+import graft.plans.Scope
 import graft.sources.Tables
 
 /** Dataset-composition operators that sit at the very end of a
@@ -164,15 +165,14 @@ object Composition {
     * side, and the mix aggregate, and its own two-phase rank must not
     * be recomputed per consumer (see the range-rank resample trap).
     * All metrics end in one IEEE divide from exact integer counts. */
-  def orderAutocorr(spark: SparkSession, sfDir: String): DataFrame = {
-    val ord = trainOrder(spark, sfDir)
-      .select(col("shard"), col("pos"), col("source"))
-      .persist()
+  def orderAutocorr(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
+    val ord = s.persist(trainOrder(spark, sfDir)
+      .select(col("shard"), col("pos"), col("source")))
     val mix = ord.groupBy(col("source")).agg(count(lit(1)).as("n"))
       .agg(sum(col("n") * col("n")).as("sum_nsq"), sum(col("n")).as("n_inst"))
     val probe = ord.withColumn("lag",
       explode(array(AutocorrLags.map(lit(_)): _*)))
-    val out = probe.as("a").join(ord.as("b"),
+    probe.as("a").join(ord.as("b"),
         col("a.shard") === col("b.shard") &&
           col("b.pos") === col("a.pos") - col("a.lag"))
       .groupBy(col("a.lag").as("lag"))
@@ -185,12 +185,9 @@ object Composition {
         round(col("sum_nsq").cast("double") /
           (col("n_inst").cast("double") * col("n_inst").cast("double")), 6)
           .as("expected_rate"))
-      // |lags|-row result: materialize it eagerly so the big cached
-      // order table can be released NOW instead of leaking for the
-      // session lifetime (the graphHits pattern)
+      // |lags|-row result: materialize it eagerly so the scope can
+      // release the big cached order table (the graphHits pattern)
       .localCheckpoint()
-    ord.unpersist()
-    out
   }
 
   /** Number of cross-validation folds. */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.Similarity
+import graft.plans.Scope
 import graft.sources.Tables
 
 /** Deduplication operators for a training-data pipeline, each bounding
@@ -69,9 +70,16 @@ object Dedup {
     * the two xxhash64 draws are genuinely independent.) One shuffle each: frequency agg, per-doc rank, prefix
     * self-join (bare ids through the distinct), then the two payload
     * rejoins for the O(n+m) sorted-jaccard verify; an implied
-    * size-ratio prune (min ≥ max/2) runs before it. */
+    * size-ratio prune (min ≥ max/2) runs before it.
+    *
+    * BUILDING the result runs Spark jobs: the clone-ratio probe (one
+    * aggregate over the shingled corpus, see [[ngramPairsOver]]) picks
+    * the verify route while the DataFrame is constructed, so every
+    * call pays that job even if the result is never read. The result
+    * stays lazy; the shingled corpus it reads several times is held as
+    * its own checkpoint storage, never as a cache entry. */
   def dedupNgram(spark: SparkSession, sfDir: String): DataFrame =
-    ngramPairsOver(Tables.documents(spark, sfDir))
+    Scope(s => ngramPairsOver(Tables.documents(spark, sfDir), s))
 
   /** Clone-ratio cutoff (rows per distinct shingle-set key) above
     * which the n-gram verify stage takes the distinct-content
@@ -118,10 +126,15 @@ object Dedup {
     * construction and the probe job would be wasted); None probes the
     * clone ratio and decides. The route is a COST choice only — both
     * branches emit identical rows — so a pinned route can never
-    * change a result, only its price. */
-  private[graft] def ngramPairsOver(docs: DataFrame,
+    * change a result, only its price.
+    *
+    * The tables read more than once are lazy checkpoints in the
+    * caller's scope: a lazy result keeps them as its own storage, an
+    * eagerly materialized one lets the scope free them. */
+  private[graft] def ngramPairsOver(docs: DataFrame, s: Scope,
       repVerify: Option[Boolean] = None): DataFrame = {
-    val base = shingled(docs)
+    // reused by the prefix build, the key rejoins, and the representative side
+    val base = s.checkpoint(shingled(docs)
       .withColumn("sh", array_sort(transform(col("shingles"), s => Similarity.md5Mod(s))))
       .withColumn("n", size(col("sh")))
       // salt FIRST: xxhash64 folds arguments into the running hash, so
@@ -131,8 +144,7 @@ object Dedup {
       // seed and is independent of k1 (~2^-128 joint collision).
       .withColumn("sk", struct(xxhash64(col("sh")).as("k1"),
         xxhash64(lit(0x9e3779b97f4a7c15L), col("sh")).as("k2")))
-      .select(col("doc_id"), col("lang"), col("n"), col("sk"), col("sh"))
-      .persist() // reused by the prefix build, the key rejoins, and the representative side
+      .select(col("doc_id"), col("lang"), col("n"), col("sk"), col("sh")), eager = false)
     val u = base.select(col("doc_id"), col("lang"), col("n"), col("sk"),
       explode(col("sh")).as("h"))
     val freq = u.groupBy(col("h")).agg(count(lit(1)).as("f"))
@@ -149,10 +161,7 @@ object Dedup {
     // keyed pairs; the size-ratio prune runs BEFORE the distinct so the
     // pair-dedup exchange only carries survivors. distinct over
     // (doc_a, doc_b, sk_a, sk_b) equals distinct over (doc_a, doc_b):
-    // sk is a function of the doc id. Persisted: feeds BOTH the
-    // distinct-content-pair
-    // build and the final fan-back join — without the pin the whole
-    // prefix self-join + distinct subtree would execute twice.
+    // sk is a function of the doc id.
     val keyed = pfx
       .select(col("doc_id").as("doc_a"), col("lang"), col("h"),
         col("n").as("n_a"), col("sk").as("sk_a"))
@@ -163,14 +172,13 @@ object Dedup {
         least(col("n_a"), col("n_b")) * 2 >= greatest(col("n_a"), col("n_b")))
       .select(col("doc_a"), col("doc_b"), col("sk_a"), col("sk_b"))
       .distinct()
-      .persist()
     // ADAPTIVE VERIFY (the r14 regression fix): the distinct-content
     // rep path pays a corpus-array dropDuplicates(sk) shuffle, a pair
     // distinct, and a fan-back join — a trade that only wins when
     // clone multiplicity is high (pairs per content pair shrink by the
     // multiplicity SQUARED; the sf10 spill case). On a clone-light
     // corpus it is pure overhead over verifying each pair against its
-    // own arrays. One aggregate over the (persisted) base measures the
+    // own arrays. One aggregate over the (checkpointed) base measures the
     // clone ratio — rows per distinct shingle-set key — and picks the
     // shape; ±2% HLL error around the 1.5 cutoff only ever flips
     // near-break-even corpora where both shapes cost the same. Both
@@ -183,15 +191,20 @@ object Dedup {
         CloneRepVerifyRatio
     }
     if (useRep) {
-      // exact Jaccard once per distinct content pair, on representative arrays
+      // exact Jaccard once per distinct content pair, on representative
+      // arrays. keyed is pinned on this route only: it feeds BOTH the
+      // distinct-content-pair build and the fan-back join — without the
+      // pin the whole prefix self-join + distinct subtree would execute
+      // twice. The per-pair route below reads it once.
+      val pinned = s.checkpoint(keyed, eager = false)
       val reps = base.select(col("sk"), col("sh")).dropDuplicates("sk")
-      val verified = keyed.select(col("sk_a"), col("sk_b")).distinct()
+      val verified = pinned.select(col("sk_a"), col("sk_b")).distinct()
         .join(reps.select(col("sk").as("sk_a"), col("sh").as("sh_a")), Seq("sk_a"))
         .join(reps.select(col("sk").as("sk_b"), col("sh").as("sh_b")), Seq("sk_b"))
         .withColumn("jaccard", Similarity.sortedJaccard(col("sh_a"), col("sh_b")))
         .filter(col("jaccard") >= 0.5)
         .select(col("sk_a"), col("sk_b"), col("jaccard"))
-      keyed.join(verified, Seq("sk_a", "sk_b"))
+      pinned.join(verified, Seq("sk_a", "sk_b"))
         .select(col("doc_a"), col("doc_b"), col("jaccard"))
     } else {
       // clone-light: one exact Jaccard per pair, arrays attached by id
@@ -235,20 +248,20 @@ object Dedup {
     * is the cheap side of that trade). Then the [[ngramPairsOver]]
     * pipeline on the (strictly smaller) survivor set, then two
     * survivor-count-sized multiplicity joins. */
-  def dedupNgramSurvivor(spark: SparkSession, sfDir: String): DataFrame = {
+  def dedupNgramSurvivor(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
     val docs = Tables.documents(spark, sfDir)
     val fams = docs
       .select(md5(col("text")).as("text_hash"), col("doc_id"))
       .groupBy(col("text_hash"))
       .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("group_size"))
       .select(col("doc_id"), col("group_size"))
-    val survivors = docs.join(fams, Seq("doc_id"))
-      .select(col("doc_id"), col("lang"), col("text"), col("group_size"))
-      .persist() // feeds the pair pipeline and both multiplicity joins
+    // feeds the pair pipeline and both multiplicity joins
+    val survivors = s.persist(docs.join(fams, Seq("doc_id"))
+      .select(col("doc_id"), col("lang"), col("text"), col("group_size")))
     val mult = survivors.select(col("doc_id"), col("group_size"))
     // survivors are text-distinct by construction → sk multiplicity ~1
     // → pin the per-pair verify route, skipping the clone-ratio probe
-    val out = ngramPairsOver(survivors.select(col("doc_id"), col("lang"), col("text")),
+    ngramPairsOver(survivors.select(col("doc_id"), col("lang"), col("text")), s,
         repVerify = Some(false))
       .join(mult.select(col("doc_id").as("doc_a"), col("group_size").as("m_a")),
         Seq("doc_a"))
@@ -257,8 +270,6 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("jaccard"),
         col("m_a"), col("m_b"), (col("m_a") * col("m_b")).as("expanded_pairs"))
       .localCheckpoint()
-    survivors.unpersist()
-    out
   }
 
   /** MinHash+LSH near-dup candidates: 16-hash signature, 8 bands × 2
@@ -294,29 +305,26 @@ object Dedup {
           java.nio.file.Files.walk(d).iterator().asScala.toSeq.reverse
             .foreach(p => java.nio.file.Files.deleteIfExists(p))
         }
-        val (pairs, sigCache) = minhashPairsWithCache(spark, sfDir)
-        pairs.write.mode("overwrite").parquet(d.toString)
-        sigCache.unpersist()
+        Scope(s => deriveMinhashPairs(spark, sfDir, s)
+          .write.mode("overwrite").parquet(d.toString))
         d.toString
       })
     spark.read.parquet(dir)
   }
 
-  /** Internal form that also returns the persisted signature table, so
-    * an eagerly-materializing caller (dupClusters' iterative loop) can
-    * unpersist it once its own checkpoint holds the pairs — otherwise
-    * the cache outlives the query in a long-running session. */
-  private[operators] def minhashPairsWithCache(
-      spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
+  /** The verified minhash pair derivation. Its signature table is
+    * persisted in the caller's scope, so a caller must materialize the
+    * pairs before its scope ends. */
+  private def deriveMinhashPairs(
+      spark: SparkSession, sfDir: String, s: Scope): DataFrame = {
     val bands = 8
     val rows = 2
-    val docs = shingled(Tables.documents(spark, sfDir))
+    // reused by the banding explode AND both verify joins: without
+    // the persist the shingle+signature subtree recomputes 3x
+    val docs = s.persist(shingled(Tables.documents(spark, sfDir))
       .withColumn("sh", array_sort(expr("transform(shingles, s -> xxhash64(s))")))
       .withColumn("sig", Similarity.minhashSig(col("shingles"), bands * rows))
-      .select(col("doc_id"), col("sh"), col("sig"))
-      // reused by the banding explode AND both verify joins: without
-      // the persist the shingle+signature subtree recomputes 3x
-      .persist()
+      .select(col("doc_id"), col("sh"), col("sig")))
     // the band key is the slice VALUES (comma-joined), not a rehash:
     // bucket equality is then exactly signature-slice equality, which
     // the DuckDB oracle reproduces (a murmur rehash would add its own
@@ -334,13 +342,12 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"))
       .distinct()
     // equi-joins on the id keys; AQE broadcasts when the side is small
-    val pairs = cand
+    cand
       .join(docs.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
       .join(docs.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
       .withColumn("jaccard", Similarity.sortedJaccard(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= 0.5)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
-    (pairs, docs)
   }
 
   /** Rows-per-band configs swept by minhashBandTune (bands = 16/r).
@@ -368,12 +375,12 @@ object Dedup {
     * Scale shape: identical to dedupMinhash plus a constant explode
     * factor; nothing grows faster than the loosest config's candidate
     * set. */
-  def minhashBandTune(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = shingled(Tables.documents(spark, sfDir))
+  def minhashBandTune(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
+    // reused by the banding explode and both verify joins
+    val docs = s.persist(shingled(Tables.documents(spark, sfDir))
       .withColumn("sh", array_sort(expr("transform(shingles, s -> xxhash64(s))")))
       .withColumn("sig", Similarity.minhashSig(col("shingles"), 16))
-      .select(col("doc_id"), col("sh"), col("sig"))
-      .persist() // reused by the banding explode and both verify joins
+      .select(col("doc_id"), col("sh"), col("sig")))
     val rs = BandTuneRows.mkString("array(", ",", ")")
     val banded = docs.select(col("doc_id"), explode(expr(
         s"""flatten(transform($rs, r ->
@@ -409,9 +416,9 @@ object Dedup {
             / col("n_candidates").cast("double"), 6)).as("precision"),
         round(lit(1.0) - pow(lit(1.0) - pow(lit(0.5), col("r")),
           lit(16.0) / col("r")), 6).as("p_cand_at_tau"))
-      .localCheckpoint()
-    docs.unpersist()
-    out
+    // one row per swept config: the driver holds them (metadata, not
+    // data) and they re-enter verbatim, so the result owns no storage
+    spark.createDataFrame(java.util.Arrays.asList(out.collect(): _*), out.schema)
   }
 
   /** Incremental-batch fraction: 1-in-10 docs by md5 draw. */
@@ -434,8 +441,8 @@ object Dedup {
     * the corpus side's signatures are PRECOMPUTED and only the batch
     * re-hashes — the plan here recomputes both sides because the gate
     * has no state to carry. */
-  def dedupIncremental(spark: SparkSession, sfDir: String): DataFrame = {
-    val (pairs, sigCache) = minhashPairsWithCache(spark, sfDir)
+  def dedupIncremental(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
+    val pairs = deriveMinhashPairs(spark, sfDir, s)
     val flags = Tables.documents(spark, sfDir)
       .select(col("doc_id"), md5(col("text")).as("h"),
         (pmod(Similarity.md5Mod(concat(lit("inc-"), col("doc_id"))),
@@ -453,7 +460,7 @@ object Dedup {
       .select(when(col("ba"), col("doc_a")).otherwise(col("doc_b")).as("doc_id"),
         col("jaccard"))
       .groupBy(col("doc_id")).agg(max(col("jaccard")).as("near_jaccard"))
-    val out = batch.select(col("doc_id"))
+    batch.select(col("doc_id"))
       .join(exactDup, Seq("doc_id"), "left")
       .join(near, Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -462,8 +469,6 @@ object Dedup {
         (coalesce(col("dup_exact"), lit(false)) || col("near_jaccard").isNotNull)
           .as("is_dup"))
       .localCheckpoint()
-    sigCache.unpersist()
-    out
   }
 
   /** SimHash near-dup pairs: 64-bit fingerprint, blocked on any equal
@@ -530,15 +535,13 @@ object Dedup {
     * localCheckpoint truncates the growing lineage each round; the
     * convergence probe is a count() action (an aggregate, not a
     * driver-side data collection). */
-  def dupClusters(spark: SparkSession, sfDir: String): DataFrame = {
+  def dupClusters(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
     val pairs = minhashPairs(spark, sfDir).select(col("doc_a"), col("doc_b"))
-    val edges = pairs.unionByName(
-        pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .persist()
+    val edges = s.persist(pairs.unionByName(
+        pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))))
     // eager: the propagation rounds iterate on the cached edges
     edges.count()
     val (labels, _) = connectedComponents(edges)
-    edges.unpersist()
     val sizes = labels.groupBy(col("lab")).agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, Seq("lab"))
       .select(col("id").as("doc_id"), col("lab").as("cluster_id"), col("cluster_size"))
@@ -792,10 +795,9 @@ object Dedup {
     * driver-side data collection). Returns (id, lab) plus the number
     * of rounds executed — rounds is the cost driver at scale, so the
     * probe asserts on it directly. */
-  def connectedComponents(edges: DataFrame, maxRounds: Int = 25): (DataFrame, Int) = {
-    var labels = edges.select(col("doc_a").as("id")).distinct()
-      .withColumn("lab", col("id"))
-      .localCheckpoint()
+  def connectedComponents(edges: DataFrame, maxRounds: Int = 25): (DataFrame, Int) = Scope { s =>
+    var labels = s.checkpoint(edges.select(col("doc_a").as("id")).distinct()
+      .withColumn("lab", col("id")))
     var changed = 1L
     var rounds = 0
     while (changed > 0 && rounds < maxRounds) {
@@ -807,17 +809,16 @@ object Dedup {
       // checkpoint (eager=false) and probe convergence — the former
       // shape paid an eager-checkpoint job plus a next⋈labels
       // comparison join per round
-      val next = labels.select(col("id"), col("lab"), col("lab").as("pl"))
+      val next = s.checkpoint(labels.select(col("id"), col("lab"), col("lab").as("pl"))
         .unionByName(neighborMin.select(col("id"), col("lab"),
           lit(Long.MaxValue).as("pl")))
         .groupBy(col("id"))
-        .agg(min(col("lab")).as("lab"), min(col("pl")).as("prev"))
-        .localCheckpoint(eager = false)
+        .agg(min(col("lab")).as("lab"), min(col("pl")).as("prev")), eager = false)
       changed = next.filter(col("lab") =!= col("prev")).count()
       // the superseded round's checkpoint blocks are freed NOW, not at
-      // some future GC — a long loop otherwise stacks one vertex-sized
+      // scope end — a long loop otherwise stacks one vertex-sized
       // block set per round in the block manager
-      graft.plans.Checkpoints.free(labels)
+      s.free(labels)
       labels = next
       rounds += 1
     }
@@ -1003,7 +1004,7 @@ object Dedup {
     * grams (the bulk of the rare-gram space the cap keeps) feed the
     * denominator census but never the self-join — they cannot
     * produce a pair. */
-  def containmentDup(spark: SparkSession, sfDir: String): DataFrame = {
+  def containmentDup(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
     // per-doc distinct grams dedupe ROW-LOCALLY (array_distinct over
     // the hashed gram array) — the equivalent dropDuplicates(doc, h)
     // costs a full-corpus shuffle for a set that is per-doc by
@@ -1028,10 +1029,9 @@ object Dedup {
     val gwin = grams
       .withColumn("df", count(lit(1)).over(Window.partitionBy(col("h"))))
       .crossJoin(broadcast(nDocs))
-    val gc = gwin
+    val gc = s.persist(gwin
       .filter(col("df") <= greatest(lit(ContainDfCap.toLong), expr("n_docs div 8")))
-      .select(col("doc_id"), col("h"), col("df"))
-      .persist()
+      .select(col("doc_id"), col("h"), col("df")))
     gc.count() // materialize once: feeds sizes, both join sides
     val nsz = gc.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     // the self-join only ever matches grams held by ≥2 docs — df = 1
@@ -1046,15 +1046,13 @@ object Dedup {
       .filter(col("src_id") =!= col("dst_id"))
       .groupBy(col("src_id"), col("dst_id"))
       .agg(count(lit(1)).as("n_shared"))
-    val out = inter
+    inter
       .join(nsz.select(col("doc_id").as("src_id"), col("n").as("n_src_grams")),
         Seq("src_id"))
       .filter(col("n_shared") * ContainDen >= col("n_src_grams") * ContainNum)
       .select(col("src_id"), col("dst_id"), col("n_src_grams"), col("n_shared"),
         (col("n_shared").cast("double") / col("n_src_grams")).as("containment"))
       .localCheckpoint()
-    gc.unpersist()
-    out
   }
 
   /** Df-cap FLOOR for cosine term pairs; effective cap is
@@ -1078,7 +1076,7 @@ object Dedup {
     * Scale shape: one (doc, term) count shuffle, one df aggregate, the
     * capped self-join, one pair-key reduce — the containment_dup plan
     * with weights. */
-  def docCosinePairs(spark: SparkSession, sfDir: String): DataFrame = {
+  def docCosinePairs(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
     // per-doc TFs from the shared census warehouse
     val tf = TermCensus.docTermTf(spark, sfDir)
       .select(col("doc_id"), col("t"), col("tf"))
@@ -1086,7 +1084,7 @@ object Dedup {
     val rare = tf.groupBy(col("t")).agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(nDocs))
       .filter(col("df") <= greatest(lit(CosDfCap.toLong), expr("n_docs div 8")))
-    val gc = tf.join(rare.select(col("t")), Seq("t")).persist()
+    val gc = s.persist(tf.join(rare.select(col("t")), Seq("t")))
     gc.count() // materialize once: feeds norms and both join sides
     val norms = gc.groupBy(col("doc_id"))
       .agg(sum(col("tf") * col("tf")).as("n2"))
@@ -1096,7 +1094,7 @@ object Dedup {
       .filter(col("src_id") < col("dst_id"))
       .groupBy(col("src_id"), col("dst_id"))
       .agg(sum(col("tfa") * col("tfb")).as("dot"))
-    val out = dots
+    dots
       .join(norms.select(col("doc_id").as("src_id"), col("n2").as("na")), Seq("src_id"))
       .join(norms.select(col("doc_id").as("dst_id"), col("n2").as("nb")), Seq("dst_id"))
       .filter(lit(4L) * col("dot") * col("dot") >= col("na") * col("nb"))
@@ -1105,7 +1103,5 @@ object Dedup {
           (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))), 6)
           .as("cosine"))
       .localCheckpoint()
-    gc.unpersist()
-    out
   }
 }

@@ -444,10 +444,11 @@ object EntityMatch {
     * all on ≤ 2·SnWindow·n_partitions rows. The old shape ranked the
     * FULL table (window + offset join) and then shuffled a SnWindow×
     * exploded probe table into a rank equi-join — three data-sized
-    * exchanges this shape never pays. The persist + eager count pins
-    * one set of sampled range boundaries for both cache readers (the
+    * exchanges this shape never pays. An eager checkpoint pins one
+    * set of sampled range boundaries for both readers (the
     * vocabGrowth rule; the interior and edge passes must see the SAME
-    * physical layout or straddling pairs are lost/duplicated). */
+    * physical layout or straddling pairs are lost/duplicated); the
+    * lazy result reads it, so it is the result's own storage. */
   private def snPairs(spark: SparkSession, sfDir: String): DataFrame = {
     val session = spark
     import session.implicits._
@@ -460,8 +461,7 @@ object EntityMatch {
     val sorted = recs.repartitionByRange(n, col("key"), col("rec_id"))
       .sortWithinPartitions(col("key"), col("rec_id"))
       .select(col("rec_id"), col("key")).as[(Long, String)]
-      .persist()
-    sorted.count()
+      .localCheckpoint()
     val interior = sorted.mapPartitions { it =>
       val buf = new scala.collection.mutable.ArrayDeque[(Long, String)]()
       it.flatMap { case (id, key) =>

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.plans.Scope
 
 /** Exact interpolated percentiles, DISTRIBUTED.
   *
@@ -208,7 +209,7 @@ object ExactQuantile {
     * n (the GK slack argument needs n ≥ acc). */
   private[graft] def bracketPercentilesMulti(
       df: DataFrame, cols: Seq[String], probes: Seq[Double],
-      acc: Int = -1, knownRowsUpper: Long = -1L): DataFrame = {
+      acc: Int = -1, knownRowsUpper: Long = -1L): DataFrame = Scope { s =>
     val accEff = if (acc > 0) acc else accFor(
       if (knownRowsUpper >= 0L) knownRowsUpper
       // free plan-statistics estimate at ~16 B/row fact width; acc
@@ -226,7 +227,7 @@ object ExactQuantile {
     // re-decoding the source — at cluster scale MEMORY_AND_DISK spill
     // to executor-local disk still beats a second remote parquet read
     // of the same bytes; released as soon as the result is pinned
-    val proj = df.select(cols.map(c => col(c).cast("double").as(c)): _*).persist()
+    val proj = s.persist(df.select(cols.map(c => col(c).cast("double").as(c)): _*))
     // PASS 1: exact counts + GK summaries, one scan — and the k-row
     // result COLLECTS to the driver (k columns × 2m doubles: metadata,
     // not data). The former shape pinned it with a localCheckpoint and
@@ -278,14 +279,14 @@ object ExactQuantile {
     val colName = cols.zipWithIndex.tail.foldLeft(
       when(col("ci") === 0, lit(cols.head))) { case (acc, (c, i)) =>
       acc.when(col("ci") === i, lit(c)) }
-    val census = proj
+    // two readers below; lazy persist shares one compute
+    val census = s.persist(proj
       .select(perCol: _*)
       .select(explode(array(cols.indices.map(i => col(s"__graft_s_$i")): _*)).as("s"))
       .filter(col("s").isNotNull)
       .groupBy(col("s.ci").as("ci"), col("s.seg").as("seg"), col("s.hv").as("hv"))
       .agg(count(lit(1)).as("c"))
-      .select(colName.as("k"), col("seg"), col("hv"), col("c"))
-      .persist() // two readers below; lazy persist shares one compute
+      .select(colName.as("k"), col("seg"), col("hv"), col("c")))
     // exclusive segment prefixes (≤ 2m+1 segments per column)
     val segTot = census.groupBy(col("k"), col("seg")).agg(sum(col("c")).as("segc"))
       .withColumn("soff", coalesce(sum(col("segc")).over(
@@ -351,12 +352,8 @@ object ExactQuantile {
     // 32-task checkpoint scan per reference, and the caches can be
     // released immediately (the same reason the former shape
     // checkpointed). Rows re-enter verbatim — bit-exact.
-    val outRows = out.collect()
-    val outDf = df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(outRows: _*), out.schema)
-    census.unpersist()
-    proj.unpersist()
-    outDf
+    df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(out.collect(): _*), out.schema)
   }
 
   /** The per-value-count census + two-phase range-rank pipeline the
@@ -365,7 +362,7 @@ object ExactQuantile {
     * on adversarial distributions). Shuffles the full distinct-value
     * census; correct at any scale but census-sized in transit. */
   private[graft] def censusPercentilesMulti(
-      df: DataFrame, cols: Seq[String], probes: Seq[Double]): DataFrame = {
+      df: DataFrame, cols: Seq[String], probes: Seq[Double]): DataFrame = Scope { s =>
     val spark = df.sparkSession
     val n = spark.sessionState.conf.numShufflePartitions
     // one scan: (column, value) pairs via a generator, then the
@@ -377,13 +374,10 @@ object ExactQuantile {
     // samples its child plan in a separate pass, which would otherwise
     // re-execute the full scan+explode+aggregate a second time — the
     // sample then reads the cached census (distinct-value-sized)
-    val cnt = kv.groupBy(col("k"), col("v")).agg(count(lit(1)).as("c"))
-      .persist()
-    val parted = cnt.repartitionByRange(n, col("k"), col("v"))
-      .withColumn("pid", spark_partition_id())
-      .persist()
+    val cnt = s.persist(kv.groupBy(col("k"), col("v")).agg(count(lit(1)).as("c")))
+    val parted = s.persist(cnt.repartitionByRange(n, col("k"), col("v"))
+      .withColumn("pid", spark_partition_id()))
     parted.count()
-    cnt.unpersist()
     // exclusive prefix per column: in-partition running sum + per-
     // (column, partition) offsets (a column may span partitions and a
     // partition may hold several columns — both handled by keying the
@@ -418,13 +412,11 @@ object ExactQuantile {
         when(col("flo") === col("fhi"), col("lv"))
           .otherwise(col("lv") * (col("fhi").cast("double") - col("pos")) +
             col("hv") * (col("pos") - col("flo").cast("double"))))
-    val out = perProbe
+    perProbe
       .groupBy(col("k").as("column_name"))
       .agg(sort_array(collect_list(struct(col("idx"), col("q")))).as("s"))
       .select(col("column_name"),
         transform(col("s"), x => x.getField("q")).as("qs"))
       .localCheckpoint()
-    parted.unpersist()
-    out
   }
 }

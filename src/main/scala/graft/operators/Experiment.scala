@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.Similarity
+import graft.plans.Scope
 import graft.sources.Tables
 
 /** Experimentation & monitoring analytics: A/B test evaluation,
@@ -396,20 +397,19 @@ object Experiment {
     * the built-in fast lane anyway). The persisted-user count doubles
     * as the dispatch bound, so the quartiles add no probe jobs; the
     * three one-row results compose into one broadcast bounds row. */
-  def eventsRfm(spark: SparkSession, sfDir: String): DataFrame = {
+  def eventsRfm(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
     val q = Seq(0.25, 0.75)
     // persisted: the buyer aggregate feeds the end-day scalar, the
     // three quartile passes, and the scored output — without the cache
     // each subtree would re-scan the event stream (5× at corpus scale)
-    val users = Tables.events(spark, sfDir)
+    val users = s.persist(Tables.events(spark, sfDir)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), expr("unix_micros(ts) div 86400000000").as("day"),
         (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"))
       .groupBy(col("user_id"))
       .agg(max(col("day")).as("last_day"),
         count(lit(1)).as("frequency"),
-        sum(col("cents")).as("cents"))
-      .persist()
+        sum(col("cents")).as("cents")))
     val nUsers = users.count() // pins the cache AND bounds the dispatch
     val endDay = users.agg(max(col("last_day")).as("end_day"))
     val withR = users
@@ -424,7 +424,7 @@ object Experiment {
       .crossJoin(ExactQuantile
         .percentilesOf(users, "cents", q, knownRowsUpper = nUsers)
         .select(col("qs").as("mq")))
-    val out = withR
+    withR
       .crossJoin(broadcast(bounds))
       .select(col("user_id"), col("recency_days"), col("frequency"),
         (col("cents").cast("double") / 100.0).as("monetary"),
@@ -439,11 +439,9 @@ object Experiment {
           .otherwise(2L).as("m_score"))
       .withColumn("rfm",
         col("r_score") * 100 + col("f_score") * 10 + col("m_score"))
-      // user-sized output, materialized so the buyer cache can be
-      // released here (the containment_dup discipline)
+      // user-sized output, materialized so the scope can release the
+      // buyer cache (the containment_dup discipline)
       .localCheckpoint()
-    users.unpersist()
-    out
   }
 
   /** CUPED-adjusted A/B readout (Deng et al., WSDM'13): the ab_test
@@ -673,9 +671,9 @@ object Experiment {
     * in one final-agg task). The per-user delay table persists across
     * count + quantiles, and the conversion count (an output column
     * anyway) doubles as the dispatch bound — zero extra jobs. */
-  def funnelTime(spark: SparkSession, sfDir: String): DataFrame = {
+  def funnelTime(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
     val w = Window.partitionBy(col("user_id"))
-    val delays = Tables.events(spark, sfDir)
+    val delays = s.persist(Tables.events(spark, sfDir)
       .withColumn("t_view",
         min(when(col("event_type") === "view", col("ts"))).over(w))
       .withColumn("t_purchase",
@@ -683,20 +681,17 @@ object Experiment {
       .groupBy(col("user_id"))
       .agg(max(col("t_view")).as("t_view"), max(col("t_purchase")).as("t_purchase"))
       .filter(col("t_view").isNotNull && col("t_purchase").isNotNull)
-      .select((unix_micros(col("t_purchase")) - unix_micros(col("t_view"))).as("delay_us"))
-      .persist()
+      .select((unix_micros(col("t_purchase")) - unix_micros(col("t_view"))).as("delay_us")))
     val n = delays.count()
-    val out = ExactQuantile
+    ExactQuantile
       .percentilesOf(delays, "delay_us", Seq(0.125, 0.25, 0.5, 0.75, 0.875),
         knownRowsUpper = n)
       .select(lit(n).as("n_conversions"),
         (col("qs")(0) / 1000000.0).as("p125_s"), (col("qs")(1) / 1000000.0).as("p25_s"),
         (col("qs")(2) / 1000000.0).as("p50_s"), (col("qs")(3) / 1000000.0).as("p75_s"),
         (col("qs")(4) / 1000000.0).as("p875_s"))
-      // 1-row output, materialized so the delay cache can be released
+      // 1-row output, materialized so the scope can release the delay cache
       .localCheckpoint()
-    delays.unpersist()
-    out
   }
 
   /** RATIO-METRIC A/B readout via the DELTA METHOD (Deng et al.) —

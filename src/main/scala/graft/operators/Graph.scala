@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.plans.Scope
 import graft.sources.Tables
 
 /** Distributed graph analytics over a derived co-occurrence graph.
@@ -36,11 +37,10 @@ object Graph {
 
   /** Force the graph-family warehouse builds (edge list, triangle
     * counts, community labels) for this (session, dataset) — see
-    * graft.Warehouses.prebuild. The edge list's iteration-ready persist
-    * is released immediately: prebuild pays the parquet build, not a
-    * cache residency. */
+    * graft.Warehouses.prebuild. Only the edge FILE is built: prebuild
+    * pays the parquet build, not the iteration-ready cache. */
   private[graft] def prebuild(spark: SparkSession, sfDir: String): Unit = {
-    directedEdges(spark, sfDir).unpersist()
+    edgeList(spark, sfDir)
     triangleCounts(spark, sfDir)
     communityLabels(spark, sfDir)
   }
@@ -55,8 +55,8 @@ object Graph {
           java.nio.file.Files.walk(d).iterator().asScala.toSeq.reverse
             .foreach(p => java.nio.file.Files.deleteIfExists(p))
         }
-        deriveTriangleCounts(spark, sfDir).write.mode("overwrite")
-          .parquet(d.toString)
+        Scope(s => deriveTriangleCounts(spark, sfDir, s).write.mode("overwrite")
+          .parquet(d.toString))
         d.toString
       })
     spark.read.parquet(dir)
@@ -65,7 +65,9 @@ object Graph {
   def graphTriangles(spark: SparkSession, sfDir: String): DataFrame =
     triangleCounts(spark, sfDir)
 
-  private def deriveTriangleCounts(spark: SparkSession, sfDir: String): DataFrame = {
+  /** Lazy over caches in the caller's scope: materialize it before the
+    * scope ends. */
+  private def deriveTriangleCounts(spark: SparkSession, sfDir: String, s: Scope): DataFrame = {
     // the SAME 2-shuffle both-direction derivation PageRank iterates
     // on, persisted hash(u): degrees fall out of the cached layout with
     // NO extra exchange (groupBy(u) finds HashPartitioning(u) already
@@ -74,7 +76,7 @@ object Graph {
     // union + full re-shuffle just to count degrees, then two more
     // degree joins and a separate persisted canonical set to close
     // wedges against
-    val directed = directedEdges(spark, sfDir)
+    val directed = directedEdges(spark, sfDir, s)
     val deg = directed.groupBy(col("u").as("p")).agg(count(lit(1)).as("d"))
     // attach endpoint degrees — unhinted: AQE broadcasts the vertex-
     // count-sized deg table while it's small, shuffles at 100 TB
@@ -88,12 +90,10 @@ object Graph {
     // wedge intermediate is O(m^1.5) and a hub vertex generates no
     // wedges. dst's degree rides along: the wedge pair-order below must
     // match the closing edge's orientation, which is (deg, id) order.
-    val oriented = withDeg
+    val oriented = s.persist(withDeg
       .filter(col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v")))
-      .select(col("u").as("src"), col("v").as("dst"), col("dv").as("ddst"))
-      .persist()
+      .select(col("u").as("src"), col("v").as("dst"), col("dv").as("ddst")))
     oriented.count()
-    directed.unpersist()
     // wedges at each source; both sides scan the ONE cached oriented
     // list, so the self-join shuffles at most its two hash layouts
     val wedges = oriented.as("e1").join(oriented.as("e2"),
@@ -106,15 +106,10 @@ object Graph {
     // exactly once
     val triangles = wedges.join(oriented,
       col("y") === col("src") && col("z") === col("dst"))
-    val counts = triangles
+    triangles
       .select(explode(array(col("x"), col("y"), col("z"))).as("partkey"))
       .groupBy(col("partkey"))
       .agg(count(lit(1)).as("n_triangles"))
-      // per-vertex counts: materialize eagerly so the edge cache can be
-      // released here (the graphPagerank / annPq discipline)
-      .localCheckpoint()
-    oriented.unpersist()
-    counts
   }
 
   /** LOCAL CLUSTERING COEFFICIENT per vertex — triangles/possible-
@@ -122,12 +117,13 @@ object Graph {
     * measure (Watts-Strogatz): cc(v) = 2·tri(v) / (deg(v)·(deg(v)−1)),
     * null for degree-1 vertices where the ratio is undefined. The
     * triangle counts are graphTriangles' own (degree-oriented wedge
-    * closure — O(m^1.5), hub-safe) and the degree falls out of the
-    * cached both-direction edge layout with no extra exchange; the
+    * closure — O(m^1.5), hub-safe) and the degree is one map-side-
+    * combined aggregate over the edge file (the result is lazy and
+    * reads the edges once, so it needs no iteration-ready cache); the
     * composition adds ONE vertex-keyed join to the triangle plan.
     * Exactness: integers everywhere, one terminal divide, round 6. */
   def graphClustering(spark: SparkSession, sfDir: String): DataFrame = {
-    val deg = directedEdges(spark, sfDir)
+    val deg = edgeList(spark, sfDir)
       .groupBy(col("u").as("partkey")).agg(count(lit(1)).as("degree"))
     deg.join(triangleCounts(spark, sfDir), Seq("partkey"), "left")
       .na.fill(0L, Seq("n_triangles"))
@@ -185,7 +181,7 @@ object Graph {
   private val edgeMemo =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  private def directedEdges(spark: SparkSession, sfDir: String): DataFrame = {
+  private def edgeList(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = edgeMemo.computeIfAbsent(
       s"${System.identityHashCode(spark)}|$sfDir",
       _ => {
@@ -199,10 +195,13 @@ object Graph {
           .parquet(d.toString)
         d.toString
       })
+    spark.read.parquet(dir)
+  }
+
+  /** The edge file persisted hash(u)-partitioned in the caller's scope. */
+  private def directedEdges(spark: SparkSession, sfDir: String, s: Scope): DataFrame = {
     val n = spark.sessionState.conf.numShufflePartitions
-    val directed = spark.read.parquet(dir)
-      .repartition(n, col("u"))
-      .persist()
+    val directed = s.persist(edgeList(spark, sfDir).repartition(n, col("u")))
     // eager count, same reason as prepareDirected: expose the cached
     // HashPartitioning(u, n) to every consumer round
     directed.count()
@@ -258,8 +257,8 @@ object Graph {
     * layout with no extra exchange (the graphTriangles discipline);
     * the capped self-join shuffles that same layout once; the
     * (a, b) count and anti-join are candidate-sized. */
-  def graphLinkpred(spark: SparkSession, sfDir: String): DataFrame = {
-    val directed = directedEdges(spark, sfDir)
+  def graphLinkpred(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
+    val directed = directedEdges(spark, sfDir, s)
     val deg = directed.groupBy(col("u").as("p")).agg(count(lit(1)).as("d"))
     val capped = directed.join(
       deg.filter(col("d") <= LpDegCap).select(col("p").as("u")), Seq("u"))
@@ -269,15 +268,13 @@ object Graph {
     val cn = wedges.groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("common_neighbors"))
       .filter(col("common_neighbors") >= LpMinSupport)
-    val out = cn
+    cn
       .join(directed.select(col("u").as("a"), col("v").as("b")),
         Seq("a", "b"), "left_anti")
       .transform(graft.plans.TopK.perGroup(
         Seq(), Seq("common_neighbors" -> false, "a" -> true, "b" -> true), LpTopN))
       .orderBy(col("common_neighbors").desc, col("a"), col("b"))
       .localCheckpoint()
-    directed.unpersist()
-    out
   }
 
   /** k-core threshold (vertices below this degree peel away). */
@@ -309,9 +306,8 @@ object Graph {
     * round's survivor edges localCheckpoint — the dup_clusters loop
     * discipline — so lineage stays one round deep and the convergence
     * probe is a count() action, never a collect. */
-  def graphKcore(spark: SparkSession, sfDir: String): DataFrame = {
-    val directed = directedEdges(spark, sfDir)
-    var e = directed
+  def graphKcore(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
+    var e = directedEdges(spark, sfDir, s)
     var nEdges = e.count()
     var rounds = 0
     var converged = false
@@ -320,25 +316,22 @@ object Graph {
         .filter(col("d") >= KcK).select(col("u"))
       // eager=false: the convergence count IS the materializing action
       // — the former eager checkpoint paid a full extra pass per round
-      val next = e
+      val next = s.checkpoint(e
         .join(keep, Seq("u"), "left_semi")
         .join(keep.select(col("u").as("v")), Seq("v"), "left_semi")
-        .select(col("u"), col("v"))
-        .localCheckpoint(eager = false)
+        .select(col("u"), col("v")), eager = false)
       val n2 = next.count()
       converged = n2 == nEdges
       nEdges = n2
       // free the superseded round's checkpoint storage eagerly (no-op
       // on the first round, when e is still the persisted edge layout)
-      graft.plans.Checkpoints.free(e)
+      s.free(e)
       e = next
       rounds += 1
     }
-    val out = e.groupBy(col("u").as("partkey"))
+    e.groupBy(col("u").as("partkey"))
       .agg(count(lit(1)).as("core_deg"))
       .localCheckpoint()
-    directed.unpersist()
-    out
   }
 
   /** EDGE-NEIGHBORHOOD JACCARD (the SCAN/sparsification structural
@@ -353,16 +346,15 @@ object Graph {
     * inclusion-exclusion over exact degree longs. Edges closing no
     * triangle have similarity 0 and are not emitted (the sparsifier
     * drops them unseen — that is the point). */
-  def graphEdgeJaccard(spark: SparkSession, sfDir: String): DataFrame = {
-    val directed = directedEdges(spark, sfDir)
+  def graphEdgeJaccard(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
+    val directed = directedEdges(spark, sfDir, s)
     val deg = directed.groupBy(col("u").as("p")).agg(count(lit(1)).as("d"))
     val withDeg = directed
       .join(deg.select(col("p").as("u"), col("d").as("du")), Seq("u"))
       .join(deg.select(col("p").as("v"), col("d").as("dv")), Seq("v"))
-    val oriented = withDeg
+    val oriented = s.persist(withDeg
       .filter(col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v")))
-      .select(col("u").as("src"), col("v").as("dst"), col("dv").as("ddst"))
-      .persist()
+      .select(col("u").as("src"), col("v").as("dst"), col("dv").as("ddst")))
     oriented.count()
     val wedges = oriented.as("e1").join(oriented.as("e2"),
         col("e1.src") === col("e2.src") &&
@@ -380,16 +372,13 @@ object Graph {
         .as("e"))
       .select(col("e.a").as("a"), col("e.b").as("b"))
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("cn"))
-    val out = cn
+    cn
       .join(deg.select(col("p").as("a"), col("d").as("da")), Seq("a"))
       .join(deg.select(col("p").as("b"), col("d").as("db")), Seq("b"))
       .select(col("a"), col("b"), col("cn"), col("da"), col("db"),
         round(col("cn").cast("double")
           / (col("da") + col("db") - 2 - col("cn")).cast("double"), 6).as("jaccard"))
       .localCheckpoint()
-    oriented.unpersist()
-    directed.unpersist()
-    out
   }
 
   /** Brand-partition MODULARITY of the co-purchase graph (Newman): for
@@ -407,14 +396,13 @@ object Graph {
     * edge layout (AQE broadcasts the part table while it's small); one
     * brand-keyed aggregate each for L and D; everything after is
     * |brands| rows. */
-  def graphAssortativity(spark: SparkSession, sfDir: String): DataFrame = {
-    val directed = directedEdges(spark, sfDir)
+  def graphAssortativity(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
+    val directed = directedEdges(spark, sfDir, s)
     val brands = Tables.part(spark, sfDir)
       .select(col("p_partkey").cast("long").as("pk"), col("p_brand"))
-    val withB = directed
+    val withB = s.persist(directed
       .join(brands.select(col("pk").as("u"), col("p_brand").as("bu")), Seq("u"))
-      .join(brands.select(col("pk").as("v"), col("p_brand").as("bv")), Seq("v"))
-      .persist()
+      .join(brands.select(col("pk").as("v"), col("p_brand").as("bv")), Seq("v")))
     val m = withB.count() / 2 // both-direction list counts each edge twice
     // intra-brand edges: both directions counted, so halve; degrees:
     // out-degree in the both-direction list IS the undirected degree
@@ -423,7 +411,7 @@ object Graph {
     val degs = withB.groupBy(col("bu").as("brand"))
       .agg(count(lit(1)).as("deg_sum"),
         countDistinct(col("u")).as("n_vertices"))
-    val out = degs.join(intra, Seq("brand"), "left")
+    degs.join(intra, Seq("brand"), "left")
       .na.fill(0L, Seq("intra_edges"))
       .select(col("brand"), col("n_vertices"), col("intra_edges"), col("deg_sum"),
         // + 0.0 canonicalizes IEEE negative zero (a tiny negative
@@ -435,9 +423,6 @@ object Graph {
               (col("deg_sum").cast("double") / (2.0 * m)),
           6) + lit(0.0)).as("contribution"))
       .localCheckpoint()
-    withB.unpersist()
-    directed.unpersist()
-    out
   }
 
   /** BFS hop cap — the oracle's recursion guard and the engine's round
@@ -460,12 +445,11 @@ object Graph {
     * discipline (localCheckpoint per round, count-action convergence
     * probe, never a collect). Unlike peeling, min-relaxation IS
     * monotone, so the oracle is a genuine bounded recursive CTE. */
-  def graphBfs(spark: SparkSession, sfDir: String): DataFrame = {
-    val directed = directedEdges(spark, sfDir)
-    var dist = directed.select(col("u").as("id")).distinct()
+  def graphBfs(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
+    val directed = directedEdges(spark, sfDir, s)
+    var dist = s.checkpoint(directed.select(col("u").as("id")).distinct()
       .withColumn("dist",
-        when(col("id") % 100 === 0, lit(0L)).otherwise(lit(null).cast("long")))
-      .localCheckpoint()
+        when(col("id") % 100 === 0, lit(0L)).otherwise(lit(null).cast("long"))))
     var rounds = 0
     var changed = 1L
     while (changed > 0 && rounds < BfsMaxRounds) {
@@ -478,16 +462,14 @@ object Graph {
       // count is the materializing action) and probes convergence —
       // the former shape paid a separate eager-checkpoint job PLUS a
       // next⋈dist comparison join (two more exchanges) per round
-      val next = dist.join(nb, Seq("id"), "left")
+      val next = s.checkpoint(dist.join(nb, Seq("id"), "left")
         .select(col("id"), least(col("dist"), col("nd")).as("dist"),
-          (!(least(col("dist"), col("nd")) <=> col("dist"))).as("chg"))
-        .localCheckpoint(eager = false)
+          (!(least(col("dist"), col("nd")) <=> col("dist"))).as("chg")), eager = false)
       changed = next.filter(col("chg")).count()
-      graft.plans.Checkpoints.free(dist)
+      s.free(dist)
       dist = next
       rounds += 1
     }
-    directed.unpersist()
     dist.filter(col("dist").isNotNull)
       .select(col("id").as("partkey"), col("dist"))
   }
@@ -502,12 +484,12 @@ object Graph {
     * it would re-exchange the edges every round — the exact defect
     * this layout exists to remove. After the count the scan exposes
     * HashPartitioning(u, N) and each round's edge⋈rank join plans
-    * exchange-free on this side. Caller owns the unpersist. */
-  def prepareDirected(spark: SparkSession, edges: DataFrame): DataFrame = {
-    val directed = edges
+    * exchange-free on this side. The cache lives in the caller's
+    * scope. */
+  def prepareDirected(spark: SparkSession, edges: DataFrame, s: Scope): DataFrame = {
+    val directed = s.persist(edges
       .unionByName(edges.select(col("v").as("u"), col("u").as("v")))
-      .repartition(spark.sessionState.conf.numShufflePartitions, col("u"))
-      .persist()
+      .repartition(spark.sessionState.conf.numShufflePartitions, col("u")))
     directed.count()
     directed
   }
@@ -564,24 +546,21 @@ object Graph {
           expr("(17 * coalesce(s, 0L)) div 20")).as("pr"))
   }
 
-  def graphPagerank(spark: SparkSession, sfDir: String): DataFrame = {
-    val directed = directedEdges(spark, sfDir)
+  def graphPagerank(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
+    val directed = directedEdges(spark, sfDir, s)
     // lazy persist, no eager count: the unroll is ONE job and all four
     // references to `nodes` live inside it — the first materialization
     // fills the cache, the rest hit it; an eager count here would just
     // pay an extra job's scheduling
-    val nodes = prNodes(directed).persist()
+    val nodes = s.persist(prNodes(directed))
     var pr = prInit(nodes)
     for (_ <- 1 to PrIters) pr = prStep(nodes, directed, pr)
     // ONE materializing job for the whole unroll (prStep's lineage is
     // linear), then release the edge and vertex caches — the output
     // checkpoint is self-contained, so repeated invocations (bench
     // passes, long sessions) don't accumulate tables in executor memory
-    val out = pr.select(col("id").as("partkey"), col("deg"), col("pr").as("pr_scaled"))
+    pr.select(col("id").as("partkey"), col("deg"), col("pr").as("pr_scaled"))
       .localCheckpoint()
-    nodes.unpersist()
-    directed.unpersist()
-    out
   }
 
   /** The library path for open-ended PageRank: iterate to a delta
@@ -606,10 +585,8 @@ object Graph {
       spark: SparkSession, sfDir: String,
       tol: Long = PrScale / 1000000L,
       maxRounds: Int = 60,
-      checkpointEvery: Int = 3): (DataFrame, Int) = {
-    val directed = directedEdges(spark, sfDir)
-    try graphPagerankConvergedOn(directed, tol, maxRounds, checkpointEvery)
-    finally directed.unpersist()
+      checkpointEvery: Int = 3): (DataFrame, Int) = Scope { s =>
+    graphPagerankConvergedOn(directedEdges(spark, sfDir, s), tol, maxRounds, checkpointEvery)
   }
 
   /** The same converged loop over a caller-supplied iteration-ready
@@ -620,9 +597,9 @@ object Graph {
       directed: DataFrame,
       tol: Long = PrScale / 1000000L,
       maxRounds: Int = 60,
-      checkpointEvery: Int = 3): (DataFrame, Int) = {
-    val nodes = prNodes(directed).persist()
-    var pr = prInit(nodes).localCheckpoint()
+      checkpointEvery: Int = 3): (DataFrame, Int) = Scope { s =>
+    val nodes = s.persist(prNodes(directed))
+    var pr = s.checkpoint(prInit(nodes))
     var rounds = 0
     var delta = Long.MaxValue
     while (delta > tol && rounds < maxRounds) {
@@ -636,7 +613,7 @@ object Graph {
       // LINEAR (checkpointEvery joins deep, each round executed once);
       // the checkpoint exists to truncate lineage growth across many
       // rounds, not to stop re-execution
-      pr = pr.localCheckpoint()
+      pr = s.checkpoint(pr)
       rounds += stepped
       delta = pr.join(prev.select(col("id"), col("pr").as("prev_pr")), Seq("id"))
         .agg(max(abs(col("pr") - col("prev_pr"))).as("d"))
@@ -644,9 +621,8 @@ object Graph {
       // ~60 retained checkpoint copies at the 100× probe otherwise —
       // free the superseded window's blocks as soon as the delta that
       // needed them is computed
-      graft.plans.Checkpoints.free(prev)
+      s.free(prev)
     }
-    nodes.unpersist()
     require(delta <= tol, s"pagerank did not converge in $rounds rounds (delta=$delta)")
     (pr.select(col("id").as("partkey"), col("deg"), col("pr").as("pr_scaled")), rounds)
   }
@@ -679,8 +655,8 @@ object Graph {
           java.nio.file.Files.walk(d).iterator().asScala.toSeq.reverse
             .foreach(p => java.nio.file.Files.deleteIfExists(p))
         }
-        deriveCommunityLabels(spark, sfDir).write.mode("overwrite")
-          .parquet(d.toString)
+        Scope(s => deriveCommunityLabels(spark, sfDir, s).write.mode("overwrite")
+          .parquet(d.toString))
         d.toString
       })
     spark.read.parquet(dir)
@@ -695,8 +671,8 @@ object Graph {
     * (u, label) cell agg). Integer-only state: bit-reproducible, and
     * the DuckDB oracle replays the identical 3 rounds as unrolled
     * CTEs. */
-  private def deriveCommunityLabels(spark: SparkSession, sfDir: String): DataFrame = {
-    val directed = directedEdges(spark, sfDir)
+  private def deriveCommunityLabels(spark: SparkSession, sfDir: String, s: Scope): DataFrame = {
+    val directed = directedEdges(spark, sfDir, s)
     // every vertex appears as a source in the both-direction list, so
     // the init distinct runs inside the cached hash(u) layout
     var labels = directed.select(col("u")).distinct()
@@ -710,11 +686,7 @@ object Graph {
         .select(col("u").as("lv"),
           (lit(LpcPack - 1L) - pmod(col("pk"), lit(LpcPack))).as("lbl"))
     }
-    val out = labels
-      .select(col("lv").as("partkey"), col("lbl").as("community"))
-      .localCheckpoint()
-    directed.unpersist()
-    out
+    labels.select(col("lv").as("partkey"), col("lbl").as("community"))
   }
 
   /** Community detection over the co-purchase graph: the per-vertex
@@ -732,20 +704,19 @@ object Graph {
     * product, one subtraction in fixed order, round 6, negative-zero
     * canonicalized. One labels⋈edges join pair inside the cached
     * hash layouts, then community-sized aggs. */
-  def graphModularity(spark: SparkSession, sfDir: String): DataFrame = {
+  def graphModularity(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
     val labels = communityLabels(spark, sfDir)
-    val directed = directedEdges(spark, sfDir)
-    val withC = directed
+    val directed = directedEdges(spark, sfDir, s)
+    val withC = s.persist(directed
       .join(labels.select(col("partkey").as("u"), col("community").as("cu")), Seq("u"))
-      .join(labels.select(col("partkey").as("v"), col("community").as("cv")), Seq("v"))
-      .persist()
+      .join(labels.select(col("partkey").as("v"), col("community").as("cv")), Seq("v")))
     val m = withC.count() / 2 // both-direction list counts each edge twice
     val intra = withC.filter(col("cu") === col("cv"))
       .groupBy(col("cu").as("community"))
       .agg((count(lit(1)) / 2).cast("long").as("internal_edges"))
     val degs = withC.groupBy(col("cu").as("community"))
       .agg(count(lit(1)).as("deg_sum"), countDistinct(col("u")).as("n_vertices"))
-    val out = degs.join(intra, Seq("community"), "left")
+    degs.join(intra, Seq("community"), "left")
       .na.fill(0L, Seq("internal_edges"))
       .select(col("community"), col("n_vertices"), col("internal_edges"), col("deg_sum"),
         (round(
@@ -754,9 +725,6 @@ object Graph {
               (col("deg_sum").cast("double") / (2.0 * m)),
           6) + lit(0.0)).as("contribution"))
       .localCheckpoint()
-    withC.unpersist()
-    directed.unpersist()
-    out
   }
 
   /** HITS hubs/authorities (Kleinberg) over the canonically-oriented
@@ -772,12 +740,12 @@ object Graph {
     * Scale shape: four sparse mat-vec steps, each an edges⋈vector
     * equi-join + sum agg inside the cached hash(u) edge layout —
     * cost is iterations × one shuffle, the pagerank discipline. */
-  def graphHits(spark: SparkSession, sfDir: String): DataFrame = {
+  def graphHits(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
     // no second persist+count: the u<v filter is a narrow predicate
     // over the already-persisted hash(u) edge layout (partitioning
     // preserved), so re-caching a filtered copy paid two extra jobs
     // and double memory for nothing
-    val directed = directedEdges(spark, sfDir)
+    val directed = directedEdges(spark, sfDir, s)
     val e = directed.filter(col("u") < col("v"))
     // the u > v slice of the SAME cached both-direction layout IS the
     // transposed edge list (every (u, v) ∈ e appears reversed as
@@ -798,15 +766,17 @@ object Graph {
     // hub1 is referenced exactly once (by auth2), so its lineage is
     // linear — a checkpoint here bought nothing but an extra eager job
     val hub1 = matvec(auth1)
-    val auth2 = matvecT(hub1).localCheckpoint()
-    val hub2 = matvec(auth2).localCheckpoint()
+    // vertex-sized intermediates the result does not read: the scope
+    // frees them once out is materialized
+    val auth2 = s.checkpoint(matvecT(hub1))
+    val hub2 = s.checkpoint(matvec(auth2))
     // every endpoint of e appears in the both-direction list's u
     // column, so the vertex census is a distinct ON the cache's own
     // partitioning key — no union, no exchange
     val verts = directed.select(col("u").as("partkey")).distinct()
     val maxes = auth2.agg(max(col("n")).as("ma"))
       .crossJoin(hub2.agg(max(col("n")).as("mh")))
-    val out = verts
+    verts
       .join(auth2.select(col("pk").as("partkey"), col("n").as("auth")), Seq("partkey"), "left")
       .join(hub2.select(col("pk").as("partkey"), col("n").as("hub")), Seq("partkey"), "left")
       .na.fill(0L, Seq("auth", "hub"))
@@ -815,11 +785,6 @@ object Graph {
         round(col("auth").cast("double") / col("ma").cast("double"), 6).as("auth_score"),
         round(col("hub").cast("double") / col("mh").cast("double"), 6).as("hub_score"))
       .localCheckpoint()
-    directed.unpersist()
-    // the chained mat-vec intermediates are checkpointed vertex-sized
-    // tables out no longer references — free their blocks eagerly
-    Seq(auth2, hub2).foreach(graft.plans.Checkpoints.free)
-    out
   }
 
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.plans.Scope
 import graft.sources.Tables
 
 /** Distributed model-training primitives — the full-batch gradient
@@ -62,7 +63,7 @@ object Learn {
     * the q_decile range-partition two-phase prefix (local window per
     * partition + partition offsets) — distinct scores are corpus-sized
     * at 100 TB, so no single-partition window touches them. */
-  def aucEval(spark: SparkSession, sfDir: String): DataFrame = {
+  def aucEval(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
     import org.apache.spark.sql.expressions.Window
     val lbl = Tables.documents(spark, sfDir)
       .select(col("doc_id"), when(col("lang") === "en", 1L).otherwise(0L).as("y"))
@@ -80,9 +81,8 @@ object Learn {
     // range boundaries — at the sf1 gate the two evaluations landed on
     // different boundaries and the AUC came out wrong with correct
     // pos/neg counts. One materialized evaluation pins the pids.
-    val parted = cells.repartitionByRange(n, col("score"))
-      .withColumn("pid", spark_partition_id())
-      .persist()
+    val parted = s.persist(cells.repartitionByRange(n, col("score"))
+      .withColumn("pid", spark_partition_id()))
     parted.count()
     val wl = Window.partitionBy(col("pid")).orderBy(col("score"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -91,7 +91,7 @@ object Learn {
       .withColumn("poff", coalesce(sum(col("pnn")).over(
         Window.orderBy(col("pid")).rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .select(col("pid"), col("poff"))
-    val out = local.join(offs, Seq("pid"))
+    local.join(offs, Seq("pid"))
       .select(col("np"), col("nn"), (col("lb") + col("poff")).as("below"))
       .agg(sum(col("np")).as("p"), sum(col("nn")).as("nneg"),
         sum(col("np").cast("decimal(38,0)") * (lit(2L) * col("below") + col("nn")))
@@ -101,8 +101,6 @@ object Learn {
           (lit(2.0) * col("p").cast("double") * col("nneg").cast("double")), 6)
           .as("auc"))
       .localCheckpoint()
-    parted.unpersist()
-    out
   }
 
   /** Calibration bins over the score range [-1, 1]. */

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge.{column, expression}
 import graft.expressions.{L2Long, PqAdc, PqAssign, PqTab}
+import graft.plans.Scope
 import graft.sources.Tables
 
 /** Product-quantization ANN (Jégou, Douze, Schmid, "Product
@@ -86,13 +87,12 @@ object Pq {
     * codebook rows, and shuffled two corpus-wide collect_list pivots
     * (codes, ADC tables) — all of it per-row loops wearing a join
     * costume; at sf0.1 the rewrite cut the operator ~2.5s → ~1.2s. */
-  def annPq(spark: SparkSession, sfDir: String): DataFrame = {
+  def annPq(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
     val emb = Tables.embeddings(spark, sfDir)
     // full quantized vectors: feeds training, both encode passes, and
     // the rerank payload joins
-    val qfull = Partitioning.spread(emb)
-      .select(col("vec_id"), quantize(col("embedding")).as("q"))
-      .persist()
+    val qfull = s.persist(Partitioning.spread(emb)
+      .select(col("vec_id"), quantize(col("embedding")).as("q")))
     val seeds = qfull.filter(col("vec_id") < K)
 
     // seed codebook: vectors 0..K-1, each cut into its M subvectors
@@ -165,18 +165,15 @@ object Pq {
       .withColumn("l2_dist", l2(col("qv"), col("nv")))
 
     val w = Window.partitionBy(col("q_id")).orderBy(col("l2_dist"), col("vec_id"))
-    val result = reranked
+    reranked
       .transform(graft.plans.TopK.perGroup(
         Seq("q_id"), Seq("l2_dist" -> true, "vec_id" -> true), TopN))
       .withColumn("rank", row_number().over(w).cast("long"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"),
         col("adc_dist"), col("l2_dist"))
-      // TopN×queries rows: materialize eagerly so the two pipeline
-      // caches can be released here instead of leaking one full-vector
-      // and one 8×-exploded cache per invocation (the graphPagerank /
-      // dupClusters loop discipline)
+      // TopN×queries rows: materialize eagerly so the scope can
+      // release the full-vector cache (the graphPagerank / dupClusters
+      // loop discipline)
       .localCheckpoint()
-    qfull.unpersist()
-    result
   }
 }

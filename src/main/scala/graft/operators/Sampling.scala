@@ -202,14 +202,15 @@ object Sampling {
         Similarity.md5Mod(concat(lit("bal-"), col("doc_id"))).as("draw"))
     val k = docs.groupBy(col("lang")).agg(count(lit(1)).as("cn"))
       .agg(min(col("cn")).as("k"))
-    // persist + eager count pins ONE set of sampled range boundaries
-    // for both rank branches (the vocabGrowth rule; aucEval failed the
-    // sf1 gate without it). Output is corpus-sized, so the persist is
-    // left to the session's cache hygiene rather than eagerly dropped.
+    // ONE materialized evaluation pins ONE set of sampled range
+    // boundaries for both rank branches (the vocabGrowth rule; aucEval
+    // failed the sf1 gate without it). The output is corpus-sized and
+    // lazy, so the layout is an eager checkpoint the result itself
+    // reads — its storage lives and dies with the result, never as a
+    // session cache entry.
     val parted = docs.repartitionByRange(n, col("lang"), col("draw"), col("doc_id"))
       .withColumn("pid", spark_partition_id())
-      .persist()
-    parted.count()
+      .localCheckpoint()
     val local = parted.withColumn("lrank", row_number().over(
       Window.partitionBy(col("pid"), col("lang"))
         .orderBy(col("draw"), col("doc_id"))).cast("long"))

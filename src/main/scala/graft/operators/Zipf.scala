@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.plans.Scope
 
 /** Corpus power-law diagnostics off the term-census warehouse — the
   * two scaling curves a growing corpus build tracks per ingestion
@@ -39,7 +40,7 @@ object Zipf {
     * single-partition window; the decile windows at the end touch 10
     * rows. Everything is exact longs until the one ln-ratio per
     * decile row. */
-  def vocabGrowth(spark: SparkSession, sfDir: String): DataFrame = {
+  def vocabGrowth(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
     import org.apache.spark.sql.expressions.Window
     val docs = Partitioning.spread(graft.sources.Tables.documents(spark, sfDir))
       .withColumn("toks", split(col("text"), " "))
@@ -67,9 +68,8 @@ object Zipf {
     // 10× probe the two un-persisted evaluations landed on different
     // boundaries, so poff and lrank disagreed and an 11th decile
     // appeared. One materialized evaluation pins the pids.
-    val parted = ds.repartitionByRange(n, col("doc_id"))
-      .withColumn("pid", spark_partition_id())
-      .persist()
+    val parted = s.persist(ds.repartitionByRange(n, col("doc_id"))
+      .withColumn("pid", spark_partition_id()))
     parted.count()
     val local = parted.withColumn("lrank", row_number().over(
       Window.partitionBy(col("pid")).orderBy(col("doc_id"))).cast("long"))
@@ -85,7 +85,6 @@ object Zipf {
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("tok"),
         sum(col("new_terms")).as("nv"))
       .localCheckpoint()
-    parted.unpersist()
     // decile-sized (10 rows): the unpartitioned windows are safe
     val wc = Window.orderBy(col("decile")).rowsBetween(Window.unboundedPreceding, 0)
     val wl = Window.orderBy(col("decile"))

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Storage hygiene for iterative localCheckpoint loops.
@@ -29,8 +29,8 @@ object Checkpoints {
     * would die on missing blocks. Enforced structurally: only a plan
     * whose LEAVES are all LogicalRDDs is freed; a mixed plan is a
     * no-op. Non-blocking — the loop's next action overlaps the async
-    * block removal. */
-  def free(ds: DataFrame): Unit = {
+    * block removal. Operators reach it through [[Scope]]. */
+  def free(ds: Dataset[_]): Unit = {
     val leaves = ds.queryExecution.analyzed.collectLeaves()
     if (leaves.nonEmpty && leaves.forall(_.isInstanceOf[LogicalRDD]))
       leaves.foreach {

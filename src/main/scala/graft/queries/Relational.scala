@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.plans.Scope
 import graft.sources.Tables
 
 /** Relational analytics core: scan→filter→agg, multiway joins,
@@ -180,7 +181,7 @@ object Relational {
     * different boundaries run to run, but offset + local rank is exact
     * for sorted data regardless — no single-partition ntile window at
     * any scale. */
-  def qDecile(spark: SparkSession, sfDir: String): DataFrame = {
+  def qDecile(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
     import org.apache.spark.sql.expressions.Window
     val spend = Tables.orders(spark, sfDir)
       .groupBy(col("o_custkey"))
@@ -191,9 +192,8 @@ object Relational {
     // persist + eager count pins ONE set of sampled range boundaries
     // for both rank branches (the vocabGrowth rule; aucEval failed the
     // sf1 gate without it)
-    val parted = spend.repartitionByRange(n, col("cents").desc, col("custkey"))
-      .withColumn("pid", spark_partition_id())
-      .persist()
+    val parted = s.persist(spend.repartitionByRange(n, col("cents").desc, col("custkey"))
+      .withColumn("pid", spark_partition_id()))
     parted.count()
     val local = parted.withColumn("lrank", row_number().over(
       Window.partitionBy(col("pid")).orderBy(col("cents").desc, col("custkey"))).cast("long"))
@@ -210,7 +210,6 @@ object Relational {
         sum(col("cents")).as("cents"),
         max(col("cents")).as("max_cents"), min(col("cents")).as("min_cents"))
       .localCheckpoint()
-    parted.unpersist()
     byDec
       .select(col("decile"), col("n_customers"),
         (col("cents").cast("double") / 100.0).as("total_spend"),

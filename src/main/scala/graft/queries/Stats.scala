@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.plans.Scope
 import graft.sources.Tables
 
 /** Grouped descriptive statistics — the profiling step a pipeline runs
@@ -299,7 +300,7 @@ object Stats {
     * decimal(38,0), ranks come from the q_decile range-partition
     * two-phase prefix — no single-partition window over customers);
     * the Gini and the share are each ONE terminal divide, round 6. */
-  def giniConcentration(spark: SparkSession, sfDir: String): DataFrame = {
+  def giniConcentration(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
     import org.apache.spark.sql.expressions.Window
     val d38 = "decimal(38,0)"
     val spend = Tables.orders(spark, sfDir)
@@ -312,9 +313,8 @@ object Stats {
     // persist + eager count pins ONE set of sampled range boundaries
     // for both rank branches (the vocabGrowth rule; aucEval failed the
     // sf1 gate without it)
-    val parted = spend.repartitionByRange(n, col("cents"), col("custkey"))
-      .withColumn("pid", spark_partition_id())
-      .persist()
+    val parted = s.persist(spend.repartitionByRange(n, col("cents"), col("custkey"))
+      .withColumn("pid", spark_partition_id()))
     parted.count()
     val local = parted.withColumn("lrank", row_number().over(
       Window.partitionBy(col("pid")).orderBy(col("cents"), col("custkey"))).cast("long"))
@@ -335,7 +335,6 @@ object Stats {
         sum(when(col("i") > col("n_customers") - expr("n_customers div 10"),
           col("cents")).otherwise(0L)).as("top_cents"))
       .localCheckpoint()
-    parted.unpersist()
     small
       .select(col("n_customers"),
         (col("sx").cast("double") / 100.0).as("total_spend"),

@@ -44,4 +44,13 @@ class ContractSpec extends AnyFunSuite {
       assert(tables.exists(t => sql.contains(t)), s"$k oracle references no gate table")
     }
   }
+
+  test("MicroBench takes ALL anywhere and rejects unknown names with its usage") {
+    val all = SparkEntry.queries.keys.toSeq.sorted
+    assert(MicroBench.parseArgs(Seq("4", "ALL", "extra")) == Right((4, all)))
+    assert(MicroBench.parseArgs(Seq("dedup_ngram", "ALL")) == Right((4, all)))
+    assert(MicroBench.parseArgs(Seq("2", "dedup_ngram")) == Right((2, Seq("dedup_ngram"))))
+    val err = MicroBench.parseArgs(Seq("3", "dedup_ngram", "no_such_query"))
+    assert(err.left.exists(e => e.contains("no_such_query") && e.contains("usage:")))
+  }
 }

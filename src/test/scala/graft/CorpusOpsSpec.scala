@@ -213,21 +213,23 @@ class CorpusOpsSpec extends AnyFunSuite {
         col("lang"), col("text")))
       .unionByName(docs.select((col("doc_id") + lit(2000000L)).as("doc_id"),
         col("lang"), col("text")))
-    for (frame <- Seq(docs, cloned)) {
-      val rep = graft.operators.Dedup.ngramPairsOver(frame, Some(true))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val perPair = graft.operators.Dedup.ngramPairsOver(frame, Some(false))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(rep == perPair, "verify routes disagree")
+    // each route returns its lazy result from a scope, as dedup_ngram
+    // does: the result must read its own checkpoints after the scope
+    // closes, and no cache entry may outlive it
+    def pairs(frame: org.apache.spark.sql.DataFrame, rep: Boolean) = {
+      val df = graft.plans.Scope(s => graft.operators.Dedup.ngramPairsOver(frame, s, Some(rep)))
+      assert(spark.sharedState.cacheManager.isEmpty)
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     }
+    for (frame <- Seq(docs, cloned))
+      assert(pairs(frame, rep = true).toSet == pairs(frame, rep = false).toSet,
+        "verify routes disagree")
     // the clone-heavy frame must contain every cross-clone pair of a
     // doc with itself (jaccard 1.0 between clones of the same text)
-    val heavy = graft.operators.Dedup.ngramPairsOver(cloned, Some(true))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val heavy = pairs(cloned, rep = true)
     val someId = docs.select(min(col("doc_id"))).head().getLong(0)
     assert(heavy.exists { case (a, b, j) =>
       a == someId && b == someId + 1000000L && j == 1.0 })
-    spark.sharedState.cacheManager.clearCache()
   }
 
   test("dup_clusters: components are closed over the pair graph and keyed by their min id") {

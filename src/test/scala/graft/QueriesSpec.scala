@@ -15,12 +15,25 @@ class QueriesSpec extends AnyFunSuite {
     * emptiness (rows_match 0 == 0). */
   private val emptyOkAtTinySf = Set("events_mad")
 
+  /** STORAGE CENSUS, taken in the same loop so no query runs twice:
+    * after its result is consumed, a query must leave no cache-manager
+    * entry and no registered RDD storage except what the result's own
+    * plan reads (its checkpoint blocks). Operators release everything
+    * else through graft.plans.Scope. */
   for ((name, fn) <- SparkEntry.queries) {
     test(s"$name runs and returns rows") {
+      spark.catalog.clearCache()
+      val before = spark.sparkContext.getPersistentRDDs.keySet
       val df = fn(spark, sf)
       assert(df.columns.nonEmpty)
-      if (emptyOkAtTinySf(name)) df.count() // must still execute cleanly
-      else assert(df.count() > 0, s"$name returned no rows")
+      val n = df.count()
+      if (!emptyOkAtTinySf(name)) assert(n > 0, s"$name returned no rows")
+      assert(spark.sharedState.cacheManager.isEmpty,
+        s"$name left cache-manager entries behind")
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before --
+        graft.plans.Scope.rddsReadBy(df)
+      assert(left.isEmpty, s"$name left registered storage its result " +
+        s"does not read: RDDs ${left.toSeq.sorted.mkString(", ")}")
     }
   }
 

@@ -73,4 +73,23 @@ class SourceLintSpec extends AnyFunSuite {
       }
     assert(offenders.isEmpty, "percentile census lint:\n" + offenders.mkString("\n"))
   }
+
+  test("storage lifetime lives in graft.plans.Scope: no manual release in operators or queries") {
+    // Operators and queries register what they persist or checkpoint
+    // with a Scope, which releases it when the operator returns OR
+    // throws and keeps only the result's own checkpoint blocks. A
+    // hand-written release (or a bare persist the code must remember
+    // to release) is the leak-on-exception shape the scope replaced.
+    // No Dataset persist survives outside Scope.persist, so none is
+    // pinned here: a new one needs a scope, not an exemption.
+    val manual = """\.unpersist\(|Checkpoints\.free\(|\.persist\(\s*(\)|StorageLevel)|\.cache\(\s*\)""".r
+    val offenders = mainSources
+      .filter { case (f, _) =>
+        f.startsWith("graft/operators/") || f.startsWith("graft/queries/") }
+      .flatMap { case (f, src) =>
+        codeOnly(src).linesIterator.filter(l => manual.findFirstIn(l).nonEmpty)
+          .map(l => s"$f: ${l.trim}") }
+    assert(offenders.isEmpty, "manual storage release outside graft.plans.Scope:\n" +
+      offenders.mkString("\n"))
+  }
 }

@@ -989,8 +989,8 @@ class TrainingOpsSpec extends AnyFunSuite {
   }
 
   test("cluster_stability ARI replays from the exact pair-count arithmetic") {
-    val pairs = Cluster.stabilityAssignments(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val pairs = graft.plans.Scope(s => Cluster.stabilityAssignments(spark, sf, s).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
     val n = pairs.length.toLong
     def comb2(x: Long): Long = x * (x - 1) / 2
     val s = pairs.groupBy(p => (p._2, p._3)).values.map(g => comb2(g.size.toLong)).sum
