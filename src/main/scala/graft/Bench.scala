@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: times every SparkEntry query at the SF dir given by
   * SPARK_GRAFT_SF_DIR, after a warm-up that pays the one-off costs
@@ -34,6 +34,35 @@ object Bench {
     Console.withOut(System.err) { run(realOut) }
   }
 
+  /** Seconds to build and fully materialize one query, or -1.0 if it
+    * throws. Starts cache-clean with a GC outside the timed window. */
+  def timeOnce(spark: SparkSession, sfDir: String, name: String,
+      fn: (SparkSession, String) => DataFrame): Double = {
+    // each measurement starts cache-clean: operators persist() their
+    // reused subtrees, and 60+ accumulated caches otherwise build
+    // memory pressure that spills the later queries' shuffles
+    spark.sharedState.cacheManager.clearCache()
+    // localCheckpoint blocks are NOT in the cache manager — the
+    // ContextCleaner frees them only when the RDD is GC'd, so the
+    // iterative operators' checkpoints from earlier queries otherwise
+    // accumulate in the block manager and tax later measurements
+    // (graph_pagerank read ~2s slower mid-suite than standalone).
+    // GC outside the timed window, then give the async cleaner a beat.
+    System.gc()
+    Thread.sleep(50)
+    val t0 = System.nanoTime()
+    // toRdd forces every output column to materialize — a plain
+    // count() would let Catalyst prune the very expressions under test
+    try {
+      fn(spark, sfDir).queryExecution.toRdd.count()
+      (System.nanoTime() - t0) / 1e9
+    } catch { case e: Throwable =>
+      // a broken query must read as a failure, not a fast success
+      System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+      -1.0
+    }
+  }
+
   private def run(realOut: java.io.PrintStream): Unit = {
 
     def loadavg(): String =
@@ -62,24 +91,8 @@ object Bench {
     val loadBefore = loadavg()
 
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // suite-sized codegen class cache (see GraftSession): the default
-      // 100-entry LRU evicts every compiled stage before a 244-query
-      // pass cycles back, so min-of-3 was timing Janino recompilation,
-      // not the steady-state plan this bench documents itself as
-      // measuring. Scale-independent: the cache is keyed on generated
-      // source, not data.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = GraftSession.defaultCores
+    val spark = GraftSession("graft-bench", cpus)
     spark.sparkContext.setLogLevel("ERROR")
     // warm-up: touch every table and exercise codegen once
     Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
@@ -95,32 +108,6 @@ object Bench {
       System.err.println(f"[bench] warehouse $n built in $s%.1fs")
     }
 
-    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      // each measurement starts cache-clean: operators persist() their
-      // reused subtrees, and 60+ accumulated caches otherwise build
-      // memory pressure that spills the later queries' shuffles
-      spark.sharedState.cacheManager.clearCache()
-      // localCheckpoint blocks are NOT in the cache manager — the
-      // ContextCleaner frees them only when the RDD is GC'd, so the
-      // iterative operators' checkpoints from earlier queries otherwise
-      // accumulate in the block manager and tax later measurements
-      // (graph_pagerank read ~2s slower mid-suite than standalone).
-      // GC outside the timed window, then give the async cleaner a beat.
-      System.gc()
-      Thread.sleep(50)
-      val t0 = System.nanoTime()
-      // toRdd forces every output column to materialize — a plain
-      // count() would let Catalyst prune the very expressions under test
-      try {
-        fn(spark, sfDir).queryExecution.toRdd.count()
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
-        // a broken query must read as a failure, not a fast success
-        System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-        -1.0
-      }
-    }
-
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
     val nPasses = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
     require(nPasses >= 1,
@@ -131,7 +118,7 @@ object Bench {
     for (p <- 0 until nPasses; i <- names.indices) {
       val (name, fn) = names(i)
       passes(p)(i) =
-        if (p > 0 && passes(0)(i) < 0) -1.0 else timeOnce(name, fn)
+        if (p > 0 && passes(0)(i) < 0) -1.0 else timeOnce(spark, sfDir, name, fn)
     }
     val results = names.indices.map { i =>
       val samples = (0 until nPasses).map(passes(_)(i))

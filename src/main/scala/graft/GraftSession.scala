@@ -8,9 +8,20 @@ import org.apache.spark.sql.SparkSession
   * to a real cluster: AQE (runtime re-plan + skew-join splitting),
   * explicit shuffle parallelism, UTC session time so results agree
   * with the DuckDB oracle bit-for-bit on timestamps.
+  *
+  * The only place a SparkSession is built (SourceLintSpec enforces
+  * it): every main, test suite and the perfbench harness call it, so
+  * they all time and verify one configuration. A tool that needs a
+  * different runtime SQL setting sets it on the session it gets back
+  * (`spark.conf.set`); a core setting is passed as a `-Dspark.*`
+  * system property, which SparkConf loads on its own.
   */
 object GraftSession {
-  def apply(appName: String = "graft", cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+  /** `SPARK_GRAFT_CPUS` if set, else the host's processor count. */
+  def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  def apply(appName: String = "graft", cores: Int = defaultCores): SparkSession = {
     val spark = SparkSession.builder()
       .withExtensions(new GraftExtensions)
       .master(s"local[$cores]")

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.execution.ExplainMode
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Writes PLANS.md: one row per query summarizing the physical-plan
   * properties that matter at scale (shuffle count, join strategies,
@@ -14,8 +12,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * localCheckpoints, warehouse writes) execute most of their plan
   * DURING the query build, so their terminal plan is just a
   * checkpoint scan — the audit would be blind exactly where plans
-  * are most complex. A QueryExecutionListener therefore collects
-  * every sub-execution fired while the builder runs; their exchanges
+  * are most complex. `SubExecutions` therefore collects every
+  * sub-execution fired while the builder runs; their exchanges
   * and joins fold into the row (the `+Nex/Ks` suffix: N additional
   * exchanges across K eager sub-executions) and each eager query
   * gets an appendix line with its per-sub-plan exchange histogram —
@@ -23,25 +21,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    // AQE off: AdaptiveSparkPlan hides codegen subtrees until runtime,
-    // and the audit wants the full static plan
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val subs = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
-    spark.listenerManager.register(new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = { subs.add(qe); () }
-      override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = ()
-    })
+    // fixed at 8 cores so the committed PLANS.md does not depend on
+    // the host. AQE off: AdaptiveSparkPlan hides codegen subtrees until
+    // runtime, and the audit wants the full static plan
+    val spark = GraftSession("graft-plan-audit", 8)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     val joinKinds = Seq("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
       "BroadcastNestedLoopJoin", "CartesianProduct")
     def count(plan: String, p: String) = ("\\(\\d+\\) " + p).r.findAllIn(plan).size
@@ -63,13 +47,9 @@ object PlanAudit {
     sb ++= "| query | exchanges | joins | pushdown | codegen stages |\n"
     sb ++= "|---|---|---|---|---|\n"
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
-      subs.clear()
-      val df = fn(spark, sfDir)
-      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark)
-      val subPlans = {
-        import scala.jdk.CollectionConverters._
-        subs.asScala.toSeq.map(_.explainString(ExplainMode.fromString("formatted")))
-      }
+      val build = SubExecutions.capture(spark) { fn(spark, sfDir) }
+      val df = build.value
+      val subPlans = build.executions.map(_.explainString(ExplainMode.fromString("formatted")))
       val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
       val exchanges = count(plan, "Exchange")
       val subEx = subPlans.map(count(_, "Exchange"))

@@ -153,7 +153,7 @@ object Probe {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession("probe", 32)
+    val spark = GraftSession("probe")
     if (args.headOption.contains("iter100")) {
       iterProbe(spark)
       spark.stop()

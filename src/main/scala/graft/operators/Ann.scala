@@ -27,11 +27,6 @@ object Ann {
     df.filter(pmod(col("vec_id"), lit(100)) === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
 
-  /** Spread the corpus side before the scoring stage: the test file is
-    * one row group, so cosine scoring would otherwise run single-task
-    * (no-op at cluster scale). */
-  private def spread(df: DataFrame): DataFrame = Partitioning.spread(df)
-
   /** Reduce scored candidates to the k best per query and number them.
     * The custom TopKPerGroup operator keeps a bounded heap map-side, so
     * only k rows per query per partition shuffle — the window that
@@ -49,7 +44,7 @@ object Ann {
   /** Brute-force cosine top-k: exact baseline over a sampled query set. */
   def annBruteforce(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
-    rankTopK(spread(emb).crossJoin(broadcast(queriesOf(emb)))
+    rankTopK(Partitioning.spread(emb).crossJoin(broadcast(queriesOf(emb)))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("cos", Similarity.cosine(col("q_emb"), col("embedding")))
       .select(col("q_id"), col("vec_id"), col("cos")))
@@ -73,7 +68,7 @@ object Ann {
     * as Cluster.packCents.) */
   private def centRanked(emb: DataFrame, cents: DataFrame): DataFrame = {
     val packed = cents.agg(collect_list(struct(col("c_id"), col("c_emb"))).as("cents"))
-    spread(emb).crossJoin(broadcast(packed))
+    Partitioning.spread(emb).crossJoin(broadcast(packed))
       .withColumn("ranked", reverse(array_sort(transform(col("cents"), c =>
         struct(Similarity.cosine(col("embedding"), c.getField("c_emb")).as("c_cos"),
           (-c.getField("c_id")).as("negid"))))))
@@ -187,7 +182,7 @@ object Ann {
     var cents = emb.filter(col("vec_id") < nlist)
       .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
     for (_ <- 1 to iters) {
-      val assigned = spread(emb).crossJoin(broadcast(cents))
+      val assigned = Partitioning.spread(emb).crossJoin(broadcast(cents))
         .withColumn("c_cos", Similarity.cosine(col("embedding"), col("c_emb")))
         .transform(graft.plans.TopK.perGroup(
           Seq("vec_id"), Seq("c_cos" -> false, "c_id" -> true), 1))
@@ -241,7 +236,7 @@ object Ann {
   def mmrDiversify(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
     val emb = Tables.embeddings(spark, sfDir)
     // queries×20 — reused by every greedy stage
-    val pool = s.checkpoint(spread(emb).crossJoin(broadcast(queriesOf(emb)))
+    val pool = s.checkpoint(Partitioning.spread(emb).crossJoin(broadcast(queriesOf(emb)))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("rel", Similarity.cosine(col("q_emb"), col("embedding")))
       .select(col("q_id"), col("vec_id"), col("embedding"), col("rel"))
@@ -301,7 +296,7 @@ object Ann {
     // a pair may collide in several tables — dedup bare (q_id, vec_id)
     // ids, so the distinct's shuffle carries no embedding arrays, then
     // rejoin both embedding payloads for the exact-cosine rerank
-    val cand = bucketed(spread(emb)).join(broadcast(qs), Seq("table", "bucket"))
+    val cand = bucketed(Partitioning.spread(emb)).join(broadcast(qs), Seq("table", "bucket"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"))
       .distinct()
@@ -340,7 +335,7 @@ object Ann {
       df.select(col("vec_id"), posexplode(array(
         (0 until tables).map(t => Similarity.lshBucket(col("embedding"), t)): _*))
         .as(Seq("table", "bucket")))
-    val b = bucketed(spread(emb))
+    val b = bucketed(Partitioning.spread(emb))
     val cand = b.as("a").join(b.as("b"), Seq("table", "bucket"))
       .filter(col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("src_id"), col("b.vec_id").as("nbr_id"))
@@ -379,7 +374,7 @@ object Ann {
     * `aggregate` with a 0.0 seed, bit-identical to the oracle's
     * list_reduce, so the doubles compare exactly un-rounded. */
   def embeddingQuantize(spark: SparkSession, sfDir: String): DataFrame =
-    spread(Tables.embeddings(spark, sfDir))
+    Partitioning.spread(Tables.embeddings(spark, sfDir))
       .withColumn("v", expr("transform(embedding, x -> cast(x as double))"))
       .withColumn("scale", expr(
         "aggregate(v, cast(0 as double), (m, x) -> greatest(m, abs(x))) / 127.0"))

@@ -41,7 +41,8 @@ object Dedup {
     * ngram/minhash dedup and their oracles). Repartitions first: the
     * test corpus is one row group, and shingling + signature hashing
     * are the compute-heavy stages — without the spread they run as a
-    * single task (no-op at cluster scale where scans split naturally). */
+    * single task. The spread is an unconditional full exchange, paid
+    * even where the scan already splits (see `Partitioning.spread`). */
   private[operators] def shingled(df: DataFrame): DataFrame =
     Partitioning.spread(df)
       .withColumn("toks", split(col("text"), " "))

@@ -53,4 +53,13 @@ class ContractSpec extends AnyFunSuite {
     val err = MicroBench.parseArgs(Seq("3", "dedup_ngram", "no_such_query"))
     assert(err.left.exists(e => e.contains("no_such_query") && e.contains("usage:")))
   }
+
+  test("Explain defaults to every query and rejects unknown names with its usage") {
+    val all = SparkEntry.queries.keys.toSeq.sorted
+    assert(Explain.parseArgs(Seq.empty) == Right((all, "/root/testdata/sf0.1")))
+    assert(Explain.parseArgs(Seq("dedup_ngram,ann_pq", "/data/sf1")) ==
+      Right((Seq("dedup_ngram", "ann_pq"), "/data/sf1")))
+    val err = Explain.parseArgs(Seq("dedup_ngram,no_such_query"))
+    assert(err.left.exists(e => e.contains("no_such_query") && e.contains("usage: graft.Explain")))
+  }
 }

@@ -298,74 +298,55 @@ class PlanSpec extends AnyFunSuite {
     // localCheckpoints) execute most of their plan during the query
     // BUILD, so the terminal-plan checks above are blind exactly where
     // plans are most complex. Capture every sub-execution live via
-    // QueryExecutionListener (the PlanAudit mechanism) and pin the
-    // loop-body shape: max exchanges per sub-plan per operator. A
-    // rewrite that adds a shuffle to a round's plan fails here, at any
-    // round count — the bound is per-ROUND, so it is scale-free.
-    val subs = new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.sql.execution.QueryExecution]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          d: Long): Unit = { subs.add(qe); () }
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      // LINEAGE CAPS for the representative LOOPS: each checkpoint
-      // window's sub-plan holds at most (rounds-per-checkpoint ×
-      // per-round shuffles) exchanges, a constant — if the checkpoint
-      // cadence ever breaks, a later window's plan contains every
-      // preceding round and the count grows without bound, which is
-      // exactly the failure mode that stalls a 60-round run at scale.
-      // Bounds = observed window maxima with AQE/tiny-sf slack; they
-      // are scale-free because the window size is fixed in code. The
-      // heaviest ONE-SHOT eager pipelines are checked for capture +
-      // no-cartesian only — their single sub-plan's exchange count
-      // moves with AQE's runtime replanning, so a pin would be noise.
-      // every loop family in the PLANS.md eager appendix has one pinned
-      // representative: HashMin CC (dup_clusters), pagerank/hits power
-      // iterations, BFS frontier, k-core peel, greedy MMR, and ann_pq's
-      // codebook train (Lloyd step + two build guards — ONE captured
-      // sub-plan whose exchange count is iteration-bound by code, 24
-      // observed, constant in corpus size because codebooks are M×K
-      // rows by construction).
-      // ann_pq pin tightened 36 → 12 in r15: the codebooks collect to
-      // the driver and re-enter as literals, deleting the per-book
-      // one-row-aggregate → broadcast → corpus-crossJoin plumbing
-      // (observed max sub-plan: 8 exchanges at sf0.1).
-      val pinned = Map(
-        // graph_hits pin tightened 16 → 12 in r15: hub steps and the
-        // in-degree seed now ride the transposed (u > v) slice of the
-        // cached hash(u) layout — no edge-sized exchange remains in
-        // the matvec path (observed max sub-plan: 10 at sf0.1).
-        "graph_pagerank" -> 16, "graph_bfs" -> 8, "dup_clusters" -> 6,
-        "mmr_diversify" -> 16, "graph_hits" -> 12, "graph_kcore" -> 8,
-        "ann_pq" -> 12,
-        "containment_dup" -> Int.MaxValue)
-      for ((name, maxEx) <- pinned) {
-        subs.clear()
-        SparkEntry.queries(name)(spark, sf)
-        org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark)
-        val plans = {
-          import scala.jdk.CollectionConverters._
-          subs.asScala.toSeq.map(_.explainString(
-            ExplainMode.fromString("formatted")))
-        }
-        assert(plans.nonEmpty, s"$name captured no eager sub-executions " +
-          "— did the operator stop checkpointing, or the listener break?")
-        for (p <- plans) {
-          assert(!p.contains("CartesianProduct"),
-            s"$name eager sub-plan contains a cartesian product")
-          val ex = "\\(\\d+\\) Exchange".r.findAllIn(p).size
-          assert(ex <= maxEx,
-            s"$name checkpoint-window sub-plan grew to $ex exchanges " +
-              s"(lineage cap $maxEx) — is the checkpoint cadence broken?")
-        }
+    // SubExecutions (the PlanAudit mechanism) and pin the loop-body
+    // shape: max exchanges per sub-plan per operator. A rewrite that
+    // adds a shuffle to a round's plan fails here, at any round count
+    // — the bound is per-ROUND, so it is scale-free.
+    // LINEAGE CAPS for the representative LOOPS: each checkpoint
+    // window's sub-plan holds at most (rounds-per-checkpoint ×
+    // per-round shuffles) exchanges, a constant — if the checkpoint
+    // cadence ever breaks, a later window's plan contains every
+    // preceding round and the count grows without bound, which is
+    // exactly the failure mode that stalls a 60-round run at scale.
+    // Bounds = observed window maxima with AQE/tiny-sf slack; they
+    // are scale-free because the window size is fixed in code. The
+    // heaviest ONE-SHOT eager pipelines are checked for capture +
+    // no-cartesian only — their single sub-plan's exchange count
+    // moves with AQE's runtime replanning, so a pin would be noise.
+    // every loop family in the PLANS.md eager appendix has one pinned
+    // representative: HashMin CC (dup_clusters), pagerank/hits power
+    // iterations, BFS frontier, k-core peel, greedy MMR, and ann_pq's
+    // codebook train (Lloyd step + two build guards — ONE captured
+    // sub-plan whose exchange count is iteration-bound by code, 24
+    // observed, constant in corpus size because codebooks are M×K
+    // rows by construction).
+    // ann_pq pin tightened 36 → 12 in r15: the codebooks collect to
+    // the driver and re-enter as literals, deleting the per-book
+    // one-row-aggregate → broadcast → corpus-crossJoin plumbing
+    // (observed max sub-plan: 8 exchanges at sf0.1).
+    val pinned = Map(
+      // graph_hits pin tightened 16 → 12 in r15: hub steps and the
+      // in-degree seed now ride the transposed (u > v) slice of the
+      // cached hash(u) layout — no edge-sized exchange remains in
+      // the matvec path (observed max sub-plan: 10 at sf0.1).
+      "graph_pagerank" -> 16, "graph_bfs" -> 8, "dup_clusters" -> 6,
+      "mmr_diversify" -> 16, "graph_hits" -> 12, "graph_kcore" -> 8,
+      "ann_pq" -> 12,
+      "containment_dup" -> Int.MaxValue)
+    for ((name, maxEx) <- pinned) {
+      val plans = SubExecutions.capture(spark) { SparkEntry.queries(name)(spark, sf) }
+        .executions.map(_.explainString(ExplainMode.fromString("formatted")))
+      assert(plans.nonEmpty, s"$name captured no eager sub-executions " +
+        "— did the operator stop checkpointing, or the listener break?")
+      for (p <- plans) {
+        assert(!p.contains("CartesianProduct"),
+          s"$name eager sub-plan contains a cartesian product")
+        val ex = "\\(\\d+\\) Exchange".r.findAllIn(p).size
+        assert(ex <= maxEx,
+          s"$name checkpoint-window sub-plan grew to $ex exchanges " +
+            s"(lineage cap $maxEx) — is the checkpoint cadence broken?")
       }
-    } finally spark.listenerManager.unregister(listener)
+    }
   }
 
   test("embedding_pca: fully-lazy power iteration, terminal plan bounded") {

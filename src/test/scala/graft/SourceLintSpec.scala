@@ -20,14 +20,17 @@ import scala.jdk.CollectionConverters._
   * until it is either migrated or pinned with a domain bound. */
 class SourceLintSpec extends AnyFunSuite {
 
-  private def mainSources: Seq[(String, String)] = {
-    val root = java.nio.file.Paths.get("src/main/scala")
+  /** (path relative to `dir`, contents) of every Scala file under it. */
+  private def sources(dir: String): Seq[(String, String)] = {
+    val root = java.nio.file.Paths.get(dir)
     java.nio.file.Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
       .map(p => root.relativize(p).toString ->
         new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
       .toSeq
   }
+
+  private def mainSources: Seq[(String, String)] = sources("src/main/scala")
 
   /** Code lines only: scaladoc/comment bodies stripped (the docs
     * legitimately DISCUSS `percentile()`). */
@@ -90,6 +93,31 @@ class SourceLintSpec extends AnyFunSuite {
         codeOnly(src).linesIterator.filter(l => manual.findFirstIn(l).nonEmpty)
           .map(l => s"$f: ${l.trim}") }
     assert(offenders.isEmpty, "manual storage release outside graft.plans.Scope:\n" +
+      offenders.mkString("\n"))
+  }
+
+  test("sessions are built only by GraftSession, listeners registered only by SubExecutions") {
+    // Every main and spec gets its session from GraftSession and its
+    // sub-executions and job counts from SubExecutions, so all tools
+    // time, verify and audit one configuration through one listener
+    // lifetime. Private copies drift: they had already diverged in
+    // core count, AQE and codegen-cache settings. String literals are
+    // stripped too (PlanAudit's PLANS.md header names the listener).
+    val owners = Seq(
+      """SparkSession\s*\.\s*builder""".r -> "main/scala/graft/GraftSession.scala",
+      """QueryExecutionListener|addSparkListener|listenerManager\s*\.\s*register""".r ->
+        "main/scala/graft/SubExecutions.scala")
+    def withoutStrings(src: String): String =
+      src.replaceAll("(?s)\"\"\".*?\"\"\"", "\"\"")
+        .replaceAll("""'(?:[^'\\\n]|\\.)'""", "' '")
+        .replaceAll(""""(?:[^"\\\n]|\\.)*"""", "\"\"")
+    val offenders = for {
+      (f, src) <- sources("src")
+      line <- codeOnly(withoutStrings(src)).linesIterator.toSeq
+      (pattern, owner) <- owners
+      if f != owner && pattern.findFirstIn(line).nonEmpty
+    } yield s"$f: ${line.trim} (belongs in $owner)"
+    assert(offenders.isEmpty, "session or listener set up outside its owner:\n" +
       offenders.mkString("\n"))
   }
 }
