@@ -445,10 +445,11 @@ object EntityMatch {
     * FULL table (window + offset join) and then shuffled a SnWindow×
     * exploded probe table into a rank equi-join — three data-sized
     * exchanges this shape never pays. An eager checkpoint pins one
-    * set of sampled range boundaries for both readers (the
-    * vocabGrowth rule; the interior and edge passes must see the SAME
-    * physical layout or straddling pairs are lost/duplicated); the
-    * lazy result reads it, so it is the result's own storage. */
+    * set of sampled range boundaries for both readers (the rule
+    * `Partitioning.rangePrefix` states; the interior and edge passes
+    * must see the SAME physical layout or straddling pairs are
+    * lost/duplicated); the lazy result reads it, so it is the result's
+    * own storage. */
   private def snPairs(spark: SparkSession, sfDir: String): DataFrame = {
     val session = spark
     import session.implicits._

@@ -356,15 +356,14 @@ object ExactQuantile {
       java.util.Arrays.asList(out.collect(): _*), out.schema)
   }
 
-  /** The per-value-count census + two-phase range-rank pipeline the
-    * bracket path replaced — retained as the differential twin
-    * (DifferentialSpec pins census == bracket == built-in bit-for-bit
-    * on adversarial distributions). Shuffles the full distinct-value
-    * census; correct at any scale but census-sized in transit. */
+  /** The per-value-count census + two-phase range rank
+    * (`Partitioning.rangePrefix`) pipeline the bracket path replaced —
+    * retained as the differential twin (DifferentialSpec pins census
+    * == bracket == built-in bit-for-bit on adversarial distributions).
+    * Shuffles the full distinct-value census; correct at any scale but
+    * census-sized in transit. */
   private[graft] def censusPercentilesMulti(
       df: DataFrame, cols: Seq[String], probes: Seq[Double]): DataFrame = Scope { s =>
-    val spark = df.sparkSession
-    val n = spark.sessionState.conf.numShufflePartitions
     // one scan: (column, value) pairs via a generator, then the
     // map-side-combined per-(column, value) census
     val kv = df.select(explode(map(cols.flatMap(c =>
@@ -375,32 +374,17 @@ object ExactQuantile {
     // re-execute the full scan+explode+aggregate a second time — the
     // sample then reads the cached census (distinct-value-sized)
     val cnt = s.persist(kv.groupBy(col("k"), col("v")).agg(count(lit(1)).as("c")))
-    val parted = s.persist(cnt.repartitionByRange(n, col("k"), col("v"))
-      .withColumn("pid", spark_partition_id()))
-    parted.count()
-    // exclusive prefix per column: in-partition running sum + per-
-    // (column, partition) offsets (a column may span partitions and a
-    // partition may hold several columns — both handled by keying the
-    // offset table on (k, pid))
-    val local = parted.withColumn("lc", coalesce(sum(col("c")).over(
-      Window.partitionBy(col("k"), col("pid")).orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-    val offs = parted.groupBy(col("k"), col("pid")).agg(sum(col("c")).as("pc"))
-      .withColumn("poff", coalesce(sum(col("pc")).over(
-        Window.partitionBy(col("k")).orderBy(col("pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("k"), col("pid"), col("poff"))
-    val ranked = local.join(offs, Seq("k", "pid"))
-      .select(col("k"), col("v"), col("c"), (col("lc") + col("poff")).as("e"))
-    val probeRows = parted.groupBy(col("k")).agg(sum(col("c")).as("n_total"))
-      .select(col("k").as("pk"), col("n_total"),
+    // exclusive prefix per column: value row covers multiset indices
+    // [e, e+c-1] of its column's n_total rows; each row checks itself
+    // against every probe
+    val probed = Partitioning.rangePrefix(s, cnt, Seq("k"), Seq(col("v")), col("c"))
+      .select(col("k"), col("v"), col("c"), col(Partitioning.Prefix).as("e"),
+        col(Partitioning.GroupTotal).as("n_total"),
         posexplode(array(probes.map(lit(_)): _*)).as(Seq("idx", "p")))
       .withColumn("pos", col("p") * (col("n_total") - 1).cast("double"))
       .withColumn("flo", floor(col("pos")).cast("long"))
       .withColumn("fhi", ceil(col("pos")).cast("long"))
-    val matched = ranked.join(broadcast(probeRows),
-      col("k") === col("pk") &&
-        col("e") <= col("fhi") && col("flo") < col("e") + col("c"))
+    val matched = probed.filter(col("e") <= col("fhi") && col("flo") < col("e") + col("c"))
     val perProbe = matched.groupBy(col("k"), col("idx"))
       .agg(max(col("pos")).as("pos"),
         max(col("flo")).as("flo"), max(col("fhi")).as("fhi"),

@@ -60,11 +60,9 @@ object Learn {
     * divide, round 6.
     *
     * The cumulative-below runs on the distinct-score cell table via
-    * the q_decile range-partition two-phase prefix (local window per
-    * partition + partition offsets) — distinct scores are corpus-sized
-    * at 100 TB, so no single-partition window touches them. */
+    * `Partitioning.rangePrefix` — distinct scores are corpus-sized at
+    * 100 TB, so no single-partition window touches them. */
   def aucEval(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
-    import org.apache.spark.sql.expressions.Window
     val lbl = Tables.documents(spark, sfDir)
       .select(col("doc_id"), when(col("lang") === "en", 1L).otherwise(0L).as("y"))
     val scored = TextMetrics.qualityClassifier(spark, sfDir)
@@ -73,26 +71,8 @@ object Learn {
       .join(lbl, Seq("doc_id"))
     val cells = scored.groupBy(col("score"))
       .agg(sum(col("y")).as("np"), sum(lit(1L) - col("y")).as("nn"))
-    val n = spark.sessionState.conf.numShufflePartitions
-    // PERSIST + eager count before fanning out (the vocabGrowth rule):
-    // the rank branch and the offset branch here are ASYMMETRIC
-    // subtrees (offs aggregates parted directly, not local), so
-    // ReusedExchange cannot be relied on to pin one set of sampled
-    // range boundaries — at the sf1 gate the two evaluations landed on
-    // different boundaries and the AUC came out wrong with correct
-    // pos/neg counts. One materialized evaluation pins the pids.
-    val parted = s.persist(cells.repartitionByRange(n, col("score"))
-      .withColumn("pid", spark_partition_id()))
-    parted.count()
-    val wl = Window.partitionBy(col("pid")).orderBy(col("score"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val local = parted.withColumn("lb", coalesce(sum(col("nn")).over(wl), lit(0L)))
-    val offs = parted.groupBy(col("pid")).agg(sum(col("nn")).as("pnn"))
-      .withColumn("poff", coalesce(sum(col("pnn")).over(
-        Window.orderBy(col("pid")).rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("poff"))
-    local.join(offs, Seq("pid"))
-      .select(col("np"), col("nn"), (col("lb") + col("poff")).as("below"))
+    Partitioning.rangePrefix(s, cells, Nil, Seq(col("score")), col("nn"))
+      .select(col("np"), col("nn"), col(Partitioning.Prefix).as("below"))
       .agg(sum(col("np")).as("p"), sum(col("nn")).as("nneg"),
         sum(col("np").cast("decimal(38,0)") * (lit(2L) * col("below") + col("nn")))
           .as("num2"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.expressions.CrossHash
 import graft.functions.Similarity
+import graft.plans.Scope
 import graft.sources.Tables
 
 /** Corpus-composition operators: the sampling / mixing / packing steps
@@ -189,40 +190,20 @@ object Sampling {
     *
     * The per-class quota k = min class count is data-dependent, so the
     * bounded-heap TopK (literal k) does not apply; the per-class rank
-    * instead uses the sorted_blocking range-partition machinery:
-    * repartitionByRange on (lang, draw) gives a global order in which
-    * each class is contiguous, local ranks need only an offset join
-    * against the partition×class cell table — exact global per-class
-    * ranks with ONE data shuffle and no single-partition window over
-    * corpus rows. */
-  def sampleBalanced(spark: SparkSession, sfDir: String): DataFrame = {
-    val n = spark.sessionState.conf.numShufflePartitions
+    * instead comes from `Partitioning.rangePrefix` grouped by lang —
+    * exact global per-class ranks with ONE data shuffle and no
+    * single-partition window over corpus rows. The lazy result reads
+    * the helper's range layout, so that checkpoint is the result's own
+    * storage. */
+  def sampleBalanced(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"),
         Similarity.md5Mod(concat(lit("bal-"), col("doc_id"))).as("draw"))
     val k = docs.groupBy(col("lang")).agg(count(lit(1)).as("cn"))
       .agg(min(col("cn")).as("k"))
-    // ONE materialized evaluation pins ONE set of sampled range
-    // boundaries for both rank branches (the vocabGrowth rule; aucEval
-    // failed the sf1 gate without it). The output is corpus-sized and
-    // lazy, so the layout is an eager checkpoint the result itself
-    // reads — its storage lives and dies with the result, never as a
-    // session cache entry.
-    val parted = docs.repartitionByRange(n, col("lang"), col("draw"), col("doc_id"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    val local = parted.withColumn("lrank", row_number().over(
-      Window.partitionBy(col("pid"), col("lang"))
-        .orderBy(col("draw"), col("doc_id"))).cast("long"))
-    // partition×class cells; the offset window runs over this tiny table
-    val offsets = local.groupBy(col("pid"), col("lang")).agg(count(lit(1)).as("pn"))
-      .withColumn("poff", coalesce(sum(col("pn")).over(
-        Window.partitionBy(col("lang")).orderBy(col("pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("lang"), col("poff"))
-    local.join(offsets, Seq("pid", "lang"))
+    Partitioning.rangePrefix(s, docs, Seq("lang"), Seq(col("draw"), col("doc_id")), lit(1L))
       .crossJoin(broadcast(k))
-      .withColumn("class_rank", col("poff") + col("lrank"))
+      .withColumn("class_rank", col(Partitioning.Prefix) + 1)
       .filter(col("class_rank") <= col("k"))
       .select(col("doc_id"), col("lang"), col("class_rank"))
   }

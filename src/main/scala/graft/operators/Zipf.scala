@@ -35,11 +35,10 @@ object Zipf {
     * The cumulative-distinct never re-counts: each gram charges its
     * FIRST document (min doc_id — a bounded aggregate, so hub grams
     * cost one row), cumulative vocabulary is then a sum of per-doc
-    * new-gram counts. Doc ranks come from the q_decile
-    * range-partition two-phase prefix — no corpus-sized
-    * single-partition window; the decile windows at the end touch 10
-    * rows. Everything is exact longs until the one ln-ratio per
-    * decile row. */
+    * new-gram counts. Doc ranks come from
+    * `Partitioning.rangePrefix` — no corpus-sized single-partition
+    * window; the decile windows at the end touch 10 rows. Everything
+    * is exact longs until the one ln-ratio per decile row. */
   def vocabGrowth(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
     import org.apache.spark.sql.expressions.Window
     val docs = Partitioning.spread(graft.sources.Tables.documents(spark, sfDir))
@@ -61,26 +60,8 @@ object Zipf {
       greatest(size(col("toks")) - (GrowW - 1), lit(0)).cast("long").as("n_tokens"))
     val ds = perDoc.join(newGrams, Seq("doc_id"), "left")
       .na.fill(0L, Seq("new_terms"))
-    val n = spark.sessionState.conf.numShufflePartitions
-    // PERSIST + eager count before fanning out: the local-rank branch
-    // and the offset branch both consume this range exchange, and
-    // RangePartitioning samples its boundaries per EXECUTION — at the
-    // 10× probe the two un-persisted evaluations landed on different
-    // boundaries, so poff and lrank disagreed and an 11th decile
-    // appeared. One materialized evaluation pins the pids.
-    val parted = s.persist(ds.repartitionByRange(n, col("doc_id"))
-      .withColumn("pid", spark_partition_id()))
-    parted.count()
-    val local = parted.withColumn("lrank", row_number().over(
-      Window.partitionBy(col("pid")).orderBy(col("doc_id"))).cast("long"))
-    val offsets = local.groupBy(col("pid")).agg(count(lit(1)).as("pn"))
-      .withColumn("poff", coalesce(sum(col("pn")).over(
-        Window.orderBy(col("pid")).rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("poff"))
-    val total = ds.agg(count(lit(1)).as("n_total"))
-    val byDec = local.join(offsets, Seq("pid"))
-      .crossJoin(broadcast(total))
-      .withColumn("decile", expr("((poff + lrank - 1) * 10) div n_total"))
+    val byDec = Partitioning.rangePrefix(s, ds, Nil, Seq(col("doc_id")), lit(1L))
+      .withColumn("decile", expr(s"(${Partitioning.Prefix} * 10) div ${Partitioning.GroupTotal}"))
       .groupBy(col("decile"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("tok"),
         sum(col("new_terms")).as("nv"))

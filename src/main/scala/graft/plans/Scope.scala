@@ -27,6 +27,9 @@ import org.apache.spark.sql.execution.LogicalRDD
   */
 final class Scope private {
   private var releases: List[Set[Int] => Unit] = Nil
+  /** Checkpoint RDDs already unpersisted: each is freed once, however
+    * many leaves read it or how often it is released. */
+  private var freed = Set.empty[Int]
 
   /** Persist `ds` (lazily, the default level) until the scope ends. */
   def persist[T](ds: Dataset[T]): Dataset[T] = {
@@ -42,14 +45,46 @@ final class Scope private {
     val c = ds.localCheckpoint(eager)
     val own = c.queryExecution.analyzed.collectLeaves()
       .collect { case l: LogicalRDD => l.rdd.id }
-    releases ::= (live => if (!own.exists(live)) Checkpoints.free(c))
+    releases ::= (live => if (!own.exists(live)) free(c))
     c
   }
 
-  /** Free a superseded checkpoint now, ahead of the scope's end — an
-    * iterative loop calls this once the next round's checkpoint is
-    * materialized. Leaf-only, like `Checkpoints.free`. */
-  def free(ds: Dataset[_]): Unit = Checkpoints.free(ds)
+  /** Free the block-manager storage behind a superseded checkpoint now,
+    * ahead of the scope's end — an iterative loop calls this once the
+    * next round's checkpoint is materialized.
+    *
+    * Why eagerly: `Dataset.localCheckpoint` persists its internal RDD
+    * directly in the block manager, OUTSIDE the cache manager —
+    * `clearCache()` never sees it, and the ContextCleaner frees the
+    * blocks only when the RDD object is garbage-collected. A fixpoint
+    * that replaces its checkpoint every round (PageRank, BFS, k-core
+    * peeling, HashMin components) would otherwise hold one superseded
+    * vertex-sized block set per round until a GC happens to run: ~60
+    * retained copies for a converged PageRank at the 100× probe,
+    * executor-memory pressure that evicts or spills later queries'
+    * shuffle blocks long before the driver GCs.
+    *
+    * Why leaf-only: `ds` must BE a bare checkpoint scan (the Dataset
+    * `localCheckpoint()` returned, possibly behind projections), not a
+    * plan that merely CONTAINS one. Freeing a still-live checkpoint
+    * embedded in a larger composition (a join of a checkpoint with a
+    * live table) would drop blocks whose lineage the checkpoint already
+    * truncated, and later actions on the original would die on missing
+    * blocks. So only a plan whose leaves are all LogicalRDDs is freed;
+    * a mixed plan is a no-op. Each RDD is unpersisted once — a self-join
+    * reads it through two leaves, and a loop's early free precedes the
+    * scope's own release. Non-blocking: the loop's next action overlaps
+    * the asynchronous block removal. */
+  def free(ds: Dataset[_]): Unit = {
+    val leaves = ds.queryExecution.analyzed.collectLeaves()
+    if (leaves.nonEmpty && leaves.forall(_.isInstanceOf[LogicalRDD]))
+      leaves.foreach {
+        case l: LogicalRDD if !freed(l.rdd.id) =>
+          freed += l.rdd.id
+          l.rdd.unpersist(blocking = false)
+        case _ => ()
+      }
+  }
 }
 
 object Scope {

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.operators.Partitioning
 import graft.plans.Scope
 import graft.sources.Tables
 
@@ -176,35 +177,17 @@ object Relational {
     * remainder-distribution rule differs subtly; the formula is the
     * portable contract).
     *
-    * The global rank is the range-partition + per-partition-offset
-    * pattern (sortedBlocking's): repartitionByRange may sample
-    * different boundaries run to run, but offset + local rank is exact
-    * for sorted data regardless — no single-partition ntile window at
-    * any scale. */
+    * The global rank is `Partitioning.rangePrefix`'s exact two-phase
+    * prefix — no single-partition ntile window at any scale. */
   def qDecile(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
-    import org.apache.spark.sql.expressions.Window
     val spend = Tables.orders(spark, sfDir)
       .groupBy(col("o_custkey"))
       .agg(sum(dec2(col("o_totalprice"))).cast("decimal(18,2)").as("spend"))
       .select(col("o_custkey").as("custkey"),
         (col("spend") * 100).cast("long").as("cents"))
-    val n = spark.sessionState.conf.numShufflePartitions
-    // persist + eager count pins ONE set of sampled range boundaries
-    // for both rank branches (the vocabGrowth rule; aucEval failed the
-    // sf1 gate without it)
-    val parted = s.persist(spend.repartitionByRange(n, col("cents").desc, col("custkey"))
-      .withColumn("pid", spark_partition_id()))
-    parted.count()
-    val local = parted.withColumn("lrank", row_number().over(
-      Window.partitionBy(col("pid")).orderBy(col("cents").desc, col("custkey"))).cast("long"))
-    val offsets = local.groupBy(col("pid")).agg(count(lit(1)).as("pn"))
-      .withColumn("poff", coalesce(sum(col("pn")).over(
-        Window.orderBy(col("pid")).rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("poff"))
-    val total = spend.agg(count(lit(1)).as("n_total"))
-    val byDec = local.join(offsets, Seq("pid"))
-      .crossJoin(broadcast(total))
-      .withColumn("decile", expr("((poff + lrank - 1) * 10) div n_total"))
+    val byDec = Partitioning.rangePrefix(s, spend, Nil,
+        Seq(col("cents").desc, col("custkey")), lit(1L))
+      .withColumn("decile", expr(s"(${Partitioning.Prefix} * 10) div ${Partitioning.GroupTotal}"))
       .groupBy(col("decile"))
       .agg(count(lit(1)).as("n_customers"),
         sum(col("cents")).as("cents"),

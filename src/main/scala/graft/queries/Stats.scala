@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.Partitioning
 import graft.plans.Scope
 import graft.sources.Tables
 
@@ -297,11 +298,10 @@ object Stats {
     * "how 80/20 is our revenue"): G = (2·Σ i·x᎐ᵢ − (n+1)·Σx)/(n·Σx)
     * over spend sorted ascending, plus the top-decile revenue share.
     * Every term is exact (cents are longs, the rank-weighted sum rides
-    * decimal(38,0), ranks come from the q_decile range-partition
-    * two-phase prefix — no single-partition window over customers);
+    * decimal(38,0), ranks come from `Partitioning.rangePrefix` — no
+    * single-partition window over customers);
     * the Gini and the share are each ONE terminal divide, round 6. */
   def giniConcentration(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
-    import org.apache.spark.sql.expressions.Window
     val d38 = "decimal(38,0)"
     val spend = Tables.orders(spark, sfDir)
       .groupBy(col("o_custkey"))
@@ -309,31 +309,15 @@ object Stats {
         .cast("decimal(18,2)").as("spend"))
       .select(col("o_custkey").as("custkey"),
         (col("spend") * 100).cast("long").as("cents"))
-    val n = spark.sessionState.conf.numShufflePartitions
-    // persist + eager count pins ONE set of sampled range boundaries
-    // for both rank branches (the vocabGrowth rule; aucEval failed the
-    // sf1 gate without it)
-    val parted = s.persist(spend.repartitionByRange(n, col("cents"), col("custkey"))
-      .withColumn("pid", spark_partition_id()))
-    parted.count()
-    val local = parted.withColumn("lrank", row_number().over(
-      Window.partitionBy(col("pid")).orderBy(col("cents"), col("custkey"))).cast("long"))
-    val offsets = local.groupBy(col("pid")).agg(count(lit(1)).as("pn"))
-      .withColumn("poff", coalesce(sum(col("pn")).over(
-        Window.orderBy(col("pid")).rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("poff"))
-    val ranked = local.join(offsets, Seq("pid"))
-      .withColumn("i", col("poff") + col("lrank"))
-    val tot = spend.agg(count(lit(1)).as("n_customers"),
-      sum(col("cents")).as("total_cents"))
-    val small = ranked.crossJoin(broadcast(tot))
-      .agg(max(col("n_customers")).as("n_customers"),
-        max(col("total_cents")).as("sx"),
+    val small = Partitioning.rangePrefix(s, spend, Nil, Seq(col("cents"), col("custkey")), lit(1L))
+      .withColumn("i", col(Partitioning.Prefix) + 1)
+      .agg(max(col(Partitioning.GroupTotal)).as("n_customers"),
+        sum(col("cents")).as("sx"),
         sum(col("i").cast(d38) * col("cents")).as("six"),
         // top decile = the n div 10 highest spenders: rank i (asc)
         // strictly above n − n div 10 — an exact integer cut
-        sum(when(col("i") > col("n_customers") - expr("n_customers div 10"),
-          col("cents")).otherwise(0L)).as("top_cents"))
+        sum(when(col("i") > col(Partitioning.GroupTotal) -
+          expr(s"${Partitioning.GroupTotal} div 10"), col("cents")).otherwise(0L)).as("top_cents"))
       .localCheckpoint()
     small
       .select(col("n_customers"),

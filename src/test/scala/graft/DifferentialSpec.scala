@@ -272,6 +272,49 @@ class DifferentialSpec extends AnyFunSuite {
     }
   }
 
+  test("rangePrefix equals the single-partition window reference under any partitioning") {
+    import org.apache.spark.sql.expressions.Window
+    import graft.operators.Partitioning
+    import graft.plans.Scope
+    // two groups large enough to span several range partitions, 28
+    // small ones sharing partitions, one singleton; the leading order
+    // key is descending and heavily duplicated, (o1, id) is unique
+    val r = new scala.util.Random(11)
+    val sizes = Seq(900, 500) ++ Seq.fill(28)(1 + r.nextInt(12)) :+ 1
+    val rows = sizes.zipWithIndex
+      .flatMap { case (n, g) =>
+        Seq.fill(n)((g.toLong, r.nextInt(5).toLong, r.nextInt(100).toLong)) }
+      .zipWithIndex.map { case ((g, o1, w), id) => (g, o1, id.toLong, w) }
+    val df = rows.toDF("g", "o1", "id", "w")
+    val order = Seq(col("o1").desc, col("id"))
+    def reference(group: Seq[String], weight: org.apache.spark.sql.Column) = {
+      val wg = Window.partitionBy(group.map(col): _*)
+      df.withColumn(Partitioning.Prefix, coalesce(sum(weight).over(
+          wg.orderBy(order: _*).rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+        .withColumn(Partitioning.GroupTotal, sum(weight).over(wg))
+        .collect().toSet
+    }
+    val cases = Seq((Seq("g"), col("w")), (Seq.empty[String], lit(1L)))
+    val want = cases.map { case (g, w) => reference(g, w) }
+    val conf = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val saved = conf.map(spark.conf.get)
+    try for (parts <- Seq(1, 4, 7); aqe <- Seq(true, false)) {
+      spark.conf.set(conf(0), parts.toLong)
+      spark.conf.set(conf(1), aqe)
+      for (((g, w), expected) <- cases.zip(want)) {
+        val got = Scope(s => Partitioning.rangePrefix(s, df, g, order, w).collect())
+        val wrong = got.filterNot(expected)
+        assert(got.length == rows.size && wrong.length == 0,
+          s"partitions=$parts aqe=$aqe group=$g: e.g. ${wrong.take(3).mkString(" ")}")
+      }
+      val empty = Scope { s =>
+        val out = Partitioning.rangePrefix(s, df.filter(lit(false)), Seq("g"), order, col("w"))
+        (out.columns.toSeq, out.count())
+      }
+      assert(empty == (df.columns.toSeq ++ Seq(Partitioning.Prefix, Partitioning.GroupTotal), 0L))
+    } finally conf.zip(saved).foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
   test("SegmentHot kernel equals the per-boundary when-chain on random bounds") {
     // the codegen'd kernel replaced 2m per-boundary when() chains
     // (which silently drop the stage out of codegen past ~30 bounds);

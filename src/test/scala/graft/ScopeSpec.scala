@@ -1,9 +1,14 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.funsuite.AnyFunSuite
-import graft.plans.{Checkpoints, Scope}
+import graft.plans.Scope
 
 /** graft.plans.Scope — the one storage lifetime of operator
   * intermediates: released on success and on failure, except the
@@ -48,14 +53,61 @@ class ScopeSpec extends AnyFunSuite {
     assert(out.count() == 94)
   }
 
-  test("Checkpoints.free frees a bare checkpoint, never a plan mixing one with a live table") {
+  test("Scope.free frees a bare checkpoint, never a plan mixing one with a live table") {
     val cp = spark.range(10).toDF("id").localCheckpoint()
     val id = checkpointRdd(cp)
     val mixed = cp.join(spark.range(5).toDF("id"), "id")
-    Checkpoints.free(mixed)
+    Scope(_.free(mixed))
     assert(persistent.contains(id), "a mixed plan's checkpoint was freed")
     assert(mixed.count() == 5)
-    Checkpoints.free(cp)
+    Scope(_.free(cp))
     assert(!persistent.contains(id))
+  }
+
+  test("each checkpoint is unpersisted once: after a loop's early free, and through a self-join") {
+    // Spark warns once per unpersist of a locally checkpointed RDD, so
+    // the warnings count the unpersists. RDD subclasses log under their
+    // own class names, hence the appender sits on the package logger.
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val truncated = """RDD (\d+) was locally checkpointed""".r.unanchored
+    val appender = new AbstractAppender("scope-spec-unpersist", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = e.getMessage.getFormattedMessage match {
+        case truncated(id) => warned.add(id.toInt)
+        case _ =>
+      }
+    }
+    val logger = "org.apache.spark.rdd"
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    appender.start()
+    val lc = new LoggerConfig(logger, Level.WARN, false)
+    lc.addAppender(appender, Level.WARN, null)
+    ctx.getConfiguration.addLogger(logger, lc)
+    ctx.updateLoggers()
+    val mine = scala.collection.mutable.Buffer.empty[Int]
+    try Scope { s =>
+      var prev = s.checkpoint(spark.range(100).toDF("id"))
+      mine += checkpointRdd(prev)
+      for (_ <- 1 to 3) {
+        val next = s.checkpoint(prev.select((col("id") + 1).as("id")), eager = false)
+        mine += checkpointRdd(next)
+        next.count()
+        s.free(prev)
+        prev = next
+      }
+      val cp = s.checkpoint(spark.range(50).toDF("id"))
+      mine += checkpointRdd(cp)
+      val self = cp.join(cp.select(col("id"), (col("id") * 2).as("twice")), "id")
+      assert(self.count() == 50)
+      s.free(self)
+      assert(prev.count() == 100)
+    } finally {
+      ctx.getConfiguration.removeLogger(logger)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    val ids = warned.asScala.toSeq
+    assert(ids.diff(ids.distinct).isEmpty, s"RDDs unpersisted more than once: ${ids.sorted}")
+    assert(mine.forall(ids.contains), s"checkpoints $mine, warnings ${ids.sorted}")
   }
 }

@@ -96,6 +96,33 @@ class SourceLintSpec extends AnyFunSuite {
       offenders.mkString("\n"))
   }
 
+  test("range layouts and partition ids only in Partitioning.rangePrefix") {
+    // An exact global rank or running sum goes through
+    // Partitioning.rangePrefix, which pins its sampled range boundaries
+    // with one checkpoint. Six hand-copied range-partition + offset
+    // pipelines each had to restate that rule; two got it wrong first
+    // (an 11th vocab_growth decile, a wrong auc_eval AUC).
+    val pinned: Map[String, (Int, String)] = Map(
+      "graft/operators/EntityMatch.scala" -> (1,
+        "snPairs: a sliding window needs only rank differences inside a " +
+          "partition; the 2·w edge rows per partition get their ranks from " +
+          "a mapPartitions pass, not a per-row prefix"))
+    val idiom = """spark_partition_id\s*\(|repartitionByRange\s*\(""".r
+    val found = mainSources
+      .filter(_._1 != "graft/operators/Partitioning.scala")
+      .map { case (f, src) =>
+        f -> codeOnly(src).linesIterator.count(l => idiom.findFirstIn(l).nonEmpty) }
+      .filter(_._2 > 0).toMap
+    val offenders = (found.keySet ++ pinned.keySet).toSeq.sorted.flatMap { f =>
+      val n = found.getOrElse(f, 0)
+      val p = pinned.get(f).fold(0)(_._1)
+      if (n == p) None
+      else Some(s"$f: $n range-layout line(s), $p pinned — call Partitioning.rangePrefix" +
+        (if (n < p) " (or tighten the pin)" else ""))
+    }
+    assert(offenders.isEmpty, "range layout outside Partitioning:\n" + offenders.mkString("\n"))
+  }
+
   test("sessions are built only by GraftSession, listeners registered only by SubExecutions") {
     // Every main and spec gets its session from GraftSession and its
     // sub-executions and job counts from SubExecutions, so all tools

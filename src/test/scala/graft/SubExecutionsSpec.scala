@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.plans.Checkpoints
+import graft.plans.Scope
 
 /** graft.SubExecutions — the one sub-execution recorder: a window sees
   * exactly the SQL executions and jobs its block ran. */
@@ -18,7 +18,7 @@ class SubExecutionsSpec extends AnyFunSuite {
     assert(w.executions.size == 1, ranges(w))
     assert(w.jobs >= 1)
     assert(w.value.count() == 1000)
-    Checkpoints.free(w.value)
+    Scope(_.free(w.value))
   }
 
   test("back-to-back windows share no events") {
