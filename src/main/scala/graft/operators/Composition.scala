@@ -22,9 +22,9 @@ object Composition {
   /** Number of output shards for the deterministic global shuffle. */
   final val NumShards = 8
 
-  /** Draw-range bucket width for the two-phase rank: ord is uniform on
-    * [0, 2^61-1), so `ord div 2^53` is a balanced 256-way range
-    * partition of each shard. */
+  /** Draw-range bucket width of the per-shard rank: ord is uniform on
+    * [0, 2^61-1), so the cell `ord div OrdBucketW` splits each shard
+    * 256 ways with balanced counts. */
   final val OrdBucketW: Long = 1L << 53
 
   /** Deterministic training-data shuffle: every document gets a shard
@@ -34,13 +34,9 @@ object Composition {
     * byte-reproducible across reruns.
     *
     * A per-shard rank is inherently a global sort per shard; a naive
-    * row_number window is ONE task per shard at 100 TB. This is the
-    * seq_pack two-phase pattern on the DRAW RANGE instead: the draw is
-    * uniform on [0, 2^61), so `ord div 2^53` range-buckets each shard
-    * 256 ways with balanced counts; bucket counts aggregate small,
-    * an exclusive prefix runs over the tiny bucket table, and the
-    * within-bucket rank is a bounded window (≈ shard/256 rows). The
-    * only unbounded-partition window runs over 256-row bucket groups.
+    * row_number window is ONE task per shard at 100 TB. The position
+    * is `Partitioning.cellPrefix` over the cell `ord div OrdBucketW`
+    * with weight 1, so no window holds more than ≈ shard/256 rows.
     * Everything is integer-exact; the oracle states the semantics as
     * the single naive per-shard row_number — same positions. */
   def shardAssign(spark: SparkSession, sfDir: String): DataFrame = {
@@ -49,22 +45,9 @@ object Composition {
       pmod(Similarity.md5Mod(concat(lit("shard-"), col("doc_id"))),
         lit(NumShards.toLong)).as("shard"),
       Similarity.md5Mod(concat(lit("ord-"), col("doc_id"))).as("ord"))
-      .withColumn("bucket", expr(s"ord div ${OrdBucketW}L"))
-    val perBucket = docs.groupBy(col("shard"), col("bucket"))
-      .agg(count(lit(1)).as("bn"))
-    val wB = Window.partitionBy(col("shard")).orderBy(col("bucket"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = perBucket
-      .withColumn("boff", coalesce(sum(col("bn")).over(wB), lit(0L)))
-      .select(col("shard"), col("bucket"), col("boff"))
-    val wD = Window.partitionBy(col("shard"), col("bucket"))
-      .orderBy(col("ord"), col("doc_id"))
-    docs
-      // offsets is ≤ NumShards×256 rows — broadcast-sized by
-      // construction, but unhinted: AQE picks broadcast on its own
-      .join(offsets, Seq("shard", "bucket"))
-      .withColumn("pos", col("boff") + row_number().over(wD).cast("long") - 1L)
-      .select(col("doc_id"), col("shard"), col("pos"))
+    Partitioning.cellPrefix(docs, Seq("shard"), expr(s"ord div ${OrdBucketW}L"),
+        Seq(col("ord"), col("doc_id")), lit(1L))
+      .select(col("doc_id"), col("shard"), col(Partitioning.Prefix).as("pos"))
   }
 
   /** Per-source target epochs in TENTHS (source → 10×epochs): the
@@ -99,7 +82,8 @@ object Composition {
     * training set" plan: epoch replication (epochMix's copy counts)
     * explodes into concrete copy instances, every instance draws an
     * independent md5 shard + order, and the within-shard position
-    * comes from the same two-phase draw-range rank as shardAssign —
+    * comes from the same `cellPrefix` rank on the cell
+    * `ord div OrdBucketW` as shardAssign —
     * all FUSED into one Catalyst plan (the pipeline_tokens discipline:
     * the copy fan-out and the draw are row-local stages of the same
     * job, nothing materializes between steps).
@@ -110,16 +94,7 @@ object Composition {
     * independent positions. Deterministic end to end — a rerun
     * regenerates the byte-identical layout. */
   def trainOrder(spark: SparkSession, sfDir: String): DataFrame = {
-    val tenth = CrossHash.P / 10
-    val tCase = epochTenths.foldLeft(lit(null).cast("long")) { case (acc, (s, t)) =>
-      when(col("source") === s, lit(t.toLong)).otherwise(acc)
-    }
-    val inst = Tables.documents(spark, sfDir)
-      .withColumn("tenths", tCase)
-      .withColumn("draw", Similarity.md5Mod(concat(lit("epoch-"), col("doc_id"))))
-      .withColumn("n_copies",
-        expr("tenths div 10") +
-          when(col("draw") < lit(tenth) * expr("tenths % 10"), lit(1L)).otherwise(lit(0L)))
+    val inst = epochMix(spark, sfDir)
       .filter(col("n_copies") >= 1)
       .select(col("doc_id"), col("source"),
         explode(expr("sequence(0L, n_copies - 1)")).as("copy"))
@@ -129,19 +104,10 @@ object Composition {
           lit(NumShards.toLong)).as("shard"),
         Similarity.md5Mod(
           concat(lit("tord-"), col("doc_id"), lit("#"), col("copy"))).as("ord"))
-      .withColumn("bucket", expr(s"ord div ${OrdBucketW}L"))
-    val perBucket = inst.groupBy(col("shard"), col("bucket"))
-      .agg(count(lit(1)).as("bn"))
-    val wB = Window.partitionBy(col("shard")).orderBy(col("bucket"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = perBucket
-      .withColumn("boff", coalesce(sum(col("bn")).over(wB), lit(0L)))
-      .select(col("shard"), col("bucket"), col("boff"))
-    val wD = Window.partitionBy(col("shard"), col("bucket"))
-      .orderBy(col("ord"), col("doc_id"), col("copy"))
-    inst.join(offsets, Seq("shard", "bucket"))
-      .withColumn("pos", col("boff") + row_number().over(wD).cast("long") - 1L)
-      .select(col("doc_id"), col("source"), col("copy"), col("shard"), col("pos"))
+    Partitioning.cellPrefix(inst, Seq("shard"), expr(s"ord div ${OrdBucketW}L"),
+        Seq(col("ord"), col("doc_id"), col("copy")), lit(1L))
+      .select(col("doc_id"), col("source"), col("copy"), col("shard"),
+        col(Partitioning.Prefix).as("pos"))
   }
 
   /** Lags (in replay positions) probed by orderAutocorr. */

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.plans.Scope
 
@@ -287,23 +286,15 @@ object ExactQuantile {
       .groupBy(col("s.ci").as("ci"), col("s.seg").as("seg"), col("s.hv").as("hv"))
       .agg(count(lit(1)).as("c"))
       .select(colName.as("k"), col("seg"), col("hv"), col("c")))
-    // exclusive segment prefixes (≤ 2m+1 segments per column)
-    val segTot = census.groupBy(col("k"), col("seg")).agg(sum(col("c")).as("segc"))
-      .withColumn("soff", coalesce(sum(col("segc")).over(
-        Window.partitionBy(col("k")).orderBy(col("seg"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("k"), col("seg"), col("soff"))
-    // exact global rank of every hot value: segment offset + prefix of
-    // smaller hot values in the same segment (mixed segments keep all
-    // cold rows strictly above their hot rows — object scaladoc §3);
-    // value row covers multiset indices [e, e+c-1]
-    val hotRanked = census.filter(col("hv").isNotNull)
-      .withColumn("lc", coalesce(sum(col("c")).over(
-        Window.partitionBy(col("k"), col("seg")).orderBy(col("hv"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .join(segTot, Seq("k", "seg"))
-      .select(col("k"), col("hv").as("v"), col("c"),
-        (col("lc") + col("soff")).as("e"))
+    // exact global rank of every hot value: `cellPrefix` with the
+    // segment as cell (≤ 2m+1 per column) and hot values ordered inside
+    // it; the one null-hv row of a mixed segment stands for its cold
+    // rows, which lie strictly above its hot rows (object scaladoc §3),
+    // so nulls order last. Value row covers multiset indices [e, e+c-1]
+    val hotRanked = Partitioning.cellPrefix(census, Seq("k"), col("seg"),
+        Seq(col("hv").asc_nulls_last), col("c"))
+      .filter(col("hv").isNotNull)
+      .select(col("k"), col("hv").as("v"), col("c"), col(Partitioning.Prefix).as("e"))
     // probe table from the driver-held counts: a k·m-row LocalRelation
     // (statically bounded — no limit() guard needed). pos/flo/fhi stay
     // Spark expressions so the interpolation arithmetic is the same

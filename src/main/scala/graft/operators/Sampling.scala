@@ -235,27 +235,9 @@ object Sampling {
   /** Token budget per packed training sequence. */
   val SeqBudget: Long = 512L
 
-  /** Range-bucket width for the distributed prefix sum (doc_id div). */
+  /** Cell width of the distributed prefix sum (`doc_id div PackBucket`). */
   val PackBucket: Long = 256L
 
-  /** GPT-style sequence packing: per language, documents are
-    * concatenated in doc_id order and cut into fixed `SeqBudget`-token
-    * sequences; each document reports its global token offset and the
-    * first/last sequence it lands in (documents span cuts — the
-    * concat-and-chunk packing pretraining uses).
-    *
-    * A global running sum is inherently sequential, so a naive
-    * window over `lang` is ONE task per language at 100 TB. This is the
-    * textbook two-phase distributed prefix sum instead:
-    *   1. per (lang, doc_id div 256) bucket: local token sums — a small
-    *      agg whose output is ~N/256 rows;
-    *   2. exclusive prefix over buckets per lang — a window over the
-    *      tiny bucket table;
-    *   3. broadcast the bucket offsets back; a within-bucket window
-    *      (bounded partitions, 256 rows each) finishes the offset.
-    * The only unbounded-partition window runs over buckets, not rows.
-    * All arithmetic is integer-exact; the oracle states the semantics
-    * as the single naive window — same numbers. */
   /** PACKING-EFFICIENCY EVAL over seqPack's layout — the two numbers a
     * packing policy is judged by: capacity utilization (fill_ppm — an
     * exact-integer parts-per-million, the compact_plan float-free
@@ -287,30 +269,27 @@ object Sampling {
           / col("n_docs").cast("double"), 6).as("split_rate"),
         col("max_doc_span"))
 
+  /** GPT-style sequence packing: per language, documents are
+    * concatenated in doc_id order and cut into fixed `SeqBudget`-token
+    * sequences; each document reports its global token offset and the
+    * first/last sequence it lands in (documents span cuts — the
+    * concat-and-chunk packing pretraining uses).
+    *
+    * A global running sum is inherently sequential, so a naive
+    * window over `lang` is ONE task per language at 100 TB. The offset
+    * is `Partitioning.cellPrefix` over the cell `doc_id div PackBucket`
+    * (integer div: exact at any id) with weight `n_tokens`, so no
+    * window over rows holds more than PackBucket documents. All
+    * arithmetic is integer-exact; the oracle states the semantics as
+    * the single naive window — same numbers. */
   def seqPack(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"),
         size(split(col("text"), " ")).cast("long").as("n_tokens"))
-      .withColumn("bucket", expr(s"doc_id div $PackBucket")) // integer div: exact at any id
-
-    val perBucket = docs.groupBy(col("lang"), col("bucket"))
-      .agg(sum(col("n_tokens")).as("bucket_tokens"))
-    val wB = Window.partitionBy(col("lang")).orderBy(col("bucket"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val bucketOffsets = perBucket
-      .withColumn("bucket_offset", coalesce(sum(col("bucket_tokens")).over(wB), lit(0L)))
-      .select(col("lang"), col("bucket"), col("bucket_offset"))
-
-    val wD = Window.partitionBy(col("lang"), col("bucket")).orderBy(col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    docs
-      // bucketOffsets is ~N/256 rows — corpus-proportional, so no
-      // forced broadcast: AQE broadcasts while small, shuffle-joins
-      // (co-partitioned on the same keys) past the limit
-      .join(bucketOffsets, Seq("lang", "bucket"))
+    Partitioning.cellPrefix(docs, Seq("lang"), expr(s"doc_id div $PackBucket"),
+        Seq(col("doc_id")), col("n_tokens"))
       // "offset" is a reserved word in SQL engines; tok_offset travels safely
-      .withColumn("tok_offset",
-        col("bucket_offset") + coalesce(sum(col("n_tokens")).over(wD), lit(0L)))
+      .withColumnRenamed(Partitioning.Prefix, "tok_offset")
       .withColumn("seq_first", expr(s"tok_offset div $SeqBudget"))
       .withColumn("seq_last", expr(s"(tok_offset + n_tokens - 1) div $SeqBudget"))
       .withColumn("n_seqs", col("seq_last") - col("seq_first") + 1)

@@ -14,13 +14,15 @@ import graft.sources.Tables
   * ascending order, a (price, max-size-at-that-price) group is on the
   * front iff its size strictly exceeds every size seen at a lower
   * price. That is a GLOBAL order statistic — and computing it with one
-  * window would mean a single-task global sort. Like seq_pack, it runs
-  * as a two-phase distributed prefix: per-price max (one shuffle,
-  * map-side combined), price-range buckets carry local maxima, an
-  * exclusive prefix-max over the tiny bucket table broadcasts back,
-  * and the within-bucket window sees only its bucket's groups. The
-  * original rows rejoin the surviving (price, size) front — ties on
-  * both axes all keep (no strict dominator exists). */
+  * window would mean a single-task global sort. It runs as the
+  * two-phase distributed prefix of `Partitioning.cellPrefix`, but
+  * combines with `greatest`, not `+`, so it keeps its own copy:
+  * per-price max (one shuffle, map-side combined), price-range buckets
+  * carry local maxima, an exclusive prefix-max over the tiny bucket
+  * table broadcasts back, and the within-bucket window sees only its
+  * bucket's groups. The original rows rejoin the surviving
+  * (price, size) front — ties on both axes all keep (no strict
+  * dominator exists). */
 object Skyline {
 
   /** Price-bucket width for the distributed prefix-max. */

@@ -27,6 +27,41 @@ class CompositionOpsSpec extends AnyFunSuite {
       out.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet)
   }
 
+  test("shard_assign and train_order pos equal a naive per-shard row_number") {
+    import org.apache.spark.sql.expressions.Window
+    import graft.functions.Similarity.md5Mod
+    // the single-window semantics the oracle states: at ~60 docs and
+    // ~120 instances per shard, some of its 256 draw-range cells hold
+    // two or more rows, so a wrong order inside a cell shows as well
+    // as a wrong cell offset
+    def naive(t: org.apache.spark.sql.DataFrame, order: Seq[String]) =
+      t.withColumn("pos", row_number().over(
+          Window.partitionBy(col("shard")).orderBy(order.map(col): _*)).cast("long") - 1L)
+    def draws(t: org.apache.spark.sql.DataFrame, tag: String, key: org.apache.spark.sql.Column) =
+      t.withColumn("shard", pmod(md5Mod(concat(lit(s"${tag}shard-"), key)),
+          lit(Composition.NumShards.toLong)))
+        .withColumn("ord", md5Mod(concat(lit(s"${tag}ord-"), key)))
+    val docs = draws(graft.sources.Tables.documents(spark, sf).select("doc_id"), "",
+      col("doc_id").cast("string"))
+    val wantShard = naive(docs, Seq("ord", "doc_id")).select("doc_id", "shard", "pos")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val gotShard = Composition.shardAssign(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val wrongShard = (gotShard diff wantShard).take(3)
+    assert(wantShard.nonEmpty && gotShard.size == wantShard.size && wrongShard.isEmpty,
+      "shard_assign pos")
+    val inst = Composition.epochMix(spark, sf).filter(col("n_copies") >= 1)
+      .select(col("doc_id"), explode(expr("sequence(0L, n_copies - 1)")).as("copy"))
+    val wantTrain = naive(draws(inst, "t", concat(col("doc_id"), lit("#"), col("copy"))),
+        Seq("ord", "doc_id", "copy")).select("doc_id", "copy", "shard", "pos")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    val gotTrain = Composition.trainOrder(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getLong(2), r.getLong(3), r.getLong(4))).toSet
+    val wrongTrain = (gotTrain diff wantTrain).take(3)
+    assert(wantTrain.nonEmpty && gotTrain.size == wantTrain.size && wrongTrain.isEmpty,
+      "train_order pos")
+  }
+
   test("order_autocorr: md5 order scores near the ideal-shuffle collision rate") {
     val out = Composition.orderAutocorr(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),

@@ -296,22 +296,33 @@ class DifferentialSpec extends AnyFunSuite {
     }
     val cases = Seq((Seq("g"), col("w")), (Seq.empty[String], lit(1L)))
     val want = cases.map { case (g, w) => reference(g, w) }
+    // cellPrefix's cell is the order key (4 - o1)·2048 + id cut every
+    // 3000 keys: the two large groups get cells of up to ~360 rows,
+    // wider than a range partition at 7 partitions, while the small
+    // groups' cells of a few rows share shuffle partitions
+    assert(rows.size < 2048)
+    val cell = expr("((4 - o1) * 2048 + id) div 3000")
+    val prefixes = Seq[(String, (Scope, org.apache.spark.sql.DataFrame, Seq[String],
+        org.apache.spark.sql.Column) => org.apache.spark.sql.DataFrame)](
+      "rangePrefix" -> ((s, d, g, w) => Partitioning.rangePrefix(s, d, g, order, w)),
+      "cellPrefix" -> ((_, d, g, w) => Partitioning.cellPrefix(d, g, cell, order, w)))
     val conf = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
     val saved = conf.map(spark.conf.get)
-    try for (parts <- Seq(1, 4, 7); aqe <- Seq(true, false)) {
+    try for (parts <- Seq(1, 4, 7); aqe <- Seq(true, false); (name, prefix) <- prefixes) {
       spark.conf.set(conf(0), parts.toLong)
       spark.conf.set(conf(1), aqe)
       for (((g, w), expected) <- cases.zip(want)) {
-        val got = Scope(s => Partitioning.rangePrefix(s, df, g, order, w).collect())
+        val got = Scope(s => prefix(s, df, g, w).collect())
         val wrong = got.filterNot(expected)
         assert(got.length == rows.size && wrong.length == 0,
-          s"partitions=$parts aqe=$aqe group=$g: e.g. ${wrong.take(3).mkString(" ")}")
+          s"$name partitions=$parts aqe=$aqe group=$g: e.g. ${wrong.take(3).mkString(" ")}")
       }
       val empty = Scope { s =>
-        val out = Partitioning.rangePrefix(s, df.filter(lit(false)), Seq("g"), order, col("w"))
+        val out = prefix(s, df.filter(lit(false)), Seq("g"), col("w"))
         (out.columns.toSeq, out.count())
       }
-      assert(empty == (df.columns.toSeq ++ Seq(Partitioning.Prefix, Partitioning.GroupTotal), 0L))
+      assert(empty == (df.columns.toSeq ++ Seq(Partitioning.Prefix, Partitioning.GroupTotal), 0L),
+        s"$name empty input")
     } finally conf.zip(saved).foreach { case (k, v) => spark.conf.set(k, v) }
   }
 

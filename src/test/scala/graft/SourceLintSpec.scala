@@ -97,30 +97,48 @@ class SourceLintSpec extends AnyFunSuite {
   }
 
   test("range layouts and partition ids only in Partitioning.rangePrefix") {
-    // An exact global rank or running sum goes through
-    // Partitioning.rangePrefix, which pins its sampled range boundaries
-    // with one checkpoint. Six hand-copied range-partition + offset
-    // pipelines each had to restate that rule; two got it wrong first
-    // (an 11th vocab_growth decile, a wrong auc_eval AUC).
-    val pinned: Map[String, (Int, String)] = Map(
+    // An exact global rank or running sum goes through Partitioning:
+    // cellPrefix owns the exclusive offset window every running sum
+    // shares, and rangePrefix pins its sampled range boundaries with
+    // one checkpoint before calling it. Six hand-copied range-partition
+    // + offset pipelines each had to restate the pinning rule; two got
+    // it wrong first (an 11th vocab_growth decile, a wrong auc_eval
+    // AUC). Four more copied the offset window over fixed value
+    // buckets (shard_assign, train_order, seq_pack, the bracket ranks).
+    val rangeLayout = """spark_partition_id\s*\(|repartitionByRange\s*\(""".r -> Map(
       "graft/operators/EntityMatch.scala" -> (1,
         "snPairs: a sliding window needs only rank differences inside a " +
           "partition; the 2·w edge rows per partition get their ranks from " +
           "a mapPartitions pass, not a per-row prefix"))
-    val idiom = """spark_partition_id\s*\(|repartitionByRange\s*\(""".r
-    val found = mainSources
-      .filter(_._1 != "graft/operators/Partitioning.scala")
-      .map { case (f, src) =>
-        f -> codeOnly(src).linesIterator.count(l => idiom.findFirstIn(l).nonEmpty) }
-      .filter(_._2 > 0).toMap
-    val offenders = (found.keySet ++ pinned.keySet).toSeq.sorted.flatMap { f =>
-      val n = found.getOrElse(f, 0)
-      val p = pinned.get(f).fold(0)(_._1)
-      if (n == p) None
-      else Some(s"$f: $n range-layout line(s), $p pinned — call Partitioning.rangePrefix" +
-        (if (n < p) " (or tighten the pin)" else ""))
+    val exclusivePrefix = """unboundedPreceding\s*,\s*-1""".r -> Map(
+      "graft/operators/Skyline.scala" -> (2,
+        "paretoFront: a prefix-MAX over price buckets and inside them — it " +
+          "combines with greatest, not +"),
+      "graft/operators/Dedup.scala" -> (1,
+        "per-doc coverage: a running max of duplicate-window ends inside one " +
+          "document's duplicated windows"),
+      "graft/queries/Events.scala" -> (1,
+        "intervalMerge: a running max of interval ends inside one user's events"),
+      "graft/operators/Experiment.scala" -> (1,
+        "survivalCurve: KM at-risk counts over the calendar-bounded day-cell table"),
+      "graft/operators/EntityMatch.scala" -> (1,
+        "snPairs: partition offsets over the per-partition edge table of its " +
+          "mapPartitions pass"))
+    val offenders = Seq(rangeLayout, exclusivePrefix).flatMap { case (idiom, pinned) =>
+      val found = mainSources
+        .filter(_._1 != "graft/operators/Partitioning.scala")
+        .map { case (f, src) =>
+          f -> codeOnly(src).linesIterator.count(l => idiom.findFirstIn(l).nonEmpty) }
+        .filter(_._2 > 0).toMap
+      (found.keySet ++ pinned.keySet).toSeq.sorted.flatMap { f =>
+        val n = found.getOrElse(f, 0)
+        val p = pinned.get(f).fold(0)(_._1)
+        if (n == p) None
+        else Some(s"$f: $n line(s) matching /$idiom/, $p pinned — call " +
+          "Partitioning.cellPrefix or rangePrefix" + (if (n < p) " (or tighten the pin)" else ""))
+      }
     }
-    assert(offenders.isEmpty, "range layout outside Partitioning:\n" + offenders.mkString("\n"))
+    assert(offenders.isEmpty, "running-sum idiom outside Partitioning:\n" + offenders.mkString("\n"))
   }
 
   test("sessions are built only by GraftSession, listeners registered only by SubExecutions") {
