@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scratch main for timing plan variants (dev tool). Current shape:
@@ -9,20 +10,6 @@ import org.apache.spark.sql.functions._
   * across shards so the dedup graph gets genuinely dense) and times
   * each operator end-to-end. */
 object Probe {
-
-  /** A build is complete only if Spark committed it: the directory
-    * appears before the job finishes, so a killed build would be
-    * silently reused as truncated dimension data if we checked bare
-    * existence — test for the _SUCCESS commit marker instead (the same
-    * discipline Restart.runResumable uses for its own outputs). */
-  private def committed(dir: String): Boolean =
-    java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS"))
-
-  /** Multi-output build blocks must gate on EVERY table they write: a
-    * kill between the block's first and last commit would otherwise
-    * leave the first table's _SUCCESS satisfying the guard while a
-    * sibling is truncated or absent. */
-  private def committedAll(dirs: String*): Boolean = dirs.forall(committed)
 
   /** Iterative-operator scale probe (`runMain graft.Probe iter100`):
     * dup_clusters and graph_pagerank are the only operators whose cost
@@ -91,65 +78,34 @@ object Probe {
     * tables are unioned id-shifted copies (shift constants far above
     * any real key range so shards never collide), dimensions stay
     * single copies — the realistic fixed-dim-under-growing-fact shape.
-    * Resumable per table via the _SUCCESS commit marker. */
+    * Each table commits on its own through `Materialize.at`, so a killed
+    * build resumes with exactly the tables it had not committed. */
   private def buildShards(spark: org.apache.spark.sql.SparkSession,
       sf: String, big: String, shards: Int): Unit = {
-    if (!committedAll(s"$big/documents.parquet", s"$big/embeddings.parquet")) {
-      val docs = graft.sources.Tables.documents(spark, sf)
-      (0 until shards).map(i => docs
-          .withColumn("doc_id", col("doc_id") + lit(i * 10000000L)))
+    import graft.sources.{Materialize, Tables}
+    def table(t: String)(df: => DataFrame): Unit =
+      Materialize.at(spark, big, s"$t.parquet")(_ => df)
+    def sharded(df: DataFrame, shifts: (String, Long)*): DataFrame =
+      (0 until shards).map(i => shifts.foldLeft(df) { case (d, (c, step)) =>
+          d.withColumn(c, col(c) + lit(i * step)) })
         .reduce(_ unionByName _)
-        .write.mode("overwrite").parquet(s"$big/documents.parquet")
-      val emb = graft.sources.Tables.embeddings(spark, sf)
-      (0 until shards).map(i => emb
-          .withColumn("vec_id", col("vec_id") + lit(i * 10000000L)))
-        .reduce(_ unionByName _)
-        .write.mode("overwrite").parquet(s"$big/embeddings.parquet")
-    }
-    if (!committed(s"$big/events.parquet")) {
-      // 10M events / 1.5k users: ids and users shift per shard so the
-      // funnel/retention state fans out instead of piling on 150 keys
-      val ev = graft.sources.Tables.events(spark, sf)
-      (0 until shards).map(i => ev
-          .withColumn("event_id", col("event_id") + lit(i * 100000000L))
-          .withColumn("user_id", col("user_id") + lit(i * 10000L)))
-        .reduce(_ unionByName _)
-        .write.mode("overwrite").parquet(s"$big/events.parquet")
-    }
-    if (!committed(s"$big/lineitem.parquet")) {
-      val li = graft.sources.Tables.lineitem(spark, sf)
-      (0 until shards).map(i => li
-          .withColumn("l_orderkey", col("l_orderkey") + lit(i * 100000000L)))
-        .reduce(_ unionByName _)
-        .write.mode("overwrite").parquet(s"$big/lineitem.parquet")
-    }
-
-    if (!committedAll(s"$big/orders.parquet", s"$big/customer.parquet",
-        s"$big/part.parquet")) {
-      // orders/customer shift together so the custkey join keys stay
-      // consistent; part stays a single copy (lineitem keeps original
-      // partkeys — a fixed dim under a 10× fact, the realistic shape)
-      val ord = graft.sources.Tables.orders(spark, sf)
-      (0 until shards).map(i => ord
-          .withColumn("o_orderkey", col("o_orderkey") + lit(i * 100000000L))
-          .withColumn("o_custkey", col("o_custkey") + lit(i * 10000000L)))
-        .reduce(_ unionByName _)
-        .write.mode("overwrite").parquet(s"$big/orders.parquet")
-      val cust = graft.sources.Tables.customer(spark, sf)
-      (0 until shards).map(i => cust
-          .withColumn("c_custkey", col("c_custkey") + lit(i * 10000000L)))
-        .reduce(_ unionByName _)
-        .write.mode("overwrite").parquet(s"$big/customer.parquet")
-      graft.sources.Tables.part(spark, sf)
-        .write.mode("overwrite").parquet(s"$big/part.parquet")
-    }
+    table("documents")(sharded(Tables.documents(spark, sf), "doc_id" -> 10000000L))
+    table("embeddings")(sharded(Tables.embeddings(spark, sf), "vec_id" -> 10000000L))
+    // 10M events / 1.5k users: ids and users shift per shard so the
+    // funnel/retention state fans out instead of piling on 150 keys
+    table("events")(sharded(Tables.events(spark, sf),
+      "event_id" -> 100000000L, "user_id" -> 10000L))
+    table("lineitem")(sharded(Tables.lineitem(spark, sf), "l_orderkey" -> 100000000L))
+    // orders/customer shift together so the custkey join keys stay
+    // consistent; part stays a single copy (lineitem keeps original
+    // partkeys — a fixed dim under a 10× fact, the realistic shape)
+    table("orders")(sharded(Tables.orders(spark, sf),
+      "o_orderkey" -> 100000000L, "o_custkey" -> 10000000L))
+    table("customer")(sharded(Tables.customer(spark, sf), "c_custkey" -> 10000000L))
     // label/dimension tables stay single copies: fixed dims under a
-    // 10× fact side (needed by enrich_wide / q5 / entity ops); checked
-    // per table so a killed build resumes with exactly the missing ones
-    for (t <- Seq("nation", "region", "supplier"))
-      if (!committed(s"$big/$t.parquet"))
-        graft.sources.Tables.table(spark, sf, t)
-          .write.mode("overwrite").parquet(s"$big/$t.parquet")
+    // 10× fact side (needed by enrich_wide / q5 / entity ops)
+    for (t <- Seq("part", "nation", "region", "supplier"))
+      table(t)(Tables.table(spark, sf, t))
   }
 
   def main(args: Array[String]): Unit = {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.Similarity
 import graft.plans.Scope
-import graft.sources.Tables
+import graft.sources.{Materialize, Tables}
 
 /** Deduplication operators for a training-data pipeline, each bounding
   * its candidate-pair set so nothing materializes O(n²) rows:
@@ -280,38 +280,12 @@ object Dedup {
   def dedupMinhash(spark: SparkSession, sfDir: String): DataFrame =
     minhashPairs(spark, sfDir)
 
-  /** Suite-run pair warehouse (the graph-family edge pattern): FOUR
-    * queries consume the identical verified minhash pair table
-    * (dedup_minhash, dup_clusters → split_holdout, pair_bleu), and
-    * each would otherwise replay the full shingle→signature→band→
-    * verify derivation. First touch per (session, dataset) derives
-    * once and materializes the (tiny: pair-count-sized) result to
-    * temp parquet; later touches scan the file. File-backed because
-    * the bench harnesses clear the Spark cache between queries. */
-  private val mhMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Force the verified minhash-pair warehouse build — see
-    * graft.Warehouses.prebuild. */
-  private[graft] def prebuild(spark: SparkSession, sfDir: String): Unit =
-    minhashPairs(spark, sfDir)
-
-  private def minhashPairs(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = mhMemo.computeIfAbsent(
-      s"${System.identityHashCode(spark)}|$sfDir",
-      _ => {
-        val d = java.nio.file.Files.createTempDirectory("graft_mh_pairs")
-        sys.addShutdownHook {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(d).iterator().asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        }
-        Scope(s => deriveMinhashPairs(spark, sfDir, s)
-          .write.mode("overwrite").parquet(d.toString))
-        d.toString
-      })
-    spark.read.parquet(dir)
-  }
+  /** Suite-run pair warehouse: FOUR queries consume the identical
+    * verified minhash pair table (dedup_minhash, dup_clusters →
+    * split_holdout, pair_bleu), and each would otherwise replay the
+    * full shingle→signature→band→verify derivation. */
+  private def minhashPairs(spark: SparkSession, sfDir: String): DataFrame =
+    Materialize.warehouse(spark, sfDir, "minhash_pairs")(deriveMinhashPairs(spark, sfDir, _))
 
   /** The verified minhash pair derivation. Its signature table is
     * persisted in the caller's scope, so a caller must materialize the

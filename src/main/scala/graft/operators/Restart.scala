@@ -1,47 +1,34 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.Materialize
 
 /** Per-stage checkpoint/resume for multi-stage pipeline runs — the
   * engine's form of the reference's resume-on-crash behavior
   * (script/itemtoid.py:307 keeps a log of processed catalogues and
   * skips them on relaunch; script/wd2tei.py:115 same per file).
   *
-  * Each stage materializes to `<ckptDir>/<stage>` parquet and commits
-  * by writing a `<stage>._COMPLETE` marker AFTER the write returns —
-  * a crash mid-write leaves no marker, so the relaunch rebuilds
-  * exactly the unfinished stage and reuses every completed one.
-  * Downstream stages read the materialized parquet, not the live
+  * Each stage materializes to `<ckptDir>/<stage>` parquet through
+  * `sources.Materialize.at`, which commits it with a marker written
+  * AFTER the data: a crash mid-write leaves no marker, so the relaunch
+  * rebuilds exactly the unfinished stage and reuses every completed
+  * one. Downstream stages read the materialized parquet, not the live
   * lineage, so a resumed run and a straight-through run execute the
-  * same plans stage-by-stage.
-  *
-  * Paths go through the Hadoop FileSystem API, so ckptDir may be
-  * local, HDFS, or an object store — on a 1000-executor cluster a
-  * multi-hour run checkpoints to the job's scratch bucket and a
-  * preempted driver resumes losing at most one stage. */
+  * same plans stage-by-stage. ckptDir may be local, HDFS, or an object
+  * store — on a 1000-executor cluster a multi-hour run checkpoints to
+  * the job's scratch bucket and a preempted driver resumes losing at
+  * most one stage. */
 object Restart {
-
-  private def fs(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def marker(dir: String, name: String) = new Path(dir, s"$name._COMPLETE")
 
   /** True if `name` committed in a previous (possibly crashed) run. */
   def isComplete(spark: SparkSession, ckptDir: String, name: String): Boolean =
-    fs(spark, ckptDir).exists(marker(ckptDir, name))
+    Materialize.committed(spark, ckptDir, name).isDefined
 
   /** Run `build` unless the stage already committed; either way return
     * the stage's output read back from the checkpoint. */
   def stage(spark: SparkSession, ckptDir: String, name: String)
-      (build: => DataFrame): DataFrame = {
-    val path = new Path(ckptDir, name).toString
-    if (!isComplete(spark, ckptDir, name)) {
-      build.write.mode("overwrite").parquet(path)
-      fs(spark, ckptDir).create(marker(ckptDir, name), true).close()
-    }
-    spark.read.parquet(path)
-  }
+      (build: => DataFrame): DataFrame =
+    Materialize.at(spark, ckptDir, name)(_ => build)
 
   /** Done-log resume — the reference's `Logs.log_done`
     * (script/utils/classes.py:23): itemtoid/sparql append each processed

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
+import graft.sources.{Materialize, Tables}
 
 /** Suite-run TERM-FREQUENCY census warehouse — the (doc, term, tf)
   * table that half the corpus-analysis suite starts from
@@ -10,10 +10,8 @@ import graft.sources.Tables
   * Deriving it per query replays the corpus-sized token explode and
   * its first shuffle every time; a 100 TB deployment maintains this
   * table ALONGSIDE the corpus (it IS the inverted-index fact table).
-  * First touch per (session, dataset) derives once and materializes
-  * to temp parquet; later touches scan the pruned columnar file.
-  * File-backed because the bench harnesses clear the Spark cache
-  * between queries (the graph-edge warehouse rationale).
+  * First touch per (session, dataset) derives it once into a
+  * `Materialize.warehouse`; later touches scan the pruned columnar file.
   *
   * Census definition (shared EXACTLY by every consumer): tokens =
   * split(text, ' ') minus empty strings; tf = exact occurrence count
@@ -25,35 +23,15 @@ import graft.sources.Tables
   * every DuckDB oracle, written against raw text, green. */
 object TermCensus {
 
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** (doc_id, source, t, tf) — see object doc for the exact census
     * contract. */
-  def docTermTf(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = memo.computeIfAbsent(
-      s"${System.identityHashCode(spark)}|$sfDir",
-      _ => {
-        val d = java.nio.file.Files.createTempDirectory("graft_term_census")
-        sys.addShutdownHook {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(d).iterator().asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        }
-        Partitioning.spread(Tables.documents(spark, sfDir))
-          .select(col("doc_id"), col("source"),
-            explode(split(col("text"), " ")).as("t"))
-          .filter(col("t") =!= "")
-          .groupBy(col("doc_id"), col("source"), col("t"))
-          .agg(count(lit(1)).as("tf"))
-          .write.mode("overwrite").parquet(d.toString)
-        d.toString
-      })
-    spark.read.parquet(dir)
-  }
-
-  /** Force the census build for this (session, dataset) — see
-    * graft.Warehouses.prebuild. */
-  private[graft] def prebuild(spark: SparkSession, sfDir: String): Unit =
-    docTermTf(spark, sfDir)
+  def docTermTf(spark: SparkSession, sfDir: String): DataFrame =
+    Materialize.warehouse(spark, sfDir, "term_census") { _ =>
+      Partitioning.spread(Tables.documents(spark, sfDir))
+        .select(col("doc_id"), col("source"),
+          explode(split(col("text"), " ")).as("t"))
+        .filter(col("t") =!= "")
+        .groupBy(col("doc_id"), col("source"), col("t"))
+        .agg(count(lit(1)).as("tf"))
+    }
 }

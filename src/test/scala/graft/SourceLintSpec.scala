@@ -165,4 +165,23 @@ class SourceLintSpec extends AnyFunSuite {
     assert(offenders.isEmpty, "session or listener set up outside its owner:\n" +
       offenders.mkString("\n"))
   }
+
+  test("table reads only in sources/, temp roots and exit hooks only in Materialize") {
+    // Every parquet read goes through graft.sources, so a read-back of a
+    // materialized table gets the schema its commit marker recorded and
+    // runs no inference job. Seven hand-copied build/write/read-back
+    // memos (six warehouses, Restart.stage) each had their own temp
+    // directory, shutdown hook and schema-inferring read.
+    val read = """\.read\b\s*\.|\bspark\s*\.\s*read\b""".r
+    val tempRoot = """createTempDirectory|addShutdownHook""".r
+    val offenders = mainSources.flatMap { case (f, src) =>
+      codeOnly(src).linesIterator.collect {
+        case l if read.findFirstIn(l).nonEmpty && !f.startsWith("graft/sources/") =>
+          s"$f: ${l.trim} (read through graft.sources)"
+        case l if tempRoot.findFirstIn(l).nonEmpty && f != "graft/sources/Materialize.scala" =>
+          s"$f: ${l.trim} (materialize through Materialize.warehouse)"
+      }
+    }
+    assert(offenders.isEmpty, "read or temp root outside its owner:\n" + offenders.mkString("\n"))
+  }
 }
