@@ -3,12 +3,26 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  private val usage = "usage: graft.Verify <sfDir> <outDir> [query[,query...]]"
+
+  /** (sfDir, outDir, optional query filter — the local dev loop), or a
+    * usage error naming unregistered names: a typo would check nothing. */
+  private[graft] def parseArgs(args: Seq[String])
+      : Either[String, (String, String, Option[Set[String]])] = args match {
+    case Seq(sfDir, outDir) => Right((sfDir, outDir, None))
+    case Seq(sfDir, outDir, names) =>
+      MicroBench.knownQueries(names.split(",").toSeq, usage)
+        .map(ns => (sfDir, outDir, Some(ns.toSet)))
+    case _ => Left(usage)
+  }
+
   def main(args: Array[String]): Unit = {
-    val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated query-name filter (local dev
-    // loop — the driver always runs the full suite)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+    val (sfDir, outDir, only) = parseArgs(args.toSeq) match {
+      case Right(parsed) => parsed
+      case Left(err) =>
+        System.err.println(err)
+        sys.exit(2)
+    }
     val spark = GraftSession("graft-verify")
     new java.io.File(outDir).mkdirs()
     // pay every shared warehouse build up front (full-suite runs touch

@@ -47,8 +47,11 @@ object Dedup {
     Partitioning.spread(df)
       .withColumn("toks", split(col("text"), " "))
       .filter(size(col("toks")) >= 3)
-      .withColumn("shingles", array_distinct(expr(
-        "transform(sequence(1, size(toks)-2), i -> concat_ws(' ', element_at(toks,i), element_at(toks,i+1), element_at(toks,i+2)))")))
+      .withColumn("shingles", trigrams("toks"))
+
+  private def trigrams(toks: String): Column = expr(
+    s"array_distinct(transform(sequence(1, size($toks)-2), i -> " +
+      s"concat_ws(' ', element_at($toks,i), element_at($toks,i+1), element_at($toks,i+2))))")
 
   /** Exact n-gram Jaccard near-dup pairs via PREFIX FILTERING (the
     * AllPairs/PPJoin family, Bayardo et al. WWW'07) — COMPLETE for
@@ -100,19 +103,15 @@ object Dedup {
     * VERIFY-STAGE PAYLOAD: candidate pairs never carry shingle arrays.
     * Each doc's shingle SET gets a 128-bit content key — two
     * independent-seed xxhash64 draws over the sorted hash array,
-    * computed directly on the array (no per-doc string render: the
-    * former md5-over-concat_ws built an ~20·n-char string per doc just
-    * to hash it, and shuffled 32-char hex keys; two longs hash the
-    * same identity at a fraction of the CPU and half the key bytes).
-    * The key is internal only — never oracle-visible — and a key
-    * collision needs BOTH 64-bit draws to collide on the same pair
-    * (~2^-128 per distinct-content pair; the 61-bit shingle hashes
-    * underneath carry far more collision mass). The pair stream ships
-    * keys only (~250× lighter than the ~n-long arrays it replaces),
-    * and the exact sorted-merge Jaccard runs once per DISTINCT content
-    * pair — the representative arrays join against a key-deduplicated
-    * side. On a clone-heavy
-    * corpus (the sf10 worst case: 100 identical copies per doc, ~247M
+    * computed directly on the array. The key is internal only — never
+    * oracle-visible — and a key collision needs BOTH 64-bit draws to
+    * collide on the same pair (~2^-128 per distinct-content pair; the
+    * 61-bit shingle hashes underneath carry far more collision mass).
+    * The pair stream ships keys only (~250× lighter than the ~n-long
+    * arrays it replaces), and the exact sorted-merge Jaccard runs once
+    * per DISTINCT content pair — the representative arrays join against
+    * a key-deduplicated side. On a clone-heavy corpus (the sf10 worst
+    * case: 100 identical copies per doc, ~247M
     * candidate pairs) the distinct-content pair set is smaller by the
     * clone multiplicity SQUARED, which is what turns the verify
     * stage's former disk-exceeding SMJ spill into a bounded join; on
@@ -173,15 +172,9 @@ object Dedup {
         least(col("n_a"), col("n_b")) * 2 >= greatest(col("n_a"), col("n_b")))
       .select(col("doc_a"), col("doc_b"), col("sk_a"), col("sk_b"))
       .distinct()
-    // ADAPTIVE VERIFY (the r14 regression fix): the distinct-content
-    // rep path pays a corpus-array dropDuplicates(sk) shuffle, a pair
-    // distinct, and a fan-back join — a trade that only wins when
-    // clone multiplicity is high (pairs per content pair shrink by the
-    // multiplicity SQUARED; the sf10 spill case). On a clone-light
-    // corpus it is pure overhead over verifying each pair against its
-    // own arrays. One aggregate over the (checkpointed) base measures the
-    // clone ratio — rows per distinct shingle-set key — and picks the
-    // shape; ±2% HLL error around the 1.5 cutoff only ever flips
+    // ADAPTIVE VERIFY (trade-off on CloneRepVerifyRatio): one aggregate
+    // over the (checkpointed) base measures the clone ratio and picks the
+    // shape; ±2% HLL error around the cutoff only ever flips
     // near-break-even corpora where both shapes cost the same. Both
     // branches emit identical rows: sh is a function of sk, so a
     // rep's Jaccard IS every member pair's Jaccard.
@@ -199,26 +192,42 @@ object Dedup {
       // twice. The per-pair route below reads it once.
       val pinned = s.checkpoint(keyed, eager = false)
       val reps = base.select(col("sk"), col("sh")).dropDuplicates("sk")
-      val verified = pinned.select(col("sk_a"), col("sk_b")).distinct()
-        .join(reps.select(col("sk").as("sk_a"), col("sh").as("sh_a")), Seq("sk_a"))
-        .join(reps.select(col("sk").as("sk_b"), col("sh").as("sh_b")), Seq("sk_b"))
-        .withColumn("jaccard", Similarity.sortedJaccard(col("sh_a"), col("sh_b")))
-        .filter(col("jaccard") >= 0.5)
-        .select(col("sk_a"), col("sk_b"), col("jaccard"))
+      val verified = nearDups(pinned.select(col("sk_a"), col("sk_b")).distinct(),
+        reps, "sk", "sk_a", "sk_b")
       pinned.join(verified, Seq("sk_a", "sk_b"))
         .select(col("doc_a"), col("doc_b"), col("jaccard"))
     } else {
       // clone-light: one exact Jaccard per pair, arrays attached by id
-      keyed
-        .join(base.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")),
-          Seq("doc_a"))
-        .join(base.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")),
-          Seq("doc_b"))
-        .withColumn("jaccard", Similarity.sortedJaccard(col("sh_a"), col("sh_b")))
-        .filter(col("jaccard") >= 0.5)
-        .select(col("doc_a"), col("doc_b"), col("jaccard"))
+      nearDups(keyed, base.select(col("doc_id"), col("sh")), "doc_id", "doc_a", "doc_b")
     }
   }
+
+  /** Jaccard threshold at which a verified pair counts as a near-dup. */
+  private final val NearDupJaccard = 0.5
+
+  /** The VERIFY half of every filter-and-verify operator here: a
+    * blocking join (prefix shingles, LSH bands) yields candidate
+    * `pairs` of bare keys `a`/`b`, so the blocking join and its distinct
+    * shuffle two ids per pair; only then does each side's sorted hash
+    * set `sh` (and every other non-`key` column of `sets`, suffixed
+    * `_a`/`_b`) join on — one equi-join per side, broadcast while
+    * `sets` is small — and `sortedJaccard` merges the two sorted arrays
+    * in O(n+m). Every candidate is returned, unfiltered. */
+  private def verify(pairs: DataFrame, sets: DataFrame, key: String,
+      a: String, b: String): DataFrame = {
+    def side(k: String, x: String) =
+      sets.select(sets.columns.toSeq.map(c => col(c).as(if (c == key) k else s"${c}_$x")): _*)
+    pairs.join(side(a, "a"), Seq(a)).join(side(b, "b"), Seq(b))
+      .withColumn("jaccard", Similarity.sortedJaccard(col("sh_a"), col("sh_b")))
+  }
+
+  /** The candidates that [[verify]] keeps: (a, b, jaccard) at Jaccard
+    * ≥ [[NearDupJaccard]]. */
+  private def nearDups(pairs: DataFrame, sets: DataFrame, key: String,
+      a: String, b: String): DataFrame =
+    verify(pairs, sets, key, a, b)
+      .filter(col("jaccard") >= NearDupJaccard)
+      .select(col(a), col(b), col("jaccard"))
 
   /** The PRODUCTION dedup composition — exact-clone collapse FIRST,
     * prefix-filtered n-gram pairs over the survivors only — mechanized
@@ -276,61 +285,66 @@ object Dedup {
   /** MinHash+LSH near-dup candidates: 16-hash signature, 8 bands × 2
     * rows, pairs form inside a band bucket only, then verified by true
     * shingle Jaccard. Candidate recall at j=0.8 is 1-(1-0.64)^8 ≈ 0.9997
-    * with no unblocked cross join anywhere. */
+    * with no unblocked cross join anywhere.
+    *
+    * A suite-run pair warehouse: dedup_incremental, dup_clusters (→
+    * split_holdout, dup_survivor), pair_bleu, split_leakage,
+    * dedup_cross_source and dataset_card read the identical verified
+    * pair table, and each would otherwise replay the full
+    * shingle→signature→band→verify derivation. */
   def dedupMinhash(spark: SparkSession, sfDir: String): DataFrame =
-    minhashPairs(spark, sfDir)
+    Materialize.warehouse(spark, sfDir, "minhash_pairs") { s =>
+      val sigs = minhashSigs(spark, sfDir, s)
+      nearDups(bandCandidates(sigs), sigs.select(col("doc_id"), col("sh")),
+        "doc_id", "doc_a", "doc_b")
+    }
 
-  /** Suite-run pair warehouse: FOUR queries consume the identical
-    * verified minhash pair table (dedup_minhash, dup_clusters →
-    * split_holdout, pair_bleu), and each would otherwise replay the
-    * full shingle→signature→band→verify derivation. */
-  private def minhashPairs(spark: SparkSession, sfDir: String): DataFrame =
-    Materialize.warehouse(spark, sfDir, "minhash_pairs")(deriveMinhashPairs(spark, sfDir, _))
+  /** MinHash signature length, and rows per band of the production
+    * banding ([[bandCandidates]]: 8 bands × 2 rows). */
+  private final val SigLen = 16
+  private final val CandRows = 2
 
-  /** The verified minhash pair derivation. Its signature table is
-    * persisted in the caller's scope, so a caller must materialize the
-    * pairs before its scope ends. */
-  private def deriveMinhashPairs(
-      spark: SparkSession, sfDir: String, s: Scope): DataFrame = {
-    val bands = 8
-    val rows = 2
-    // reused by the banding explode AND both verify joins: without
-    // the persist the shingle+signature subtree recomputes 3x
-    val docs = s.persist(shingled(Tables.documents(spark, sfDir))
+  /** Per doc of the shingled corpus: the sorted xxhash64 shingle set
+    * `sh` (the verify payload) and the [[SigLen]]-hash MinHash
+    * signature `sig`. Persisted in the caller's scope: the banding and
+    * both verify joins read it, and without the persist the
+    * shingle+signature subtree recomputes 3x. */
+  private def minhashSigs(spark: SparkSession, sfDir: String, s: Scope): DataFrame =
+    s.persist(shingled(Tables.documents(spark, sfDir))
       .withColumn("sh", array_sort(expr("transform(shingles, s -> xxhash64(s))")))
-      .withColumn("sig", Similarity.minhashSig(col("shingles"), bands * rows))
+      .withColumn("sig", Similarity.minhashSig(col("shingles"), SigLen))
       .select(col("doc_id"), col("sh"), col("sig")))
-    // the band key is the slice VALUES (comma-joined), not a rehash:
-    // bucket equality is then exactly signature-slice equality, which
-    // the DuckDB oracle reproduces (a murmur rehash would add its own
-    // collision pairs the oracle can't see)
-    val banded = docs.select(col("doc_id"),
-        posexplode(expr(s"transform(sequence(0, ${bands - 1}), b -> " +
-          s"array_join(transform(slice(sig, b*$rows+1, $rows), x -> cast(x as string)), ','))"))
+
+  /** Distinct pairs (doc_a < doc_b) sharing one of the signature's
+    * [[CandRows]]-row bands. The band key is the slice VALUES
+    * (comma-joined), not a rehash: bucket equality is then exactly
+    * signature-slice equality, which the DuckDB oracle reproduces (a
+    * murmur rehash would add its own collision pairs). */
+  private def bandCandidates(sigs: DataFrame): DataFrame = {
+    val banded = sigs.select(col("doc_id"),
+        posexplode(expr(s"transform(sequence(0, ${SigLen / CandRows - 1}), b -> " +
+          s"array_join(transform(slice(sig, b*$CandRows+1, $CandRows), x -> cast(x as string)), ','))"))
           .as(Seq("band", "band_key")))
-    // candidate ids first — the distinct then shuffles bare (id, id)
-    // pairs instead of dragging both shingle arrays through it
-    val cand = banded.select(col("doc_id").as("doc_a"), col("band"), col("band_key"))
+    banded.select(col("doc_id").as("doc_a"), col("band"), col("band_key"))
       .join(banded.select(col("doc_id").as("doc_b"), col("band"), col("band_key")),
         Seq("band", "band_key"))
       .filter(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b"))
       .distinct()
-    // equi-joins on the id keys; AQE broadcasts when the side is small
-    cand
-      .join(docs.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
-      .join(docs.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
-      .withColumn("jaccard", Similarity.sortedJaccard(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= 0.5)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
+
+  /** Row-local LSH test: signatures `a` and `b` agree on some whole band
+    * of `rows` consecutive hashes (bands = [[SigLen]] / rows). */
+  private def sharesBand(a: String, b: String, rows: Int): Column = expr(
+    s"exists(sequence(0, ${SigLen / rows - 1}), b -> " +
+      s"slice($a, b*$rows+1, $rows) = slice($b, b*$rows+1, $rows))")
 
   /** Rows-per-band configs swept by minhashBandTune (bands = 16/r).
     * r = 1 (16 bands of one hash) is deliberately excluded: a single
     * shared minhash value is a candidate, so hub values blow the pair
     * set up ~125× at sf0.1 (155k pairs for 5k docs, measured) — the
     * sweep exists to pick a config, not to pay for the degenerate
-    * one. */
+    * one. Every r here is a multiple of [[CandRows]]. */
   final val BandTuneRows = Seq(2, 4, 8)
 
   /** LSH BAND-CONFIGURATION TUNING CURVE — the measurement run before
@@ -342,47 +356,29 @@ object Dedup {
     * candidate probability at the threshold, 1-(1-τ^r)^b, rides along
     * as a rounded payload for sanity-checking the empirical counts.
     *
-    * One signature pass serves every config: the per-config banding is
-    * a row-local explode of slice keys (Σ 16/r rows per doc); exact
-    * Jaccard is computed ONCE per distinct candidate pair across the
-    * sweep (the per-config sets overlap heavily — the r=2 set contains
-    * most of the others) and each config joins its candidates back.
-    * Scale shape: identical to dedupMinhash plus a constant explode
-    * factor; nothing grows faster than the loosest config's candidate
-    * set. */
+    * The configs NEST: an r-row band is the concatenation of r/2
+    * aligned 2-row bands, so a pair sharing a band at r = 4 or 8 also
+    * shares every 2-row band inside it — each config's candidate set
+    * is an exact subset of the r = 2 set. So only the r = 2 set is
+    * built (the production [[bandCandidates]]), each of its pairs is
+    * verified once, and each config's membership is the row-local
+    * [[sharesBand]] test on the pair's two signatures; one global
+    * aggregate counts candidates and verified pairs per config. Scale
+    * shape: dedupMinhash's join plus three row-local predicates;
+    * nothing grows faster than the r = 2 candidate set. */
   def minhashBandTune(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
-    // reused by the banding explode and both verify joins
-    val docs = s.persist(shingled(Tables.documents(spark, sfDir))
-      .withColumn("sh", array_sort(expr("transform(shingles, s -> xxhash64(s))")))
-      .withColumn("sig", Similarity.minhashSig(col("shingles"), 16))
-      .select(col("doc_id"), col("sh"), col("sig")))
-    val rs = BandTuneRows.mkString("array(", ",", ")")
-    val banded = docs.select(col("doc_id"), explode(expr(
-        s"""flatten(transform($rs, r ->
-           | transform(sequence(0, 16 div r - 1), b ->
-           |   named_struct('r', r, 'band', b,
-           |     'band_key', array_join(transform(slice(sig, b*r+1, r),
-           |       x -> cast(x as string)), ',')))))""".stripMargin)).as("bb"))
-      .select(col("doc_id"), col("bb.r").as("r"), col("bb.band").as("band"),
-        col("bb.band_key").as("band_key"))
-    val cand = banded.select(col("doc_id").as("doc_a"), col("r"), col("band"), col("band_key"))
-      .join(banded.select(col("doc_id").as("doc_b"), col("r"), col("band"), col("band_key")),
-        Seq("r", "band", "band_key"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("r"), col("doc_a"), col("doc_b"))
-      .distinct()
-    val pairJac = cand.select(col("doc_a"), col("doc_b")).distinct()
-      .join(docs.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
-      .join(docs.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        Similarity.sortedJaccard(col("sh_a"), col("sh_b")).as("jaccard"))
-    val agg = cand.join(pairJac, Seq("doc_a", "doc_b"))
-      .groupBy(col("r"))
-      .agg(count(lit(1)).as("n_candidates"),
-        sum(when(col("jaccard") >= 0.5, 1L).otherwise(0L)).as("n_verified"))
-    val spine = spark.range(1).select(explode(typedLit(BandTuneRows)).as("r"))
-    val out = spine.join(broadcast(agg), Seq("r"), "left")
-      .na.fill(0L, Seq("n_candidates", "n_verified"))
+    val sigs = minhashSigs(spark, sfDir, s)
+    val pairs = verify(bandCandidates(sigs), sigs, "doc_id", "doc_a", "doc_b")
+    val tallies = BandTuneRows.flatMap { r =>
+      val in = sharesBand("sig_a", "sig_b", r)
+      Seq(count(when(in, 1)), count(when(in && col("jaccard") >= NearDupJaccard, 1)))
+    }
+    val counts = pairs.agg(tallies.head, tallies.tail: _*).head()
+    // one row per swept config: the driver holds them (metadata, not
+    // data) and they re-enter verbatim, so the result owns no storage
+    spark.createDataFrame(BandTuneRows.zipWithIndex.map { case (r, i) =>
+        (r, counts.getLong(2 * i), counts.getLong(2 * i + 1)) })
+      .toDF("r", "n_candidates", "n_verified")
       .select(col("r").as("rows_per_band"),
         expr("16 div r").as("n_bands"),
         col("n_candidates"), col("n_verified"),
@@ -391,9 +387,6 @@ object Dedup {
             / col("n_candidates").cast("double"), 6)).as("precision"),
         round(lit(1.0) - pow(lit(1.0) - pow(lit(0.5), col("r")),
           lit(16.0) / col("r")), 6).as("p_cand_at_tau"))
-    // one row per swept config: the driver holds them (metadata, not
-    // data) and they re-enter verbatim, so the result owns no storage
-    spark.createDataFrame(java.util.Arrays.asList(out.collect(): _*), out.schema)
   }
 
   /** Incremental-batch fraction: 1-in-10 docs by md5 draw. */
@@ -411,13 +404,13 @@ object Dedup {
     * pairs are deliberately ignored: they are the standing dedup's
     * job, not ingestion's.
     *
-    * Scale shape: identical to dedupMinhash (the signature/banding
-    * cost is shared machinery) plus one hash semi join; at deployment
-    * the corpus side's signatures are PRECOMPUTED and only the batch
-    * re-hashes — the plan here recomputes both sides because the gate
-    * has no state to carry. */
-  def dedupIncremental(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
-    val pairs = deriveMinhashPairs(spark, sfDir, s)
+    * Scale shape: the near detector reads dedupMinhash's file-backed
+    * pair warehouse (the signature/banding cost is shared machinery,
+    * paid once per session) plus one hash semi join; at deployment the
+    * corpus side's signatures are PRECOMPUTED and only the batch
+    * re-hashes. */
+  def dedupIncremental(spark: SparkSession, sfDir: String): DataFrame = {
+    val pairs = dedupMinhash(spark, sfDir)
     val flags = Tables.documents(spark, sfDir)
       .select(col("doc_id"), md5(col("text")).as("h"),
         (pmod(Similarity.md5Mod(concat(lit("inc-"), col("doc_id"))),
@@ -443,7 +436,6 @@ object Dedup {
         col("near_jaccard"),
         (coalesce(col("dup_exact"), lit(false)) || col("near_jaccard").isNotNull)
           .as("is_dup"))
-      .localCheckpoint()
   }
 
   /** SimHash near-dup pairs: 64-bit fingerprint, blocked on any equal
@@ -511,7 +503,7 @@ object Dedup {
     * convergence probe is a count() action (an aggregate, not a
     * driver-side data collection). */
   def dupClusters(spark: SparkSession, sfDir: String): DataFrame = Scope { s =>
-    val pairs = minhashPairs(spark, sfDir).select(col("doc_a"), col("doc_b"))
+    val pairs = dedupMinhash(spark, sfDir).select(col("doc_a"), col("doc_b"))
     val edges = s.persist(pairs.unionByName(
         pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))))
     // eager: the propagation rounds iterate on the cached edges
@@ -803,25 +795,6 @@ object Dedup {
     (labels.select(col("id"), col("lab")), rounds)
   }
 
-  /** Substring-level exact dedup (Lee et al. 2022, "Deduplicating
-    * Training Data Makes Language Models Better"): instead of whole-
-    * document decisions, find every k-token window that occurs more
-    * than once ANYWHERE in the corpus and measure, per document, how
-    * many token positions sit inside at least one duplicated window —
-    * the signal used to excise repeated passages (boilerplate,
-    * licenses, templated spans) from pretraining data.
-    *
-    * The paper builds a suffix array; the distributed re-expression is
-    * a positional shingle pipeline: (shingle, doc, pos) triples, one
-    * frequency agg over the shingle key, a join back of the duplicated
-    * shingles (unhinted — the duplicated-shingle table is corpus-
-    * derived, AQE picks the strategy), and a per-doc interval union
-    * computed by exploding each duplicated window into its k covered
-    * positions and distinct-counting. Shuffles stay keyed on shingle
-    * text / doc id; nothing is quadratic — cost is O(total windows +
-    * duplicated-window occurrences × k). At 100 TB the shingle key
-    * would be a 128-bit hash (collision-free in practice); here it
-    * stays the literal string so the DuckDB oracle is value-exact. */
   /** LSH-parameter evaluation via controlled corruption — the dedup
     * analogue of matchEval (the reference tunes its matcher against a
     * labeled sample, script/itemtoid_test.py:179; a dedup pipeline
@@ -833,8 +806,8 @@ object Dedup {
     * jaccard bucket the table reports measured band-collision recall
     * of the 8×2 MinHash scheme next to its analytic S-curve
     * 1-(1-j²)⁸ — the two columns agreeing is what justifies
-    * dedupMinhash's parameters; a user re-tunes by editing bands/rows
-    * here and re-reading the table.
+    * dedupMinhash's parameters; a user re-tunes by editing rows (bands
+    * = 16 / rows) here and re-reading the table.
     *
     * Every pair is (original, its own variant), so the whole operator
     * is ROW-LOCAL — shingle, sign, and band-compare happen inside one
@@ -842,12 +815,9 @@ object Dedup {
     * 11-bucket final agg. At 100 TB the eval sample is a fixed-size
     * labeled holdout; here it is the deterministic doc_id % 10 slice. */
   def dedupEval(spark: SparkSession, sfDir: String): DataFrame = {
-    val bands = 8
     val rows = 2
+    val bands = SigLen / rows
     val ks = Seq(3, 4, 5, 6, 8, 10, 12, 16, 20, 24, 32, 48)
-    def shingles(c: String) = expr(
-      s"array_distinct(transform(sequence(1, size($c)-2), i -> " +
-        s"concat_ws(' ', element_at($c,i), element_at($c,i+1), element_at($c,i+2))))")
     val pairs = Partitioning.spread(Tables.documents(spark, sfDir))
       .filter(col("doc_id") % 10 === 0)
       .withColumn("toks", split(col("text"), " "))
@@ -858,16 +828,14 @@ object Dedup {
       .withColumn("vtoks", expr(
         "filter(transform(toks, (x, i) -> IF((i+1) % k != 0, x, NULL)), x -> x IS NOT NULL)"))
       .filter(size(col("vtoks")) >= 3)
-      .withColumn("sho", shingles("toks"))
-      .withColumn("shv", shingles("vtoks"))
+      .withColumn("sho", trigrams("toks"))
+      .withColumn("shv", trigrams("vtoks"))
       .withColumn("inter", size(array_intersect(col("sho"), col("shv"))))
       .withColumn("jaccard", col("inter").cast("double")
         / (size(col("sho")) + size(col("shv")) - col("inter")))
-      .withColumn("sig_o", Similarity.minhashSig(col("sho"), bands * rows))
-      .withColumn("sig_v", Similarity.minhashSig(col("shv"), bands * rows))
-      .withColumn("found", expr(
-        s"exists(sequence(0, ${bands - 1}), b -> " +
-          s"slice(sig_o, b*$rows+1, $rows) = slice(sig_v, b*$rows+1, $rows))"))
+      .withColumn("sig_o", Similarity.minhashSig(col("sho"), SigLen))
+      .withColumn("sig_v", Similarity.minhashSig(col("shv"), SigLen))
+      .withColumn("found", sharesBand("sig_o", "sig_v", rows))
     pairs
       .groupBy((floor(col("jaccard") * 10) / 10.0).as("bucket"))
       .agg(
@@ -880,10 +848,16 @@ object Dedup {
         round(col("n_found").cast("double") / col("n_pairs"), 6))
   }
 
-  /** Coverage fraction of each document by REPEATED k-token windows
-    * (a window is duplicated if its shingle occurs anywhere else in
-    * the corpus, including the same doc). covered_tokens = size of
-    * the UNION of the duplicated windows' [pos, pos+k-1] intervals.
+  /** Substring-level exact dedup (Lee et al. 2022, "Deduplicating
+    * Training Data Makes Language Models Better"): instead of whole-
+    * document decisions, the coverage fraction of each document by
+    * REPEATED k-token windows — the signal used to excise repeated
+    * passages (boilerplate, licenses, templated spans) from
+    * pretraining data. A window is duplicated if its shingle occurs
+    * anywhere else in the corpus, including the same doc;
+    * covered_tokens = size of the UNION of the duplicated windows'
+    * [pos, pos+k-1] intervals. The paper builds a suffix array; this
+    * is its distributed re-expression.
     *
     * Scale shape, two exchanges and zero materializations: the
     * shingle stream takes ONE hash(sh) exchange where a window count

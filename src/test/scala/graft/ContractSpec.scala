@@ -62,4 +62,13 @@ class ContractSpec extends AnyFunSuite {
     val err = Explain.parseArgs(Seq("dedup_ngram,no_such_query"))
     assert(err.left.exists(e => e.contains("no_such_query") && e.contains("usage: graft.Explain")))
   }
+
+  test("Verify takes an optional query filter and rejects unknown names with its usage") {
+    assert(Verify.parseArgs(Seq("/d", "/o")) == Right(("/d", "/o", None)))
+    assert(Verify.parseArgs(Seq("/d", "/o", "dedup_ngram,ann_pq")) ==
+      Right(("/d", "/o", Some(Set("dedup_ngram", "ann_pq")))))
+    val err = Verify.parseArgs(Seq("/d", "/o", "dedup_ngram,no_such_query"))
+    assert(err.left.exists(e => e.contains("no_such_query") && e.contains("usage: graft.Verify")))
+    assert(Verify.parseArgs(Seq("/d")).left.exists(_.contains("usage: graft.Verify")))
+  }
 }

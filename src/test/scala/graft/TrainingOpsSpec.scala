@@ -750,6 +750,33 @@ class TrainingOpsSpec extends AnyFunSuite {
     }
     // the r=2 level IS dedup_minhash's production config (8 bands x 2)
     assert(rows.find(_._1 == 2).get._4 == Dedup.dedupMinhash(spark, sf).count())
+    // each config's counts replay one banded self-join per config over
+    // the same 16-hash signature (slice arrays as the band key), with
+    // Jaccard over the shingle strings
+    val docs = graft.sources.Tables.documents(spark, sf)
+      .withColumn("toks", split(col("text"), " "))
+      .filter(size(col("toks")) >= 3)
+      .withColumn("shingles", array_distinct(expr("transform(sequence(1, size(toks)-2), " +
+        "i -> concat_ws(' ', element_at(toks,i), element_at(toks,i+1), element_at(toks,i+2)))")))
+      .select(col("doc_id"), col("shingles"),
+        graft.functions.Similarity.minhashSig(col("shingles"), 16).as("sig"))
+    val side = docs.select(col("doc_id"), col("shingles"))
+    rows.foreach { case (r, _, cand, ver) =>
+      val banded = docs.select(col("doc_id"), posexplode(expr(
+        s"transform(sequence(0, ${16 / r - 1}), b -> slice(sig, b*$r+1, $r))")).as(Seq("band", "key")))
+      val ref = banded.select(col("doc_id").as("doc_a"), col("band"), col("key"))
+        .join(banded.select(col("doc_id").as("doc_b"), col("band"), col("key")), Seq("band", "key"))
+        .filter(col("doc_a") < col("doc_b"))
+        .select(col("doc_a"), col("doc_b")).distinct()
+        .join(side.select(col("doc_id").as("doc_a"), col("shingles").as("s_a")), Seq("doc_a"))
+        .join(side.select(col("doc_id").as("doc_b"), col("shingles").as("s_b")), Seq("doc_b"))
+        .agg(count(lit(1)), count(when(size(array_intersect(col("s_a"), col("s_b"))) * 2 >=
+          size(array_union(col("s_a"), col("s_b"))), 1)))
+        .head()
+      assert(cand > 0 && ver > 0, s"r=$r: empty config proves nothing")
+      assert((cand, ver) == (ref.getLong(0), ref.getLong(1)),
+        s"r=$r: (n_candidates, n_verified) vs the banded self-join")
+    }
   }
 
   test("mmr_diversify replays a literal local greedy MMR over the pool") {
