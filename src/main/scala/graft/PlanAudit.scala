@@ -84,26 +84,7 @@ object PlanAudit {
     sb ++= "| query | sub-plans | exchange histogram | joins in sub-plans |\n"
     sb ++= "|---|---|---|---|\n"
     sb ++= eagerSb
-    // Appendix: the entity_match / match_certitude twin plans. The two
-    // queries share the bestPacked fuzzy-join subtree (EntityMatch.scala:51);
-    // BENCH_r04 showed an 8× gap between them that did not reproduce under
-    // controlled alternating measurement (graft.MicroBench: both ~0.7-0.9s
-    // steady-state at sf0.1) — host-load noise, not a plan defect. The
-    // explains below are the evidence: identical subtree below the final
-    // supplier re-join.
-    sb ++= "\n## Appendix: entity_match vs match_certitude twin plans\n\n"
-    for (name <- Seq("entity_match", "match_certitude")) {
-      val plan = SparkEntry.queries(name)(spark, sfDir)
-        .queryExecution.explainString(ExplainMode.fromString("formatted"))
-      sb ++= s"### $name\n\n```\n${plan.trim}\n```\n\n"
-    }
-    // expression ids, plan ids and the warehouse temp root change from
-    // run to run; an unchanged plan must regenerate byte-identically
-    val stable = sb.toString
-      .replace(sources.Materialize.warehouseRoot(spark, sfDir), "<warehouse>")
-      .replaceAll("#\\d+", "#_")
-      .replaceAll(",? ?\\[plan_id=\\d+\\]", "")
-    Files.writeString(Paths.get("PLANS.md"), stable)
+    Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println("wrote PLANS.md")
     spark.stop()
   }

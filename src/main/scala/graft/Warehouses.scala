@@ -37,6 +37,6 @@ object Warehouses {
       },
       timed("term_census")(operators.TermCensus.docTermTf(spark, sfDir)),
       timed("minhash_pairs")(operators.Dedup.dedupMinhash(spark, sfDir)),
-      timed("best_match")(operators.EntityMatch.bestPacked(spark, sfDir)))
+      timed("best_match")(operators.EntityMatch.bestMatchTable(spark, sfDir)))
   }
 }

@@ -21,57 +21,80 @@ import graft.sources.{Materialize, Tables}
   */
 object EntityMatch {
 
-  /** Candidate pairs: customer × supplier within a nation block,
-    * scored by levenshtein over normalized names. */
-  private def scoredPairs(spark: SparkSession, sfDir: String): DataFrame = {
-    val cust = Tables.customer(spark, sfDir)
-      .select(col("c_custkey"), col("c_name"), col("c_acctbal"), col("c_nationkey"))
-      // the probe side arrives as a single row group at test scale —
-      // without this the whole scoring stage runs as ONE task; at
-      // cluster scale the scan is already many partitions and this
-      // round-robin is a cheap no-op relative to the scoring
-      .transform(Partitioning.spread)
-    val supp = Tables.supplier(spark, sfDir)
-      .select(col("s_suppkey"), col("s_name"), col("s_nationkey"))
-    // supplier is SF-proportional: no hint, AQE broadcasts when small
-    cust.join(supp, col("c_nationkey") === col("s_nationkey"))
-      .withColumn("distance", levenshtein(col("c_name"), col("s_name")))
-  }
+  /** Column [[bestMatch]] adds: the winning pair's score. */
+  final val Score = "score"
 
-  /** (distance, suppkey) packed into one long: distance in the high
-    * bits, key in the low 48. min(packed) IS argmin with the
-    * (distance, suppkey) tiebreak — and unlike min_by over a struct
-    * (which degrades to SortAggregate with per-row struct allocation),
-    * a long min runs in codegen'd HashAggregate with full map-side
-    * combine: one row per (partition, customer) reaches the shuffle. */
-  private val KeyMask = (1L << 48) - 1
-  private def packed: Column =
-    (col("distance").cast("long") * lit(1L << 48)) + col("s_suppkey")
-  private def unpackKey(p: Column): Column = p.bitwiseAND(lit(KeyMask))
+  /** The blocked best match every scored matcher of this family runs:
+    * `cust` joins the same-nation suppliers on the nation key, each
+    * pair gets `score`, and a pack-and-min argmin keeps, per `keys`
+    * group, the (score, s_suppkey)-least supplier. Returns `keys` plus
+    * `match_id` (the winner's s_suppkey) and [[Score]] (its score, as
+    * a long); a group whose nation has no supplier gets no row.
+    *
+    * `cust` holds `keys`, `c_nationkey` and the customer columns
+    * `score` reads; `score` may also read s_name and s_acctbal.
+    * Precondition: `score` is a non-negative integer below 2¹⁵ and
+    * s_suppkey is below 2⁴⁸, so score·2⁴⁸ + s_suppkey packs into one
+    * long whose min IS the argmin with the suppkey tie-break. Unlike
+    * min_by over a struct (which degrades to SortAggregate with
+    * per-row struct allocation), a long min runs in codegen'd
+    * HashAggregate with full map-side combine: one row per (partition,
+    * group) reaches the shuffle. */
+  private[graft] def bestMatch(spark: SparkSession, sfDir: String, cust: DataFrame,
+      keys: Seq[String], score: Column): DataFrame = {
+    val supp = Tables.supplier(spark, sfDir)
+      .select(col("s_suppkey"), col("s_name"), col("s_nationkey"), col("s_acctbal"))
+    val unit = 1L << 48
+    // the probe side arrives as a single row group at test scale —
+    // without the spread the whole scoring stage runs as ONE task (its
+    // cost at scale is stated on Partitioning.spread). supplier is
+    // SF-proportional: no hint, AQE broadcasts it when small
+    cust.transform(Partitioning.spread)
+      .join(supp, col("c_nationkey") === col("s_nationkey"))
+      .groupBy(keys.map(col): _*)
+      .agg(min(score.cast("long") * lit(unit) + col("s_suppkey")).as("p"))
+      .select(keys.map(col) :+ col("p").bitwiseAND(lit(unit - 1)).as("match_id") :+
+        shiftright(col("p"), 48).as(Score): _*)
+  }
 
   /** Suite-run best-match warehouse: four queries (entity_match,
     * match_certitude, id_dedup, match_eval via its matchers) consume
     * the identical (customer-sized) argmin table, and each would
     * otherwise replay the blocked levenshtein scoring join. */
-  private[graft] def bestPacked(spark: SparkSession, sfDir: String): DataFrame =
-    Materialize.warehouse(spark, sfDir, "best_match")(_ => deriveBestPacked(spark, sfDir))
+  private[graft] def bestMatchTable(spark: SparkSession, sfDir: String): DataFrame =
+    Materialize.warehouse(spark, sfDir, "best_match")(_ =>
+      bestMatch(spark, sfDir,
+        Tables.customer(spark, sfDir)
+          .select(col("c_custkey"), col("c_name"), col("c_acctbal"), col("c_nationkey")),
+        Seq("c_custkey", "c_name", "c_acctbal"), levenshtein(col("c_name"), col("s_name"))))
 
-  private def deriveBestPacked(spark: SparkSession, sfDir: String): DataFrame =
-    scoredPairs(spark, sfDir)
-      .groupBy(col("c_custkey"), col("c_name"), col("c_acctbal"))
-      .agg(min(packed).as("p"))
-      .withColumn("match_id", unpackKey(col("p")))
-      .withColumn("distance", shiftright(col("p"), 48).cast("long"))
+  /** `best` with the matched supplier's `cols` joined back on match_id. */
+  private def joinSupplier(spark: SparkSession, sfDir: String, best: DataFrame,
+      cols: Column*): DataFrame =
+    best.join(Tables.supplier(spark, sfDir).select(col("s_suppkey").as("match_id") +: cols: _*),
+      Seq("match_id"))
+
+  /** A levenshtein best match with the matched supplier's name. */
+  private def withMatchName(spark: SparkSession, sfDir: String, best: DataFrame): DataFrame =
+    joinSupplier(spark, sfDir, best, col("s_name").as("match_name"))
+      .select(col("c_custkey"), col("c_name"), col("match_id"),
+        col("match_name"), col(Score).as("distance"))
+
+  /** Every customer keeps one row: `matched` (at most one row per
+    * c_custkey) left-joined onto all customer keys, with each
+    * `fallback` column defaulted where the customer matched nothing. */
+  private def everyCustomer(spark: SparkSession, sfDir: String, matched: DataFrame,
+      fallback: (String, Column)*): DataFrame = {
+    val all = Tables.customer(spark, sfDir).select(col("c_custkey"))
+      .join(matched, Seq("c_custkey"), "left")
+    val dflt = fallback.toMap
+    all.select(all.columns.toSeq.map(c =>
+      dflt.get(c).fold(col(c))(d => coalesce(col(c), d).as(c))): _*)
+  }
 
   /** Best match per customer (argmin distance, suppkey tiebreak). */
-  def entityMatch(spark: SparkSession, sfDir: String): DataFrame = {
-    val supp = Tables.supplier(spark, sfDir)
-      .select(col("s_suppkey").as("match_id"), col("s_name").as("match_name"))
-    bestPacked(spark, sfDir)
-      .join(supp, Seq("match_id"))
-      .select(col("c_custkey"), col("c_name"), col("match_id"),
-        col("match_name"), col("distance"))
-  }
+  def entityMatch(spark: SparkSession, sfDir: String): DataFrame =
+    withMatchName(spark, sfDir, bestMatchTable(spark, sfDir))
 
   /** The entity stage over an EXPLICIT item subset — the resume path's
     * unit of work (see Restart.stageResume): the same blocked
@@ -79,46 +102,22 @@ object EntityMatch {
     * item table the caller hands in. Matching is per-customer
     * independent, so match(subset) ≡ full-run restricted to the subset
     * — the property the stage_resume gate asserts. */
-  def entityMatchFor(spark: SparkSession, sfDir: String, cust: DataFrame): DataFrame = {
-    val supp = Tables.supplier(spark, sfDir)
-      .select(col("s_suppkey"), col("s_name"), col("s_nationkey"))
-    val best = cust
-      .select(col("c_custkey"), col("c_name"), col("c_nationkey"))
-      .transform(Partitioning.spread)
-      .join(supp, col("c_nationkey") === col("s_nationkey"))
-      .withColumn("distance", levenshtein(col("c_name"), col("s_name")))
-      .groupBy(col("c_custkey"), col("c_name"))
-      .agg(min(packed).as("p"))
-      .withColumn("match_id", unpackKey(col("p")))
-      .withColumn("distance", shiftright(col("p"), 48).cast("long"))
-    best.join(supp.select(col("s_suppkey").as("match_id"),
-        col("s_name").as("match_name")), Seq("match_id"))
-      .select(col("c_custkey"), col("c_name"), col("match_id"),
-        col("match_name"), col("distance"))
-  }
+  def entityMatchFor(spark: SparkSession, sfDir: String, cust: DataFrame): DataFrame =
+    withMatchName(spark, sfDir, bestMatch(spark, sfDir,
+      cust.select(col("c_custkey"), col("c_name"), col("c_nationkey")),
+      Seq("c_custkey", "c_name"), levenshtein(col("c_name"), col("s_name"))))
 
   /** Certitude scoring: count matched "parameters" exactly like the
     * reference counts query parameters present in a successful search
     * (itemtoid.py:91-113), then threshold. */
-  def matchCertitude(spark: SparkSession, sfDir: String): DataFrame = {
-    entityMatchWithBal(spark, sfDir)
-      .withColumn("param_name", (col("distance") <= 12).cast("int"))
+  def matchCertitude(spark: SparkSession, sfDir: String): DataFrame =
+    joinSupplier(spark, sfDir, bestMatchTable(spark, sfDir), col("s_acctbal"))
+      .withColumn("param_name", (col(Score) <= 12).cast("int"))
       .withColumn("param_bal", (abs(col("c_acctbal") - col("s_acctbal")) < lit(2000.0)).cast("int"))
       .withColumn("param_key", (pmod(col("c_custkey"), lit(10)) === pmod(col("match_id"), lit(10))).cast("int"))
       .withColumn("paramcount", col("param_name") + col("param_bal") + col("param_key"))
       .withColumn("certitude", (col("paramcount") >= 2))
       .select(col("c_custkey"), col("match_id"), col("paramcount"), col("certitude"))
-  }
-
-  /** entityMatch keeping the balance columns needed by certitude. */
-  private def entityMatchWithBal(spark: SparkSession, sfDir: String): DataFrame = {
-    val supp = Tables.supplier(spark, sfDir)
-      .select(col("s_suppkey").as("match_id"), col("s_acctbal"))
-    bestPacked(spark, sfDir)
-      .join(supp, Seq("match_id"))
-      .select(col("c_custkey"), col("c_acctbal"), col("match_id"),
-        col("s_acctbal"), col("distance"))
-  }
 
   /** Retry cascade — the reference relaunches its search with fewer
     * parameters when the strict query returns nothing (itemtoid.py:307
@@ -128,7 +127,9 @@ object EntityMatch {
     * pass 2's fuzzy scoring (certitude 1); rows with no candidate at
     * all surface with certitude 0. The anti-join between passes keeps
     * each pass's input shrinking — the distributed shape of a
-    * try-cheapest-first lookup cascade. */
+    * try-cheapest-first lookup cascade. The exact pass stays out of
+    * [[bestMatch]]: it is a min-suppkey over an equality condition, not
+    * a scored argmin. */
   def entityCascade(spark: SparkSession, sfDir: String): DataFrame = {
     val cust = Tables.customer(spark, sfDir)
       .select(col("c_custkey"), col("c_name"), col("c_nationkey"))
@@ -144,23 +145,15 @@ object EntityMatch {
       .withColumn("certitude", lit(2))
 
     val rest = cust.join(exact.select(col("c_custkey")), Seq("c_custkey"), "left_anti")
-      .transform(Partitioning.spread)
-    val fuzzy = rest.join(supp, col("c_nationkey") === col("s_nationkey"))
-      .withColumn("distance", levenshtein(col("c_name"), col("s_name")))
-      .groupBy(col("c_custkey"))
-      .agg(min(packed).as("p"))
-      .select(col("c_custkey"),
-        unpackKey(col("p")).as("match_id"),
+    val fuzzy = bestMatch(spark, sfDir, rest, Seq("c_custkey"),
+        levenshtein(col("c_name"), col("s_name")))
+      .select(col("c_custkey"), col("match_id"),
         lit("fuzzy").as("method"), lit(1).as("certitude"))
 
-    val matched = exact.select(col("c_custkey"), col("match_id"), col("method"), col("certitude"))
-      .unionByName(fuzzy)
-    cust.select(col("c_custkey"))
-      .join(matched, Seq("c_custkey"), "left")
-      .select(col("c_custkey"),
-        col("match_id"),
-        coalesce(col("method"), lit("none")).as("method"),
-        coalesce(col("certitude"), lit(0)).as("certitude"))
+    everyCustomer(spark, sfDir,
+      exact.select(col("c_custkey"), col("match_id"), col("method"), col("certitude"))
+        .unionByName(fuzzy),
+      "method" -> lit("none"), "certitude" -> lit(0))
   }
 
   /** K-LEVEL PARAMETER-SUBTRACTIVE RETRY LATTICE — the full shape of
@@ -186,17 +179,12 @@ object EntityMatch {
     * Spark-first shape: a sequential 8-pass anti-join chain would
     * replay the retries literally, but with a LOCAL candidate set the
     * cascade is equivalent to one blocked equi-join computing each
-    * pair's best-satisfied level, then a packed-long argmin per
-    * source row ((level, suppkey) lexicographic via min over
-    * level·2⁴⁸+key — codegen'd HashAggregate with full map-side
-    * combine). One shuffle join + one agg instead of eight passes;
-    * the per-pair when-chain is whole-stage codegen'd. */
+    * pair's best-satisfied level, then the [[bestMatch]] argmin with
+    * the level as the score. One shuffle join + one agg instead of
+    * eight passes; the per-pair when-chain is whole-stage codegen'd. */
   def entityLattice(spark: SparkSession, sfDir: String): DataFrame = {
     val cust = Tables.customer(spark, sfDir)
       .select(col("c_custkey"), col("c_name"), col("c_nationkey"), col("c_acctbal"))
-      .transform(Partitioning.spread)
-    val supp = Tables.supplier(spark, sfDir)
-      .select(col("s_suppkey"), col("s_name"), col("s_nationkey"), col("s_acctbal"))
     val pKey = pmod(col("c_custkey"), lit(97L)) === pmod(col("s_suppkey"), lit(97L))
     val pBal = floor(col("c_acctbal") / lit(1000.0)) ===
       floor(col("s_acctbal") / lit(1000.0))
@@ -205,21 +193,13 @@ object EntityMatch {
       .when(pBal && pNm, 1L).when(pKey && pNm, 2L).when(pKey && pBal, 3L)
       .when(pKey, 4L).when(pBal, 5L).when(pNm, 6L)
       .otherwise(7L)
-    val best = cust.join(supp, col("c_nationkey") === col("s_nationkey"))
-      .groupBy(col("c_custkey"))
-      .agg(min(prio * lit(1L << 48) + col("s_suppkey")).as("p"))
-      .select(col("c_custkey"),
-        unpackKey(col("p")).as("match_id"),
-        shiftright(col("p"), 48).cast("int").as("level"))
-    Tables.customer(spark, sfDir).select(col("c_custkey"))
-      .join(best, Seq("c_custkey"), "left")
-      .select(col("c_custkey"), col("match_id"), col("level"),
-        coalesce(
-          when(col("level") === 0, 4)
-            .when(col("level") <= 3, 3)
-            .when(col("level") <= 6, 2)
-            .when(col("level") === 7, 1),
-          lit(0)).as("certitude"))
+    val best = bestMatch(spark, sfDir, cust, Seq("c_custkey"), prio)
+      .select(col("c_custkey"), col("match_id"), col(Score).cast("int").as("level"))
+      .withColumn("certitude", when(col("level") === 0, 4)
+        .when(col("level") <= 3, 3)
+        .when(col("level") <= 6, 2)
+        .when(col("level") === 7, 1))
+    everyCustomer(spark, sfDir, best, "certitude" -> lit(0))
   }
 
   /** Bounded-distance cap for entityBounded (distances saturate at
@@ -239,27 +219,17 @@ object EntityMatch {
   def entityBounded(spark: SparkSession, sfDir: String): DataFrame = {
     val cust = Tables.customer(spark, sfDir)
       .select(col("c_custkey"), col("c_name"), col("c_nationkey"))
-      .transform(Partitioning.spread)
-    val supp = Tables.supplier(spark, sfDir)
-      .select(col("s_suppkey"), col("s_name"), col("s_nationkey"))
-    val best = cust.join(supp, col("c_nationkey") === col("s_nationkey"))
-      .withColumn("d",
-        expr(s"levenshtein_bounded(c_name, s_name, $BoundedK)").cast("long"))
-      .groupBy(col("c_custkey"))
-      .agg(min(col("d") * lit(1L << 48) + col("s_suppkey")).as("p"))
-      .select(col("c_custkey"),
-        unpackKey(col("p")).as("match_id"),
-        shiftright(col("p"), 48).cast("int").as("distance"))
-    Tables.customer(spark, sfDir).select(col("c_custkey"))
-      .join(best, Seq("c_custkey"), "left")
-      .select(col("c_custkey"), col("match_id"), col("distance"),
-        (col("distance") <= BoundedK).as("matched"))
+    val best = bestMatch(spark, sfDir, cust, Seq("c_custkey"),
+        expr(s"levenshtein_bounded(c_name, s_name, $BoundedK)"))
+      .select(col("c_custkey"), col("match_id"), col(Score).cast("int").as("distance"))
+      .withColumn("matched", col("distance") <= BoundedK)
+    everyCustomer(spark, sfDir, best)
   }
 
   /** Deduplicated set of matched entity ids — the reference's
     * idset.py:11 build_idset, which feeds the enrichment stage. */
   def idDedup(spark: SparkSession, sfDir: String): DataFrame =
-    bestPacked(spark, sfDir)
+    bestMatchTable(spark, sfDir)
       .select(col("match_id"))
       .distinct()
 
@@ -270,7 +240,9 @@ object EntityMatch {
     * the smallest same-nation supplier key with
     * (s_suppkey + c_custkey) % 3 = 0 (null when the nation has none —
     * more silence truth). Plays the role of the reference's labeled
-    * 100-row sample (script/itemtoid_test.py:73 test_isolate). */
+    * 100-row sample (script/itemtoid_test.py:73 test_isolate). Stays
+    * out of [[bestMatch]]: a truth that shared the matchers' scoring
+    * step would grade that step against itself. */
   private def truthSample(spark: SparkSession, sfDir: String): DataFrame = {
     val cust = Tables.customer(spark, sfDir)
       .filter(col("c_custkey") % 7 < 3)
@@ -513,7 +485,7 @@ object EntityMatch {
     * products — count tables joined, never pairs. Exact longs, two
     * terminal divides per row. */
   def blockingEval(spark: SparkSession, sfDir: String): DataFrame = {
-    val gold = bestPacked(spark, sfDir).select(col("c_custkey"), col("match_id"))
+    val gold = bestMatchTable(spark, sfDir).select(col("c_custkey"), col("match_id"))
     val cust = Tables.customer(spark, sfDir)
       .select(col("c_custkey"), col("c_nationkey").cast("long").as("cn"))
     val supp = Tables.supplier(spark, sfDir)

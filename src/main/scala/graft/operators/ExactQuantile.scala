@@ -56,9 +56,7 @@ import graft.plans.Scope
   * travels through a shuffle: a continuous column's census is n rows,
   * the bracket path shuffles O(probes · n/accuracy). At 100 TB the
   * same two scans stand, with accuracy raised so each bracket stays
-  * executor-sized — the operator stays EXACT at any scale. The census
-  * pipeline is retained below ([[censusPercentilesMulti]]) as the
-  * differential-testing twin.
+  * executor-sized — the operator stays EXACT at any scale.
   *
   * NaN caveat: Spark orders NaN above +∞ while the GK summary treats
   * it as incomparable, so columns fed here should be NaN-free (every
@@ -345,53 +343,5 @@ object ExactQuantile {
     // checkpointed). Rows re-enter verbatim — bit-exact.
     df.sparkSession.createDataFrame(
       java.util.Arrays.asList(out.collect(): _*), out.schema)
-  }
-
-  /** The per-value-count census + two-phase range rank
-    * (`Partitioning.rangePrefix`) pipeline the bracket path replaced —
-    * retained as the differential twin (DifferentialSpec pins census
-    * == bracket == built-in bit-for-bit on adversarial distributions).
-    * Shuffles the full distinct-value census; correct at any scale but
-    * census-sized in transit. */
-  private[graft] def censusPercentilesMulti(
-      df: DataFrame, cols: Seq[String], probes: Seq[Double]): DataFrame = Scope { s =>
-    // one scan: (column, value) pairs via a generator, then the
-    // map-side-combined per-(column, value) census
-    val kv = df.select(explode(map(cols.flatMap(c =>
-        Seq(lit(c), col(c).cast("double"))): _*)).as(Seq("k", "v")))
-      .filter(col("v").isNotNull)
-    // the census persists BEFORE the range exchange: RangePartitioner
-    // samples its child plan in a separate pass, which would otherwise
-    // re-execute the full scan+explode+aggregate a second time — the
-    // sample then reads the cached census (distinct-value-sized)
-    val cnt = s.persist(kv.groupBy(col("k"), col("v")).agg(count(lit(1)).as("c")))
-    // exclusive prefix per column: value row covers multiset indices
-    // [e, e+c-1] of its column's n_total rows; each row checks itself
-    // against every probe
-    val probed = Partitioning.rangePrefix(s, cnt, Seq("k"), Seq(col("v")), col("c"))
-      .select(col("k"), col("v"), col("c"), col(Partitioning.Prefix).as("e"),
-        col(Partitioning.GroupTotal).as("n_total"),
-        posexplode(array(probes.map(lit(_)): _*)).as(Seq("idx", "p")))
-      .withColumn("pos", col("p") * (col("n_total") - 1).cast("double"))
-      .withColumn("flo", floor(col("pos")).cast("long"))
-      .withColumn("fhi", ceil(col("pos")).cast("long"))
-    val matched = probed.filter(col("e") <= col("fhi") && col("flo") < col("e") + col("c"))
-    val perProbe = matched.groupBy(col("k"), col("idx"))
-      .agg(max(col("pos")).as("pos"),
-        max(col("flo")).as("flo"), max(col("fhi")).as("fhi"),
-        max(when(col("e") <= col("flo") && col("flo") < col("e") + col("c"),
-          col("v"))).as("lv"),
-        max(when(col("e") <= col("fhi") && col("fhi") < col("e") + col("c"),
-          col("v"))).as("hv"))
-      .withColumn("q",
-        when(col("flo") === col("fhi"), col("lv"))
-          .otherwise(col("lv") * (col("fhi").cast("double") - col("pos")) +
-            col("hv") * (col("pos") - col("flo").cast("double"))))
-    perProbe
-      .groupBy(col("k").as("column_name"))
-      .agg(sort_array(collect_list(struct(col("idx"), col("q")))).as("s"))
-      .select(col("column_name"),
-        transform(col("s"), x => x.getField("q")).as("qs"))
-      .localCheckpoint()
   }
 }

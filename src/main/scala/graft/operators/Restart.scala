@@ -20,16 +20,6 @@ import graft.sources.Materialize
   * most one stage. */
 object Restart {
 
-  /** True if `name` committed in a previous (possibly crashed) run. */
-  def isComplete(spark: SparkSession, ckptDir: String, name: String): Boolean =
-    Materialize.committed(spark, ckptDir, name).isDefined
-
-  /** Run `build` unless the stage already committed; either way return
-    * the stage's output read back from the checkpoint. */
-  def stage(spark: SparkSession, ckptDir: String, name: String)
-      (build: => DataFrame): DataFrame =
-    Materialize.at(spark, ckptDir, name)(_ => build)
-
   /** Done-log resume — the reference's `Logs.log_done`
     * (script/utils/classes.py:23): itemtoid/sparql append each processed
     * item's id to a log file and, on relaunch, skip everything already
@@ -43,7 +33,7 @@ object Restart {
     * anti-joined remainder leg, each through the same entity stage) and
     * the oracle computes the straight-through full run, so a green row
     * IS the proof that resumed ∪ done ≡ full. At 100 TB the done leg is
-    * a parquet read-back (Restart.stage), the log is a key column, and
+    * a parquet read-back (Materialize.at), the log is a key column, and
     * the anti-join broadcasts when the done-set is small or shuffles on
     * the item key when it is not — never a driver-side membership scan.
     */
@@ -70,13 +60,13 @@ object Restart {
     * stage. Returns (enriched entities, rewritten catalogues). */
   def runResumable(spark: SparkSession, catalogueDir: String, catalog: DataFrame,
       attrs: DataFrame, ckptDir: String): (DataFrame, DataFrame) = {
-    val matched = stage(spark, ckptDir, "matched") {
+    val matched = Materialize.at(spark, ckptDir, "matched") { _ =>
       WikidataPipeline.itemToId(spark, catalogueDir, catalog)
     }
-    val enriched = stage(spark, ckptDir, "enriched") {
+    val enriched = Materialize.at(spark, ckptDir, "enriched") { _ =>
       WikidataPipeline.enrich(matched, attrs)
     }
-    val rewritten = stage(spark, ckptDir, "rewritten") {
+    val rewritten = Materialize.at(spark, ckptDir, "rewritten") { _ =>
       WikidataPipeline.refInjectXml(
         graft.sources.TeiCatalog.readCatalogues(spark, catalogueDir), matched)
     }

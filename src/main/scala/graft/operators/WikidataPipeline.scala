@@ -18,7 +18,11 @@ import graft.sources.{Tables, TeiCatalog}
 object WikidataPipeline {
 
   /** Stage 1+2: nametable from catalogue XML, name prep (normalize,
-    * classify, years), and best-match against the entity catalog. */
+    * classify, years), and best-match against the entity catalog.
+    * Not an [[EntityMatch.bestMatch]] caller: its ids come from a
+    * user-supplied catalog and are not bounded longs, it blocks on
+    * soundex with a left join, and it picks the best match through
+    * `TopK.perGroup`. */
   def itemToId(spark: SparkSession, catalogueDir: String, catalog: DataFrame): DataFrame = {
     val nt = TeiCatalog.resolveLeMeme(
         TeiCatalog.nametable(TeiCatalog.readCatalogues(spark, catalogueDir)))

@@ -245,7 +245,7 @@ class DifferentialSpec extends AnyFunSuite {
     // replicates Percentile's interpolation EXACTLY — gate queries
     // only exercise it on the suite's tables, so random skew/dup/neg
     // distributions pin it here (duplicates force multi-row value
-    // brackets; negatives and heavy skew stress the range exchange)
+    // brackets; negatives and heavy skew stress the GK brackets)
     // probes include the clamped ends (0.0 / 1.0 take the ±∞ sentinel
     // bracket) and non-binary fractions; acc=200 keeps the GK slack
     // argument meaningful at n=4000 (εn = 60 rows, same ratio as the
@@ -257,16 +257,12 @@ class DifferentialSpec extends AnyFunSuite {
         math.round(math.pow(10, r.nextDouble() * 4)) - 500, // skewed, negative
         r.nextInt(40).toLong)) // heavy duplication (mixed-segment ties)
       val df = rows.toDF("a", "b")
-      val census = graft.operators.ExactQuantile
-        .censusPercentilesMulti(df, Seq("a", "b"), probes)
-        .collect().map(r0 => r0.getString(0) -> r0.getSeq[Double](1)).toMap
       val bracket = graft.operators.ExactQuantile
         .bracketPercentilesMulti(df, Seq("a", "b"), probes, acc = 200)
         .collect().map(r0 => r0.getString(0) -> r0.getSeq[Double](1)).toMap
       for (c <- Seq("a", "b")) {
         val want = df.agg(percentile(col(c).cast("double"),
             array(probes.map(lit(_)): _*))).head().getSeq[Double](0)
-        assert(census(c) == want, s"seed $seed census $c: ${census(c)} != $want")
         assert(bracket(c) == want, s"seed $seed bracket $c: ${bracket(c)} != $want")
       }
     }
@@ -324,6 +320,58 @@ class DifferentialSpec extends AnyFunSuite {
       assert(empty == (df.columns.toSeq ++ Seq(Partitioning.Prefix, Partitioning.GroupTotal), 0L),
         s"$name empty input")
     } finally conf.zip(saved).foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  test("bestMatch equals the brute-force blocked argmin under any partitioning") {
+    import graft.operators.EntityMatch
+    // names over a two-letter alphabet make distance ties common, so
+    // the s_suppkey tie-break decides many winners; supplier keys are
+    // written shuffled, and nation 5 has customers but no supplier
+    val r = new scala.util.Random(23)
+    def name() = Seq.fill(1 + r.nextInt(4))("ab"(r.nextInt(2))).mkString
+    val custRows = (1L to 400L).map(k => (k, name(), r.nextInt(6).toLong))
+    val suppRows = r.shuffle((1L to 60L).toList)
+      .map(k => (k, name(), r.nextInt(5).toLong, r.nextInt(10000) / 100.0))
+    def lev(a: String, b: String): Int = {
+      val d = Array.tabulate(a.length + 1, b.length + 1)((i, j) => if (i == 0) j else if (j == 0) i else 0)
+      for (i <- 1 to a.length; j <- 1 to b.length)
+        d(i)(j) = Seq(d(i - 1)(j) + 1, d(i)(j - 1) + 1,
+          d(i - 1)(j - 1) + (if (a(i - 1) == b(j - 1)) 0 else 1)).min
+      d(a.length)(b.length)
+    }
+    val scored = custRows.map { case (k, n, nat) =>
+      (k, n, suppRows.filter(_._3 == nat).map(s => (lev(n, s._2).toLong, s._1))) }
+    val want = scored.collect { case (k, n, c) if c.nonEmpty =>
+      val (d, s) = c.min
+      (k, n, s, d)
+    }
+    assert(want.size < custRows.size, "some customer must have no candidate")
+    assert(scored.count { case (_, _, c) => c.nonEmpty && c.count(_._1 == c.min._1) > 1 } > 50,
+      "ties must be common")
+    val dir = java.nio.file.Files.createTempDirectory("graft_best_match").toFile
+    suppRows.toDF("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
+      .write.parquet(s"$dir/supplier.parquet")
+    val cust = custRows.toDF("c_custkey", "c_name", "c_nationkey")
+    def best(c: org.apache.spark.sql.DataFrame) = EntityMatch.bestMatch(spark, dir.toString, c,
+      Seq("c_custkey", "c_name"), levenshtein(col("c_name"), col("s_name")))
+    val conf = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val saved = conf.map(spark.conf.get)
+    try for (parts <- Seq(1, 4, 7); aqe <- Seq(true, false)) {
+      spark.conf.set(conf(0), parts.toLong)
+      spark.conf.set(conf(1), aqe)
+      val got = best(cust).collect()
+        .map(x => (x.getLong(0), x.getString(1), x.getLong(2), x.getLong(3))).toSeq
+      val wrong = got.diff(want)
+      assert(got.size == want.size && wrong.isEmpty,
+        s"partitions=$parts aqe=$aqe: e.g. ${wrong.take(3).mkString(" ")}")
+      val empty = best(cust.filter(lit(false)))
+      assert((empty.columns.toSeq, empty.count()) ==
+        (Seq("c_custkey", "c_name", "match_id", EntityMatch.Score), 0L),
+        s"partitions=$parts aqe=$aqe empty input")
+    } finally {
+      conf.zip(saved).foreach { case (k, v) => spark.conf.set(k, v) }
+      org.apache.hadoop.fs.FileUtil.fullyDelete(dir)
+    }
   }
 
   test("SegmentHot kernel equals the per-boundary when-chain on random bounds") {

@@ -136,10 +136,51 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
   }
 
-  test("entity_match blocks the fuzzy join on an equi-key") {
-    val p = plan("entity_match")
-    // the levenshtein scoring must ride an equi join (hash/merge), never a cross
-    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
+  test("entity matchers block the fuzzy join on one nation equi-key") {
+    // Every EntityMatch.bestMatch call is one join of customers to
+    // suppliers keyed on the nation key alone; the value is how many
+    // calls each query makes. entity_match and the other best_match
+    // readers run that join inside the eager warehouse build, so each
+    // query is built in a cold session (its own warehouse root) and its
+    // sub-executions are audited with its terminal plan. Any join of a
+    // customer side to a supplier side must be a hash or merge equi-join.
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
+    import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
+    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec,
+      CartesianProductExec, HashJoin, SortMergeJoinExec}
+    val family = Seq("entity_match" -> 1, "match_certitude" -> 1, "id_dedup" -> 1,
+      "blocking_eval" -> 1, "match_eval" -> 2, "entity_cascade" -> 1,
+      "entity_lattice" -> 1, "entity_bounded" -> 1, "stage_resume" -> 2)
+    def names(ks: Seq[Expression]) = ks.map {
+      case a: Attribute => a.name
+      case e => e.sql
+    }
+    def onNation(l: Seq[Expression], r: Seq[Expression], cond: Option[Expression]) =
+      cond.isEmpty && Set(names(l), names(r)) == Set(Seq("c_nationkey"), Seq("s_nationkey"))
+    for ((name, calls) <- family) {
+      val cold = spark.newSession()
+      // AQE off: the audited trees are the full static plans
+      cold.conf.set("spark.sql.adaptive.enabled", "false")
+      val build = SubExecutions.capture(cold) { SparkEntry.queries(name)(cold, sf) }
+      val plans = build.executions.map(_.executedPlan) :+
+        build.value.queryExecution.executedPlan
+      def has(p: SparkPlan, c: String) = p.output.exists(_.name == c)
+      val custSupp = plans.flatMap(_.collect {
+        case j: BinaryExecNode if (has(j.left, "c_nationkey") && has(j.right, "s_nationkey")) ||
+            (has(j.right, "c_nationkey") && has(j.left, "s_nationkey")) => j
+      })
+      val unblocked = custSupp.collect {
+        case j @ (_: BroadcastNestedLoopJoinExec | _: CartesianProductExec) => j.nodeName
+      }
+      assert(unblocked.isEmpty, s"$name joins customers to suppliers unblocked: $unblocked")
+      val blocks = custSupp.count {
+        case j: HashJoin => onNation(j.leftKeys, j.rightKeys, j.condition)
+        case j: SortMergeJoinExec => onNation(j.leftKeys, j.rightKeys, j.condition)
+        case _ => false
+      }
+      assert(blocks == calls, s"$name: $blocks nation-key equi-joins, expected $calls " +
+        s"across ${plans.size} plans")
+    }
   }
 
   test("dedup operators never materialize an unblocked cross product") {

@@ -51,6 +51,7 @@ class WikidataPipelineSpec extends AnyFunSuite {
 
   test("runResumable survives a mid-pipeline crash and resumes past completed stages") {
     import graft.operators.Restart
+    import graft.sources.Materialize
     val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
     val attrs = Seq(("Q535", "poet", "France")).toDF("wikidata_id", "occupation", "citizenship")
 
@@ -61,8 +62,8 @@ class WikidataPipelineSpec extends AnyFunSuite {
     intercept[Exception] {
       Restart.runResumable(spark, dir, catalog, poisoned, ckpt)
     }
-    assert(Restart.isComplete(spark, ckpt, "matched"), "stage 1 committed before the crash")
-    assert(!Restart.isComplete(spark, ckpt, "enriched"), "crashed stage must not commit")
+    assert(Materialize.committed(spark, ckpt, "matched").isDefined, "stage 1 committed before the crash")
+    assert(Materialize.committed(spark, ckpt, "enriched").isEmpty, "crashed stage must not commit")
 
     // relaunch with healthy input: resumes at stage 2 off the
     // checkpointed stage-1 parquet and completes
@@ -70,7 +71,7 @@ class WikidataPipelineSpec extends AnyFunSuite {
     assert(enriched.collect().exists(r => r.getAs[String]("wikidata_id") == "Q535"
       && r.getAs[String]("occupation") == "poet"))
     assert(rewritten.head().getAs[String]("xml_ref").contains("""ref="wd:Q535""""))
-    assert(Restart.isComplete(spark, ckpt, "rewritten"))
+    assert(Materialize.committed(spark, ckpt, "rewritten").isDefined)
 
     // third launch: everything committed — no stage rebuilds even with
     // a poisoned catalog (the builders are never invoked)
