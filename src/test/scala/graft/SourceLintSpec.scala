@@ -184,4 +184,18 @@ class SourceLintSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty, "read or temp root outside its owner:\n" + offenders.mkString("\n"))
   }
+
+  test("one schema-inferring parquet read: Tables.table's first touch") {
+    // Inference runs one footer-reading Spark job per touch. Base tables
+    // infer once per session in Tables.table and read every later touch
+    // with the pinned schema; materialized tables read the schema their
+    // commit marker recorded. A reader that reaches .parquet / .load
+    // without .schema(...) infers again on every touch.
+    val unpinned = """\.read\s*(?:\.\s*options?\s*\([^()]*\)\s*|\.\s*format\s*\(\s*"parquet"\s*\)\s*)*\.\s*(?:parquet|load)\s*\(""".r
+    val pinned = Map("graft/sources/Tables.scala" -> 1)
+    val found = mainSources
+      .map { case (f, src) => f -> unpinned.findAllIn(codeOnly(src)).size }
+      .filter(_._2 > 0).toMap
+    assert(found == pinned, "schema-inferring parquet reads (file -> sites): " + found)
+  }
 }
