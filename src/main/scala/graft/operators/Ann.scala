@@ -32,14 +32,11 @@ object Ann {
     * only k rows per query per partition shuffle — the window that
     * assigns rank numbers then runs over k×queries rows, not the full
     * candidate set. */
-  private def rankTopK(scored: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
+  private def rankTopK(scored: DataFrame): DataFrame =
     scored
-      .transform(graft.plans.TopK.perGroup(
-        Seq("q_id"), Seq("cos" -> false, "vec_id" -> true), K))
-      .withColumn("rank", row_number().over(w).cast("long"))
+      .transform(graft.plans.TopK.ranked(
+        Seq("q_id"), Seq("cos" -> false, "vec_id" -> true), K, "rank"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"), col("cos"))
-  }
 
   /** Brute-force cosine top-k: exact baseline over a sampled query set. */
   def annBruteforce(spark: SparkSession, sfDir: String): DataFrame = {
@@ -142,16 +139,12 @@ object Ann {
         (col("p0") + 1).as("c_rk"))
       .withColumn("nprobe", explode(typedLit(TuneProbes)))
       .filter(col("c_rk") <= col("nprobe"))
-    val w = Window.partitionBy(col("nprobe"), col("q_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
     val ivf = assign.join(broadcast(probes), Seq("c_id"))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("cos", Similarity.cosine(col("q_emb"), col("embedding")))
       .select(col("nprobe"), col("q_id"), col("vec_id"), col("cos"))
       .transform(graft.plans.TopK.perGroup(
         Seq("nprobe", "q_id"), Seq("cos" -> false, "vec_id" -> true), K))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= K)
       .select(col("nprobe"), col("q_id"), col("vec_id"))
     val exact = annBruteforce(spark, sfDir)
       .select(col("q_id"), col("neighbor_id").as("vec_id"))
@@ -348,11 +341,8 @@ object Ann {
         Seq("nbr_id"))
       .withColumn("cos", Similarity.cosine(col("src_emb"), col("nbr_emb")))
       .select(col("src_id"), col("nbr_id"), col("cos"))
-      .transform(graft.plans.TopK.perGroup(
-        Seq("src_id"), Seq("cos" -> false, "nbr_id" -> true), K))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("src_id")).orderBy(col("cos").desc, col("nbr_id")))
-        .cast("long"))
+      .transform(graft.plans.TopK.ranked(
+        Seq("src_id"), Seq("cos" -> false, "nbr_id" -> true), K, "rank"))
     val reverse = knn.select(col("nbr_id").as("src_id"), col("src_id").as("nbr_id"))
     knn.join(reverse.withColumn("mutual", lit(true)), Seq("src_id", "nbr_id"), "left")
       .withColumn("mutual", coalesce(col("mutual"), lit(false)))

@@ -30,8 +30,9 @@ object Cluster {
   val SeedK = 16
   val Dims = 64
 
-  /** floor(x·2^20) per dimension — integer-exact quantization. */
-  private def quantize(emb: Column): Column =
+  /** floor(x·2^20) per dimension — integer-exact quantization, shared
+    * with Pq (HyperplaneLsh quantizes by the same 2^20 scale). */
+  private[operators] def quantize(emb: Column): Column =
     transform(emb, x => floor(x.cast("double") * 1048576).cast("long"))
 
   /** Exact long dot product of two quantized vectors (zip, left fold —

@@ -52,11 +52,8 @@ object Fusion {
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("cos", Similarity.cosine(col("q_emb"), col("embedding")))
       .select(col("q_id"), col("vec_id").as("id"), col("cos"))
-      .transform(graft.plans.TopK.perGroup(
-        Seq("q_id"), Seq("cos" -> false, "id" -> true), ListK))
-      .withColumn("sem_rank", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("q_id"))
-          .orderBy(col("cos").desc, col("id"))).cast("long"))
+      .transform(graft.plans.TopK.ranked(
+        Seq("q_id"), Seq("cos" -> false, "id" -> true), ListK, "sem_rank"))
       .select(col("q_id"), col("id"), col("sem_rank"))
 
     // lexical list: shared rare-term counts against the query document
@@ -78,11 +75,8 @@ object Fusion {
       .filter(col("doc_id") =!= col("q_id"))
       .groupBy(col("q_id"), col("doc_id").as("id"))
       .agg(count(lit(1)).as("score"))
-      .transform(graft.plans.TopK.perGroup(
-        Seq("q_id"), Seq("score" -> false, "id" -> true), ListK))
-      .withColumn("lex_rank", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("q_id"))
-          .orderBy(col("score").desc, col("id"))).cast("long"))
+      .transform(graft.plans.TopK.ranked(
+        Seq("q_id"), Seq("score" -> false, "id" -> true), ListK, "lex_rank"))
       .select(col("q_id"), col("id"), col("lex_rank"))
 
     // fuse on ranks alone; a doc on one list only still scores
@@ -90,11 +84,8 @@ object Fusion {
       .withColumn("rrf_score",
         coalesce(lit(1.0) / (lit(RrfK) + col("sem_rank")), lit(0.0)) +
           coalesce(lit(1.0) / (lit(RrfK) + col("lex_rank")), lit(0.0)))
-    fused.transform(graft.plans.TopK.perGroup(
-        Seq("q_id"), Seq("rrf_score" -> false, "id" -> true), OutK))
-      .withColumn("fused_rank", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("q_id"))
-          .orderBy(col("rrf_score").desc, col("id"))).cast("long"))
+    fused.transform(graft.plans.TopK.ranked(
+        Seq("q_id"), Seq("rrf_score" -> false, "id" -> true), OutK, "fused_rank"))
       .select(col("q_id"), col("id"), col("fused_rank"), col("rrf_score"),
         col("sem_rank"), col("lex_rank"))
   }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge.{column, expression}
 import graft.expressions.{L2Long, PqAdc, PqAssign, PqTab}
@@ -38,11 +37,6 @@ object Pq {
   val K = 16     // centroids per subspace (4-bit codes)
   val TopN = 5
   val Shortlist = 20 // ADC candidates kept per query for exact rerank
-
-  /** floor(x·2^20) per dimension — integer-exact quantization (the
-    * Cluster.scala / HyperplaneLsh convention). */
-  private def quantize(emb: Column): Column =
-    transform(emb, x => floor(x.cast("double") * 1048576).cast("long"))
 
   /** Exact integer L2 distance — the codegen'd kernel. */
   private def l2(a: Column, b: Column): Column =
@@ -92,7 +86,7 @@ object Pq {
     // full quantized vectors: feeds training, both encode passes, and
     // the rerank payload joins
     val qfull = s.persist(Partitioning.spread(emb)
-      .select(col("vec_id"), quantize(col("embedding")).as("q")))
+      .select(col("vec_id"), Cluster.quantize(col("embedding")).as("q")))
     val seeds = qfull.filter(col("vec_id") < K)
 
     // seed codebook: vectors 0..K-1, each cut into its M subvectors
@@ -164,11 +158,9 @@ object Pq {
         .select(col("vec_id").as("q_id"), col("q").as("qv"))), Seq("q_id"))
       .withColumn("l2_dist", l2(col("qv"), col("nv")))
 
-    val w = Window.partitionBy(col("q_id")).orderBy(col("l2_dist"), col("vec_id"))
     reranked
-      .transform(graft.plans.TopK.perGroup(
-        Seq("q_id"), Seq("l2_dist" -> true, "vec_id" -> true), TopN))
-      .withColumn("rank", row_number().over(w).cast("long"))
+      .transform(graft.plans.TopK.ranked(
+        Seq("q_id"), Seq("l2_dist" -> true, "vec_id" -> true), TopN, "rank"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"),
         col("adc_dist"), col("l2_dist"))
       // TopN×queries rows: materialize eagerly so the scope can

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.expressions.CrossHash
 import graft.functions.Similarity
 import graft.plans.Scope
@@ -363,9 +362,7 @@ object Sampling {
       .withColumn("score", col("log_ratio") + col("gumbel_key"))
       .select(col("doc_id"), col("n_toks"), col("log_ratio"),
         col("gumbel_key"), col("score"))
-    scored.transform(graft.plans.TopK.perGroup(
-        Seq(), Seq("score" -> false, "doc_id" -> true), DsirK))
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("score").desc, col("doc_id"))).cast("long"))
+    scored.transform(graft.plans.TopK.ranked(
+        Seq(), Seq("score" -> false, "doc_id" -> true), DsirK, "rank"))
   }
 }

@@ -68,10 +68,16 @@ object Search {
       .filter(col("score") > 0)
   }
 
-  def bm25Rank(spark: SparkSession, sfDir: String): DataFrame =
+  /** The BM25 top-TopN per query, numbered 1..TopN as a long `rank`;
+    * the two evals grade it. bm25_rank drops the rank, and Spark
+    * prunes the dead window from its plan. */
+  private def bm25Ranked(spark: SparkSession, sfDir: String): DataFrame =
     scoredCorpus(spark, sfDir)
-      .transform(graft.plans.TopK.perGroup(
-        Seq("query_id"), Seq("score" -> false, "doc_id" -> true), TopN))
+      .transform(graft.plans.TopK.ranked(
+        Seq("query_id"), Seq("score" -> false, "doc_id" -> true), TopN, "rank"))
+
+  def bm25Rank(spark: SparkSession, sfDir: String): DataFrame =
+    bm25Ranked(spark, sfDir).drop("rank")
 
   /** Relevance truth: every query term must appear at least this many
     * times. tf ≥ 1 and tf ≥ 2 are DEGENERATE on this corpus (common
@@ -116,10 +122,7 @@ object Search {
     import org.apache.spark.sql.expressions.Window
     val truth = truthPairs(spark, sfDir)
     val nRel = truth.groupBy(col("query_id")).agg(count(lit(1)).as("n_relevant"))
-    val wQ = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-    val rel = bm25Rank(spark, sfDir)
-      .withColumn("rank", row_number().over(wQ).cast("long"))
+    val rel = bm25Ranked(spark, sfDir)
       .join(broadcast(truth.withColumn("relv", lit(true))),
         Seq("query_id", "doc_id"), "left")
       .withColumn("relv", coalesce(col("relv"), lit(false)))
@@ -166,7 +169,6 @@ object Search {
     * top-k by grade. A query spine keeps zero-relevant queries
     * explicit. */
   def searchNdcg(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
     val gradeBranches = bm25Queries.map { case (qid, terms) =>
@@ -179,10 +181,7 @@ object Search {
     val truth = docs.select(col("doc_id"), explode(array(gradeBranches: _*)).as("r"))
       .filter(col("r.grade") > 0)
       .select(col("r.query_id").as("query_id"), col("doc_id"), col("r.grade").as("grade"))
-    val wQ = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-    val d = bm25Rank(spark, sfDir)
-      .withColumn("rank", row_number().over(wQ).cast("long"))
+    val d = bm25Ranked(spark, sfDir)
       .join(broadcast(truth), Seq("query_id", "doc_id"), "left")
       .na.fill(0L, Seq("grade"))
       .withColumn("term",
@@ -192,12 +191,9 @@ object Search {
         sum(when(col("grade") > 0, 1L).otherwise(0L)).as("n_rel_retrieved"),
         sort_array(collect_list(col("term"))).as("ts"))
       .withColumn("dcg", aggregate(col("ts"), lit(0.0), (a, x) => a + x))
-    val wI = Window.partitionBy(col("query_id"))
-      .orderBy(col("grade").desc, col("doc_id").asc)
     val ideal = truth
-      .transform(graft.plans.TopK.perGroup(
-        Seq("query_id"), Seq("grade" -> false, "doc_id" -> true), TopN))
-      .withColumn("irank", row_number().over(wI).cast("long"))
+      .transform(graft.plans.TopK.ranked(
+        Seq("query_id"), Seq("grade" -> false, "doc_id" -> true), TopN, "irank"))
       .withColumn("term",
         col("grade").cast("double") / log(col("irank").cast("double") + 1.0))
       .groupBy(col("query_id"))
@@ -234,17 +230,14 @@ object Search {
     * shuffles beyond K×|queries| rows; the rank decorates the
     * K×|queries| result, not the corpus. */
   def negativeMining(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val truth = truthPairs(spark, sfDir)
     scoredCorpus(spark, sfDir)
       .join(broadcast(truth.withColumn("relv", lit(true))),
         Seq("query_id", "doc_id"), "left")
       .filter(col("relv").isNull)
       .select(col("query_id"), col("doc_id"), col("score"))
-      .transform(graft.plans.TopK.perGroup(
-        Seq("query_id"), Seq("score" -> false, "doc_id" -> true), HardK))
-      .withColumn("rank", row_number().over(Window.partitionBy(col("query_id"))
-        .orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
+      .transform(graft.plans.TopK.ranked(
+        Seq("query_id"), Seq("score" -> false, "doc_id" -> true), HardK, "rank"))
       .select(col("query_id"), col("rank"), col("doc_id"), col("score"))
   }
 }

@@ -318,15 +318,11 @@ object TextMetrics {
     val dfreq = st.groupBy(col("term")).agg(count(lit(1)).as("src_df"))
     val n = Tables.documents(spark, sfDir)
       .agg(count_distinct(col("source")).as("n_sources"))
-    val w = Window.partitionBy(col("source"))
-      .orderBy(col("tf").desc, col("src_df").asc, col("term").asc)
     st.join(dfreq, Seq("term"))
       .crossJoin(broadcast(n))
-      .transform(graft.plans.TopK.perGroup(
+      .transform(graft.plans.TopK.ranked(
         Seq("source"),
-        Seq("tf" -> false, "src_df" -> true, "term" -> true), 10))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= 10)
+        Seq("tf" -> false, "src_df" -> true, "term" -> true), 10, "rk"))
       .select(col("source"), col("rk"), col("term"), col("tf"), col("src_df"),
         round(col("tf") * log(col("n_sources").cast("double")
           / col("src_df").cast("double")), 6).as("ctfidf"))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
@@ -44,13 +45,10 @@ object Tokenize {
       .filter(col("term") =!= "")
       .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
     val total = counts.agg(sum(col("cnt")).as("total"))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("cnt").desc, col("term"))
+    val upToRank = Window.orderBy(col("rank")).rowsBetween(Window.unboundedPreceding, 0)
     counts
-      .transform(graft.plans.TopK.perGroup(Seq(), Seq("cnt" -> false, "term" -> true), VocabSize))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .withColumn("cum", sum(col("cnt")).over(
-        w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
+      .transform(graft.plans.TopK.ranked(Seq(), Seq("cnt" -> false, "term" -> true), VocabSize, "rank"))
+      .withColumn("cum", sum(col("cnt")).over(upToRank))
       .crossJoin(broadcast(total))
       .select(col("term"), col("cnt"), col("rank"),
         (col("cum").cast("double") / col("total").cast("double")).as("cum_coverage"))

@@ -99,15 +99,12 @@ object Zipf {
     * engines fold the identical sequence), determinants and the three
     * ratios are fixed-order expressions, round 6. */
   def zipfFit(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val totals = TermCensus.docTermTf(spark, sfDir)
       .groupBy(col("t")).agg(sum(col("tf")).as("f"))
     val grand = totals.agg(sum(col("f")).as("total_tokens"),
       count(lit(1)).as("vocab_size"))
-    val top = totals.transform(graft.plans.TopK.perGroup(
-        Seq(), Seq("f" -> false, "t" -> true), ZipfTopN))
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("f").desc, col("t"))).cast("long"))
+    val top = totals.transform(graft.plans.TopK.ranked(
+        Seq(), Seq("f" -> false, "t" -> true), ZipfTopN, "rank"))
       .withColumn("lx", log(col("rank").cast("double")))
       .withColumn("ly", log(col("f").cast("double")))
     def fold(c: Column): Column =

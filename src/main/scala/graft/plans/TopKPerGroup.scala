@@ -1,12 +1,14 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution, UnspecifiedDistribution}
+import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, row_number}
 import org.apache.spark.sql.graftbridge.Bridge
 
 /** Whole-operator top-k-per-group, the reduction every rank-and-filter
@@ -43,6 +45,10 @@ case class TopKPerGroupExec(
     child: SparkPlan) extends UnaryExecNode {
 
   override def output: Seq[Attribute] = child.output
+
+  // rows never leave their partition in either phase, so a window or
+  // aggregate over the same groups needs no second exchange
+  override def outputPartitioning: Partitioning = child.outputPartitioning
 
   override def requiredChildDistribution: Seq[Distribution] =
     if (partial) UnspecifiedDistribution :: Nil
@@ -89,11 +95,26 @@ object TopKStrategy extends SparkStrategy {
   }
 }
 
-/** Public API:
-  * `df.transform(TopK.perGroup(Seq("g"), Seq("score" -> false, "id" -> true), 5))`
-  * (order pairs are column → ascending?; rank 1 = first in that order).
+/** Public API, two entry points. Order pairs are column → ascending?;
+  * rank 1 = first in that order.
+  *  - `df.transform(TopK.perGroup(Seq("g"), Seq("score" -> false, "id" -> true), 5))`
+  *    keeps the k best rows of each group, unnumbered.
+  *  - `df.transform(TopK.ranked(Seq("g"), Seq("score" -> false, "id" -> true), 5, "rank"))`
+  *    keeps the same rows and numbers them 1..k as a long `rank`
+  *    column, over a window built from the same order pairs, so the
+  *    numbering cannot disagree with the set that was kept.
   * Columns resolve against the frame's analyzed output, so the node
-  * enters planning fully bound. */
+  * enters planning fully bound.
+  *
+  * Left outside this object on purpose:
+  *  - argmax sites written as `row_number … === 1` with the rank
+  *    dropped (RefInject, Quality, TextMetrics lang-id and doc
+  *    keywords, Cluster.clusterMetrics, Ann.mmrDiversify) state their
+  *    order once; RankFilterToTopK rewrites them, and that rule stays
+  *    because `spark.sql` users rely on it;
+  *  - Spark's native `WindowGroupLimit` sorts every candidate row in
+  *    its partial phase where TopKPerGroupExec keeps a k-heap; swapping
+  *    to it needs its own measurement on the heavy top-k rows. */
 object TopK {
   import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending}
 
@@ -119,5 +140,19 @@ object TopK {
       SortOrder(attr(n), if (asc) Ascending else Descending) }
     Bridge.ofRows(df.sparkSession,
       TopKPerGroup(groupCols.map(attr), order, k, child))
+  }
+
+  /** `perGroup`, then `rankCol` = `row_number()` as a long over
+    * `partitionBy(groupCols)` ordered by the same `orderCols`.
+    * Precondition: `orderCols` is a total order inside a group (end it
+    * with a unique id); on a tie, which rows survive and how they are
+    * numbered would depend on the partitioning. The final top-k leaves
+    * its rows hash-partitioned by the groups, so the window adds no
+    * exchange. */
+  def ranked(groupCols: Seq[String], orderCols: Seq[(String, Boolean)], k: Int, rankCol: String)(
+      df: DataFrame): DataFrame = {
+    val w = Window.partitionBy(groupCols.map(col): _*).orderBy(orderCols.map {
+      case (n, asc) => if (asc) col(n).asc else col(n).desc }: _*)
+    perGroup(groupCols, orderCols, k)(df).withColumn(rankCol, row_number().over(w).cast("long"))
   }
 }

@@ -128,6 +128,43 @@ class DifferentialSpec extends AnyFunSuite {
     val expected = rows.groupBy(_._2).values.flatMap(
       _.sortBy(r => (-r._3, r._1)).take(k).map(_._1)).toSet
     assert(got == expected)
+
+    // TopK.ranked against a driver-side sort-and-number: scores over
+    // 0..4 make ties common, so the id tie-break decides the ranks;
+    // groups 0-2 are smaller than k; ids are written shuffled
+    val r = new scala.util.Random(7)
+    val sizes = Seq(1, 2, 3) ++ Seq.fill(9)(5 + r.nextInt(60))
+    val tied = sizes.zipWithIndex
+      .flatMap { case (n, g) => Seq.fill(n)((g, r.nextInt(5))) }
+      .zipWithIndex.map { case ((g, s), id) => (id.toLong, g, s) }
+    val tdf = r.shuffle(tied).toDF("id", "g", "score")
+    val cases = Seq(Seq("g") -> k, Seq.empty[String] -> 25)
+    val want = cases.map { case (group, n) =>
+      tied.groupBy(t => if (group.isEmpty) 0 else t._2).values.flatMap(
+        _.sortBy(t => (-t._3, t._1)).take(n).zipWithIndex
+          .map { case (t, i) => (t._2, t._1, i + 1L) }).toSet
+    }
+    assert(tied.groupBy(_._2).values.count(g => g.count(_._3 == g.map(_._3).max) > k) > 3,
+      "ties must cross the cut")
+    def ranked(d: org.apache.spark.sql.DataFrame, group: Seq[String], n: Int) =
+      d.transform(TopK.ranked(group, Seq("score" -> false, "id" -> true), n, "rank"))
+    val conf = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val saved = conf.map(spark.conf.get)
+    try for (parts <- Seq(1, 4, 7); aqe <- Seq(true, false)) {
+      spark.conf.set(conf(0), parts.toLong)
+      spark.conf.set(conf(1), aqe)
+      for (((group, n), expected) <- cases.zip(want)) {
+        val got = ranked(tdf, group, n).select("g", "id", "rank").collect()
+          .map(x => (x.getInt(0), x.getLong(1), x.getLong(2))).toSeq
+        val wrong = got.filterNot(expected)
+        assert(got.size == expected.size && wrong.isEmpty,
+          s"ranked partitions=$parts aqe=$aqe group=$group: e.g. ${wrong.take(3).mkString(" ")}")
+      }
+      val empty = ranked(tdf.filter(lit(false)), Seq("g"), k)
+      assert((empty.schema.map(f => f.name -> f.dataType.simpleString), empty.count()) ==
+        (Seq("id" -> "bigint", "g" -> "int", "score" -> "int", "rank" -> "bigint"), 0L),
+        s"ranked partitions=$parts aqe=$aqe empty input")
+    } finally conf.zip(saved).foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
   test("stripStatus equals an independent token-model over random title phrases") {

@@ -198,4 +198,39 @@ class SourceLintSpec extends AnyFunSuite {
       .filter(_._2 > 0).toMap
     assert(found == pinned, "schema-inferring parquet reads (file -> sites): " + found)
   }
+
+  test("ranks over a top-k only from TopK.ranked") {
+    // TopK.ranked builds its rank window from the order pairs the heap
+    // kept the rows by. Fifteen sites restated that order by hand in a
+    // row_number window chained onto TopK.perGroup; a copy that drifts
+    // numbers the kept set in a different order than it was kept by.
+    val start = """TopK\s*\.\s*perGroup\s*\(""".r
+    // the method chain from `from`: up to the first line break at or
+    // below the starting paren depth whose next line does not go on
+    // with `.`
+    def chain(src: String, from: Int): String = {
+      var depth = 0
+      var i = from
+      var open = true
+      while (open && i < src.length) {
+        src(i) match {
+          case '(' | '{' => depth += 1
+          case ')' | '}' => depth -= 1
+          case '\n' if depth <= 0 =>
+            val next = src.indexWhere(!_.isWhitespace, i + 1)
+            open = next >= 0 && src(next) == '.'
+          case _ =>
+        }
+        i += 1
+      }
+      src.substring(from, i)
+    }
+    val offenders = for {
+      (f, raw) <- mainSources if f != "graft/plans/TopKPerGroup.scala"
+      src = codeOnly(raw)
+      m <- start.findAllMatchIn(src)
+      if chain(src, m.start).contains("row_number(")
+    } yield s"$f: ${src.substring(src.lastIndexOf('\n', m.start) + 1).takeWhile(_ != '\n').trim}"
+    assert(offenders.isEmpty, "row_number() chained onto TopK.perGroup:\n" + offenders.mkString("\n"))
+  }
 }

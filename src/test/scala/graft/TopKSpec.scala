@@ -36,6 +36,22 @@ class TopKSpec extends AnyFunSuite {
     assert(plan.contains("Exchange") || plan.contains("ShuffleQueryStage"), plan)
   }
 
+  test("ranked plan shows two-phase exec with one exchange, none before the window") {
+    // the final top-k leaves its rows hash-partitioned by the groups,
+    // so the rank window reuses that exchange instead of adding one
+    val key = "spark.sql.adaptive.enabled"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, false)
+    try {
+      val plan = Tables.orders(spark, sf).transform(TopK.ranked(
+          Seq("o_custkey"), Seq("o_totalprice" -> false, "o_orderkey" -> true), 3, "rank"))
+        .queryExecution.executedPlan.toString
+      assert("TopKPerGroup \\[".r.findAllIn(plan).size == 2, plan)
+      assert("\\bExchange\\b".r.findAllIn(plan).size == 1, plan)
+      assert(plan.contains("Window"), plan)
+    } finally spark.conf.set(key, saved)
+  }
+
   test("empty grouping gives a global top-k") {
     val ord = Tables.orders(spark, sf)
     val global = ord.transform(TopK.perGroup(
