@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
@@ -61,10 +62,15 @@ object Chunk {
     * Boundary detection is row-local (filter over a position sequence,
     * each position hashing CdcW chars through the codegen'd md5_mod61
     * — the oracle recomputes the identical hash); the corpus-level
-    * dedup profile is ONE hash-keyed frequency aggregate joined back
-    * unhinted. Output per doc: chunk count, length extremes, and how
-    * much of the corpus' chunk mass this document shares with any
-    * other chunk occurrence (the storage-dedup win CDC exists for). */
+    * dedup profile is ONE count window partitioned by chunk hash, so
+    * the chunk table is computed once: an aggregate joined back would
+    * read it twice, and with nothing pinned both reads re-run the
+    * spread scan and the per-position boundary filter, the operator's
+    * only CPU-heavy stage. `h` is md5_mod61 of a non-null substring,
+    * so it is never null and every chunk row is counted. Output per
+    * doc: chunk count, length extremes, and how much of the corpus'
+    * chunk mass this document shares with any other chunk occurrence
+    * (the storage-dedup win CDC exists for). */
   def cdcChunk(spark: SparkSession, sfDir: String): DataFrame = {
     val chunks = Partitioning.spread(Tables.documents(spark, sfDir))
       .select(col("doc_id"), col("text"), length(col("text")).as("len"))
@@ -83,8 +89,7 @@ object Chunk {
           .as("chunk"))
       .select(col("doc_id"), length(col("chunk")).cast("long").as("clen"),
         graft.functions.Similarity.md5Mod(col("chunk")).as("h"))
-    val occ = chunks.groupBy(col("h")).agg(count(lit(1)).as("occ"))
-    chunks.join(occ, Seq("h"))
+    chunks.withColumn("occ", count(lit(1)).over(Window.partitionBy(col("h"))))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_chunks"),
         min(col("clen")).as("min_chunk"), max(col("clen")).as("max_chunk"),

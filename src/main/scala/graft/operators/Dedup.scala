@@ -77,11 +77,15 @@ object Dedup {
     * size-ratio prune (min ≥ max/2) runs before it.
     *
     * BUILDING the result runs Spark jobs: the clone-ratio probe (one
-    * aggregate over the shingled corpus, see [[ngramPairsOver]]) picks
+    * aggregate over the shingled corpus, see [[cloneHeavy]]) picks
     * the verify route while the DataFrame is constructed, so every
-    * call pays that job even if the result is never read. The result
-    * stays lazy; the shingled corpus it reads several times is held as
-    * its own checkpoint storage, never as a cache entry. */
+    * call pays that job even if the result is never read: 111–127 ms
+    * median over a 500-doc checkpointed corpus on a 4-core host (a
+    * plain count: 55–71 ms; an rsd-0.02 sketch: 321–404 ms, most of
+    * it generating projection code for its 410-long buffer, not
+    * reading rows). The result stays lazy; the shingled corpus it
+    * reads several times is held as its own checkpoint storage, never
+    * as a cache entry. */
   def dedupNgram(spark: SparkSession, sfDir: String): DataFrame =
     Scope(s => ngramPairsOver(Tables.documents(spark, sfDir), s))
 
@@ -95,6 +99,37 @@ object Dedup {
     * against its own arrays (the clone-light shape that was fastest at
     * sf0.1 before r14 made the rep route unconditional). */
   final val CloneRepVerifyRatio = 1.5
+
+  /** Each doc's sorted md5-mod-61 shingle hash set `sh`, its size `n`
+    * and its 128-bit content key `sk` — the table [[ngramPairsOver]]
+    * reads for its prefixes, its verify payload and its clone probe. */
+  private[graft] def keyedSets(docs: DataFrame): DataFrame =
+    shingled(docs)
+      .withColumn("sh", array_sort(transform(col("shingles"), s => Similarity.md5Mod(s))))
+      .withColumn("n", size(col("sh")))
+      // salt FIRST: xxhash64 folds arguments into the running hash, so
+      // a trailing salt would make k2 = H(salt, seed=k1) — a pure
+      // function of k1, collapsing the key to 64 collision bits. With
+      // the salt leading, k2 hashes sh under a different effective
+      // seed and is independent of k1 (~2^-128 joint collision).
+      .withColumn("sk", struct(xxhash64(col("sh")).as("k1"),
+        xxhash64(lit(0x9e3779b97f4a7c15L), col("sh")).as("k2")))
+      .select(col("doc_id"), col("lang"), col("n"), col("sk"), col("sh"))
+
+  /** The clone-ratio probe over a [[keyedSets]] table: true (the
+    * representative verify route) when rows per distinct content key
+    * reach [[CloneRepVerifyRatio]]. One job, one map-side aggregate:
+    * the HLL++ sketch runs at rsd 0.05 (p = 9, a 52-long buffer). HLL++
+    * is an imperative aggregate, so it runs outside whole-stage codegen
+    * and every task generates projections over the whole buffer; at
+    * rsd 0.02 (p = 12, 410 longs) that made the probe three times as
+    * dear. ±5% error around the cutoff only picks between routes that
+    * cost about the same there, and both emit identical rows. An exact
+    * distinct count would shuffle every 16-byte key. */
+  private[graft] def cloneHeavy(keyed: DataFrame): Boolean = {
+    val probe = keyed.agg(count(lit(1)), approx_count_distinct(col("sk"), 0.05)).head()
+    probe.getLong(0).toDouble / math.max(probe.getLong(1), 1L) >= CloneRepVerifyRatio
+  }
 
   /** The prefix-filtered pair pipeline over any (doc_id, lang, text)
     * frame — dedup_ngram runs it on the raw corpus; the production
@@ -134,17 +169,7 @@ object Dedup {
   private[graft] def ngramPairsOver(docs: DataFrame, s: Scope,
       repVerify: Option[Boolean] = None): DataFrame = {
     // reused by the prefix build, the key rejoins, and the representative side
-    val base = s.checkpoint(shingled(docs)
-      .withColumn("sh", array_sort(transform(col("shingles"), s => Similarity.md5Mod(s))))
-      .withColumn("n", size(col("sh")))
-      // salt FIRST: xxhash64 folds arguments into the running hash, so
-      // a trailing salt would make k2 = H(salt, seed=k1) — a pure
-      // function of k1, collapsing the key to 64 collision bits. With
-      // the salt leading, k2 hashes sh under a different effective
-      // seed and is independent of k1 (~2^-128 joint collision).
-      .withColumn("sk", struct(xxhash64(col("sh")).as("k1"),
-        xxhash64(lit(0x9e3779b97f4a7c15L), col("sh")).as("k2")))
-      .select(col("doc_id"), col("lang"), col("n"), col("sk"), col("sh")), eager = false)
+    val base = s.checkpoint(keyedSets(docs), eager = false)
     val u = base.select(col("doc_id"), col("lang"), col("n"), col("sk"),
       explode(col("sh")).as("h"))
     val freq = u.groupBy(col("h")).agg(count(lit(1)).as("f"))
@@ -172,18 +197,10 @@ object Dedup {
         least(col("n_a"), col("n_b")) * 2 >= greatest(col("n_a"), col("n_b")))
       .select(col("doc_a"), col("doc_b"), col("sk_a"), col("sk_b"))
       .distinct()
-    // ADAPTIVE VERIFY (trade-off on CloneRepVerifyRatio): one aggregate
-    // over the (checkpointed) base measures the clone ratio and picks the
-    // shape; ±2% HLL error around the cutoff only ever flips
-    // near-break-even corpora where both shapes cost the same. Both
-    // branches emit identical rows: sh is a function of sk, so a
-    // rep's Jaccard IS every member pair's Jaccard.
-    val useRep = repVerify.getOrElse {
-      val probe = base.agg(count(lit(1)).as("n"),
-        approx_count_distinct(col("sk"), 0.02).as("d")).head()
-      probe.getLong(0).toDouble / math.max(probe.getLong(1), 1L) >=
-        CloneRepVerifyRatio
-    }
+    // ADAPTIVE VERIFY (trade-off on CloneRepVerifyRatio): both branches
+    // emit identical rows — sh is a function of sk, so a rep's Jaccard
+    // IS every member pair's Jaccard.
+    val useRep = repVerify.getOrElse(cloneHeavy(base))
     if (useRep) {
       // exact Jaccard once per distinct content pair, on representative
       // arrays. keyed is pinned on this route only: it feeds BOTH the

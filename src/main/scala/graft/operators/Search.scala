@@ -86,22 +86,6 @@ object Search {
     * actually discriminate. */
   final val EvalMinTf = 3
 
-  /** RETRIEVAL QUALITY EVAL over the BM25 workload: P@k, MRR, and
-    * AP@k of each query's top-k against a conjunctive ground truth (a
-    * document is relevant iff it contains EVERY query term at least
-    * EvalMinTf times) — the standard ranked-retrieval metrics a search
-    * deployment tracks, here closing bm25_rank's loop the way ann_eval
-    * closes ann_lsh's. BM25's length normalization can rank a
-    * one-term-heavy doc above a contains-all doc, so the metrics are
-    * non-trivial by construction.
-    *
-    * Exactness: ranks and hit counts are integers; MRR is one divide;
-    * AP's precision-at-hit terms sum through the sorted-fold float
-    * discipline (ann_eval's DCG pattern) and divide once by
-    * min(n_relevant, k). A query spine keeps zero-relevant queries as
-    * explicit rows. Scale shape: the truth side is one row-local
-    * containment pass; everything after bm25's own bounded top-k is
-    * k×|queries| rows. */
   /** The conjunctive tf ≥ EvalMinTf relevance truth — one row-local
     * containment pass; shared by search_eval (grades the ranking) and
     * negative_mining (anti-joins it away). */
@@ -118,6 +102,22 @@ object Search {
       .select(col("r.query_id").as("query_id"), col("doc_id"))
   }
 
+  /** RETRIEVAL QUALITY EVAL over the BM25 workload: P@k, MRR, and
+    * AP@k of each query's top-k against a conjunctive ground truth (a
+    * document is relevant iff it contains EVERY query term at least
+    * EvalMinTf times) — the standard ranked-retrieval metrics a search
+    * deployment tracks, here closing bm25_rank's loop the way ann_eval
+    * closes ann_lsh's. BM25's length normalization can rank a
+    * one-term-heavy doc above a contains-all doc, so the metrics are
+    * non-trivial by construction.
+    *
+    * Exactness: ranks and hit counts are integers; MRR is one divide;
+    * AP's precision-at-hit terms sum through the sorted-fold float
+    * discipline (ann_eval's DCG pattern) and divide once by
+    * min(n_relevant, k). A query spine keeps zero-relevant queries as
+    * explicit rows. Scale shape: the truth side is one row-local
+    * containment pass; everything after bm25's own bounded top-k is
+    * k×|queries| rows. */
   def searchEval(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val truth = truthPairs(spark, sfDir)

@@ -19,10 +19,6 @@ import graft.sources.Tables
   */
 object Tokenize {
 
-  /** Top-50 adjacent character pairs by weighted count (count desc,
-    * pair asc tiebreak — fully deterministic). The top-k is a
-    * TakeOrdered over the pair aggregate: bounded driver result, no
-    * global sort. */
   /** Vocabulary cap for vocabCoverage. */
   final val VocabSize = 1000
 
@@ -54,6 +50,10 @@ object Tokenize {
         (col("cum").cast("double") / col("total").cast("double")).as("cum_coverage"))
   }
 
+  /** Top-50 adjacent character pairs by weighted count (count desc,
+    * pair asc tiebreak — fully deterministic). The top-k is a
+    * TakeOrdered over the pair aggregate: bounded driver result, no
+    * global sort. */
   def bpePairs(spark: SparkSession, sfDir: String): DataFrame =
     Tables.documents(spark, sfDir)
       .select(explode(split(col("text"), " ")).as("word"))

@@ -371,6 +371,36 @@ class CompositionOpsSpec extends AnyFunSuite {
     assert(out.exists(_._6 > 0.0), "no shared chunk found in a templated corpus")
   }
 
+  test("cdc_chunk n_chunks and shared chunk mass replay from a local CDC chunking") {
+    import graft.expressions.CrossHash.md5Mod
+    import operators.Chunk.{CdcMod, CdcW}
+    // Spark's length/substring count code points, 1-based
+    def chunkText(text: String): Seq[String] = {
+      val cps = text.codePoints().toArray
+      def sub(i: Int, n: Int) = new String(cps, i - 1, n)
+      val len = cps.length
+      val starts = 1 +: (2 to len - (CdcW - 1)).filter(i => md5Mod(sub(i, CdcW)) % CdcMod == 0)
+      val bounds = starts :+ (len + 1)
+      bounds.sliding(2).map { case Seq(a, b) => sub(a, b - a) }.toSeq
+    }
+    val chunks = graft.sources.Tables.documents(spark, sf).select("doc_id", "text").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).filter(_._2.nonEmpty)
+      .map { case (id, text) => id -> chunkText(text).map(c => (c.codePointCount(0, c.length).toLong, md5Mod(c))) }
+    val occ = chunks.flatMap(_._2.map(_._2)).groupBy(identity).map { case (h, hs) => h -> hs.length }
+    val want = chunks.map { case (id, cs) =>
+      val shared = cs.collect { case (n, h) if occ(h) > 1 => n }.sum
+      val total = cs.map(_._1).sum
+      val ratio = java.math.BigDecimal.valueOf(shared.toDouble / total)
+        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+      (id, cs.length.toLong, cs.map(_._1).min, cs.map(_._1).max, total, ratio)
+    }.toSet
+    val got = operators.Chunk.cdcChunk(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5)))
+      .toSet
+    assert(want.exists(_._6 > 0.0) && want.exists(_._2 > 1), "replay found no shared or split doc")
+    assert(got == want, s"mismatched docs: ${(got diff want).take(3)} vs ${(want diff got).take(3)}")
+  }
+
   test("ab_sprt: LLR replays from cumulative counts, decisions respect Wald bounds") {
     val rows = operators.Experiment.abSprt(spark, sf).collect()
       .map(r => (r.getLong(0), r.getDate(1).toString, r.getLong(2), r.getLong(3),

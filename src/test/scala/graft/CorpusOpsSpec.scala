@@ -200,12 +200,10 @@ class CorpusOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("ngram adaptive verify: rep and per-pair routes emit identical pairs") {
-    // The clone-ratio probe only picks a COST shape — both verify
-    // branches must produce the same rows on any corpus. Exercise both
-    // routes explicitly on a clone-light frame (the raw test corpus)
-    // and a clone-heavy one (each text cloned under two more doc_ids,
-    // ratio 3 — the profile that sends the probe down the rep route).
+  // The clone-light frame (the raw test corpus) and a clone-heavy one
+  // (each text cloned under two more doc_ids, ratio 3 — the profile
+  // that sends the clone probe down the rep route).
+  private def routeFrames = {
     val docs = graft.sources.Tables.documents(spark, sf)
       .select(col("doc_id"), col("lang"), col("text"))
     val cloned = docs
@@ -213,23 +211,40 @@ class CorpusOpsSpec extends AnyFunSuite {
         col("lang"), col("text")))
       .unionByName(docs.select((col("doc_id") + lit(2000000L)).as("doc_id"),
         col("lang"), col("text")))
+    (docs, cloned)
+  }
+
+  test("ngram adaptive verify: rep and per-pair routes emit identical pairs") {
+    // The clone-ratio probe only picks a COST shape — both verify
+    // branches must produce the same rows on any corpus, and the
+    // probed route (None) must equal both pinned ones.
+    val (docs, cloned) = routeFrames
     // each route returns its lazy result from a scope, as dedup_ngram
     // does: the result must read its own checkpoints after the scope
     // closes, and no cache entry may outlive it
-    def pairs(frame: org.apache.spark.sql.DataFrame, rep: Boolean) = {
-      val df = graft.plans.Scope(s => graft.operators.Dedup.ngramPairsOver(frame, s, Some(rep)))
+    def pairs(frame: org.apache.spark.sql.DataFrame, rep: Option[Boolean]) = {
+      val df = graft.plans.Scope(s => graft.operators.Dedup.ngramPairsOver(frame, s, rep))
       assert(spark.sharedState.cacheManager.isEmpty)
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     }
-    for (frame <- Seq(docs, cloned))
-      assert(pairs(frame, rep = true).toSet == pairs(frame, rep = false).toSet,
-        "verify routes disagree")
+    val Seq(_, heavy) = Seq(docs, cloned).map { frame =>
+      val rep = pairs(frame, Some(true)).toSet
+      assert(pairs(frame, Some(false)).toSet == rep, "verify routes disagree")
+      assert(pairs(frame, None).toSet == rep, "probed route disagrees")
+      rep
+    }
     // the clone-heavy frame must contain every cross-clone pair of a
     // doc with itself (jaccard 1.0 between clones of the same text)
-    val heavy = pairs(cloned, rep = true)
     val someId = docs.select(min(col("doc_id"))).head().getLong(0)
     assert(heavy.exists { case (a, b, j) =>
       a == someId && b == someId + 1000000L && j == 1.0 })
+  }
+
+  test("ngram clone probe: per-pair route at ratio 1, rep route at ratio 3") {
+    import graft.operators.Dedup.{cloneHeavy, keyedSets}
+    val (docs, cloned) = routeFrames
+    assert(!cloneHeavy(keyedSets(docs)), "raw corpus (no clones) took the rep route")
+    assert(cloneHeavy(keyedSets(cloned)), "3x cloned corpus took the per-pair route")
   }
 
   test("dup_clusters: components are closed over the pair graph and keyed by their min id") {

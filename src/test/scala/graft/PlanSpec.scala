@@ -183,6 +183,24 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("cdc_chunk computes its chunk table once: one documents scan, one round-robin spread") {
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // AQE off: the static plan shows every scan and exchange; a chunk
+    // table read twice (an aggregate joined back) re-runs the spread
+    // scan and the boundary filter under each read
+    val cold = spark.newSession()
+    cold.conf.set("spark.sql.adaptive.enabled", "false")
+    val p = SparkEntry.queries("cdc_chunk")(cold, sf).queryExecution.executedPlan
+    val scans = p.collect { case f: FileSourceScanExec if f.relation.location.rootPaths
+      .exists(_.getName.startsWith("documents")) => f }
+    val spreads = p.collect { case e: ShuffleExchangeExec
+      if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => e }
+    assert(scans.size == 1 && spreads.size == 1,
+      s"${scans.size} documents scans, ${spreads.size} round-robin exchanges:\n$p")
+  }
+
   test("dedup operators never materialize an unblocked cross product") {
     for (q <- Seq("dedup_ngram", "dedup_minhash", "dedup_simhash", "dedup_embedding",
         "contamination_check", "corpus_filter", "enrich_wide", "name_status")) {
